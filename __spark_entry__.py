@@ -1318,7 +1318,7 @@ def q_quality_score(spark, sf_dir):
 
 
 def q_multimodal_features(spark, sf_dir):
-    """Opaque-binary decode plumbing (deterministic fake features) over a
+    """Opaque-binary decode plumbing (deterministic sha256 features) over a
     media table synthesized from documents bytes."""
     from yckg_spark.operators.multimodal import extract_features
 
@@ -1332,9 +1332,9 @@ def q_multimodal_features(spark, sf_dir):
         F.lit(None).cast("int").alias("height"),
         F.lit(None).cast("long").alias("duration_ms"),
     )
-    feats = extract_features(media, fake=True)
+    feats = extract_features(media)
     # posexplode the array<float> so the driver canonicalizer (which sorts
-    # and hashes scalar cells) can compare it; the fake feature values are
+    # and hashes scalar cells) can compare it; the feature values are
     # 16-bit hash slices / 2^16, exact in float32 and in the DuckDB oracle.
     return feats.select(
         "media_id",
@@ -1397,7 +1397,7 @@ FROM biz LEFT JOIN geo
 """
 
 
-# DuckDB recomputation of the deterministic fake decode: sha256 over the
+# DuckDB recomputation of the deterministic hash decode: sha256 over the
 # UTF-8 bytes of text (DuckDB's sha256(VARCHAR) hashes UTF-8 bytes, same as
 # hashlib over encode(text)), then 8 big-endian 16-bit slices / 2^16.
 _ORACLE_MULTIMODAL = """

@@ -5,6 +5,7 @@ spark-submit verification recipe."""
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from yckg_spark.cli import main
@@ -217,6 +218,24 @@ def test_cli_snapshots_and_time_travel_query(spark, tmp_path, capsys, smoke_fixt
     latest = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     # half the corpus vs all of it: the historical average must differ
     assert v1["rows"][0]["average_rating"] != latest["rows"][0]["average_rating"]
+
+
+@pytest.mark.parametrize(
+    "extra",
+    [
+        ["--cq", "cq6", "--sparql", "SELECT ?s WHERE { ?s ?p ?o . }"],
+        ["--cq", "cq6", "--sparql-file", "cq6.rq"],
+        ["--input-format", "nt", "--cq", "cq6", "--as-of-sequence", "1"],
+        ["--input-format", "nt", "--cq", "cq6", "--as-of-timestamp-ms", "1"],
+    ],
+)
+def test_cli_query_conflicting_flags_are_usage_errors(tmp_path, capsys, extra):
+    """Flag combinations the query path cannot honour exit 2 before any
+    read, instead of running one flag and echoing the other."""
+    assert main(["query", "--input", str(tmp_path / "kg"), *extra]) == 2
+    cap = capsys.readouterr()
+    assert cap.out == ""
+    assert cap.err.startswith("error: ")
 
 
 def test_cli_curate_filters_and_decontaminates(spark, tmp_path, capsys):
@@ -557,6 +576,18 @@ def test_cli_stats_report_card(spark, tmp_path, capsys):
     assert rep["top_sources"] == {"sA": 2, "sB": 2}
     assert len(rep["quality_quartiles"]) == 3
     assert rep["token_p50_p90_p99"][0] >= 3
+
+
+def test_cli_stats_empty_corpus(spark, tmp_path, capsys):
+    inp = str(tmp_path / "empty")
+    spark.createDataFrame([], "doc_id long, text string, lang string").write.parquet(inp)
+    assert main(["stats", "--input", inp]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["n_docs"] == 0
+    assert rep["total_tokens"] == 0 and rep["total_chars"] == 0
+    assert rep["approx_dup_rate"] is None
+    assert rep["quality_quartiles"] is None and rep["token_p50_p90_p99"] is None
+    assert rep["langs"] == {}
 
 
 def test_cli_stats_without_lang_source_columns(spark, tmp_path, capsys):

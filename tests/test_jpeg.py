@@ -336,32 +336,6 @@ def test_is_jpeg_rejects_arithmetic_and_junk():
         jpeg_rgb(good[: len(good) // 2] + b"\xff\xd9")
 
 
-def test_jpeg_in_spark_and_resample(spark):
-    """fake=False feature extraction and the real resample both accept
-    JPEG payloads; stats match the direct decode at float32 precision."""
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _rgb_stats,
-        decode_jpeg,
-        extract_features,
-        is_bmp,
-        resize_images,
-    )
-
-    rows = [
-        [((x * 16) % 256, (y * 32) % 256, 90) for x in range(16)] for y in range(16)
-    ]
-    jp = make_jpeg(16, 16, rows)
-    media = spark.createDataFrame(
-        [("j1", "image", "image/jpeg", jp, 16, 16, None)], MEDIA_SCHEMA
-    )
-    feat = extract_features(media, fake=False).collect()[0]
-    assert list(feat["feature"]) == pytest.approx(decode_jpeg(jp)[2], rel=1e-6)
-    resized = resize_images(media, max_side=8, fake=False).collect()[0]
-    assert (resized["width"], resized["height"]) == (8, 8)
-    assert is_bmp(bytes(resized["payload"]))
-
-
 def test_jpeg_fill_bytes_before_markers():
     """0xFF fill bytes may pad before any marker (B.1.1.2); the walk must
     skip them in both the probe and the decode."""

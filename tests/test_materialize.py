@@ -184,25 +184,6 @@ def test_store_content_deterministic_across_parallelism(spark, pages, tmp_path):
     assert outs[0] == outs[1]
 
 
-def test_salted_agg_matches_plain(spark, pages):
-    from pyspark.sql import functions as F
-
-    from yckg_spark.operators.canonicalize import salted_agg, salted_distinct_values
-
-    t, _ = emit_all(parse_records(pages, use_extraction=False))
-    plain = {
-        (r["predicate"], r["n"])
-        for r in t.groupBy("predicate").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {
-        (r["predicate"], r["n"])
-        for r in salted_agg(t, ["predicate"], {"n": "count"}).collect()
-    }
-    assert plain == salted
-    dv = {r["predicate"] for r in salted_distinct_values(t, "predicate").collect()}
-    assert dv == {p for p, _ in plain}
-
-
 def test_time_travel_reads(spark, pages, tmp_path):
     """Snapshot time-travel over the append-only bucket layout: a read as
     of commit N sees exactly the buckets committed by then, a resumed

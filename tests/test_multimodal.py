@@ -1,12 +1,7 @@
-"""Multimodal plumbing: opaque binary columns, mapInPandas decode/resize,
-frame sampling, metadata aggregation. BMP, PNG (stdlib-zlib inflate +
-unfilter), GIF (hand-rolled variable-width LZW), and 16-bit PCM WAV
-decode FOR REAL — pinned here against hand-computed statistics and
-BMP↔PNG↔GIF cross-format oracles — and the real resample path
-(BMP/PNG/GIF → nearest-neighbor → BMP) is format-independent. Formats
-without a stdlib-expressible codec (JPEG/MP3/video) stay deterministic
-fakes; the Spark-side schemas, batch iteration, and output shapes are
-the real contract throughout."""
+"""Multimodal plumbing: opaque binary columns through the mapInPandas
+feature stage, frame sampling and metadata aggregation. The schemas,
+batch iteration and output shape are the contract; the sha256 features
+are deterministic per payload."""
 
 import pytest
 
@@ -37,24 +32,6 @@ def test_extract_features_shape_and_determinism(spark, media):
     assert again["m1"] == out["m1"]["feature"]
 
 
-def test_resize_images_aspect_and_nulls(spark, media):
-    from yckg_spark.operators.multimodal import resize_images
-
-    out = {r["media_id"]: r for r in resize_images(media, max_side=256).collect()}
-    assert set(out) == {"m1", "m2", "m3"}          # images only
-    assert (out["m1"]["width"], out["m1"]["height"]) == (256, 192)  # 4:3 kept
-    assert len(out["m1"]["payload"]) == 256 * 192 * 3
-    assert (out["m2"]["width"], out["m2"]["height"]) == (100, 50)   # under max: untouched
-    assert out["m3"]["payload"] is None            # no dims -> null row
-
-
-def test_resize_real_path_raises(spark, media):
-    from yckg_spark.operators.multimodal import resize_images
-
-    with pytest.raises(Exception, match="NotImplementedError|Pillow"):
-        resize_images(media, fake=False).collect()
-
-
 def test_sample_frames(spark, media):
     from yckg_spark.operators.multimodal import sample_frames
 
@@ -69,953 +46,3 @@ def test_media_stats(spark, media):
     s = {r["kind"]: r for r in media_stats(media).collect()}
     assert s["image"]["n"] == 3
     assert s["video"]["avg_duration_ms"] == 3500.0
-
-
-def _make_bmp(width, height, pixel_rows, top_down=False):
-    """Hand-assembled uncompressed 24-bit BMP: ``pixel_rows`` is
-    height rows (top to bottom) of (r, g, b) tuples."""
-    import struct
-
-    row_bytes = width * 3
-    stride = (row_bytes + 3) & ~3
-    data = bytearray()
-    storage_rows = pixel_rows if top_down else list(reversed(pixel_rows))
-    for row in storage_rows:
-        for (r, g, b) in row:
-            data += bytes([b, g, r])
-        data += b"\x00" * (stride - row_bytes)
-    offset = 14 + 40
-    hdr = b"BM" + struct.pack("<IHHI", offset + len(data), 0, 0, offset)
-    h = -height if top_down else height
-    info = struct.pack("<IiiHHIIiiII", 40, width, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-    return bytes(hdr + info + data)
-
-
-_PX = [
-    [(255, 0, 0), (0, 255, 0), (0, 0, 255)],
-    [(0, 0, 0), (255, 255, 255), (128, 64, 32)],
-]
-
-
-def test_decode_bmp_real_no_fake(spark):
-    """The one codec-free raster format decodes FOR REAL: a hand-assembled
-    3×2 24-bit BMP (odd width ⇒ row padding exercised) through
-    ``decode_bmp`` and through the full mapInPandas pipeline with
-    ``fake=False`` yields the hand-computed channel statistics."""
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import (
-        FEATURE_DIM,
-        MEDIA_SCHEMA,
-        decode_bmp,
-        extract_features,
-        is_bmp,
-    )
-
-    payload = _make_bmp(3, 2, _PX)
-    assert is_bmp(payload)
-    w, h, feat = decode_bmp(payload)
-    assert (w, h) == (3, 2) and len(feat) == FEATURE_DIM
-
-    flat = [p for row in _PX for p in row]
-    n = len(flat)
-    mean_b = sum(p[2] for p in flat) / n / 255.0
-    mean_g = sum(p[1] for p in flat) / n / 255.0
-    mean_r = sum(p[0] for p in flat) / n / 255.0
-    lumas = [0.299 * r + 0.587 * g + 0.114 * b for (r, g, b) in flat]
-    expect = [mean_b, mean_g, mean_r, sum(lumas) / n / 255.0,
-              min(lumas) / 255.0, max(lumas) / 255.0, 3 / 65536.0, 2 / 65536.0]
-    assert feat == _pytest.approx(expect, rel=1e-12)
-
-    media = spark.createDataFrame(
-        [("b1", "image", "image/bmp", payload, 3, 2, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=False).collect()[0]
-    assert row["n_bytes"] == len(payload)
-    # feature column is float32 — compare at float32 precision
-    assert list(row["feature"]) == _pytest.approx(expect, rel=1e-6)
-
-
-def test_decode_bmp_top_down_same_stats(spark):
-    """Negative-height (top-down) BMPs decode to the same statistics —
-    row order can't change channel means/extrema."""
-    from yckg_spark.operators.multimodal import decode_bmp
-
-    bu = decode_bmp(_make_bmp(3, 2, _PX))
-    td = decode_bmp(_make_bmp(3, 2, _PX, top_down=True))
-    assert bu == td
-
-
-def _make_wav(n_channels, sample_rate, frames, extra_chunk=False):
-    """Hand-assembled 16-bit PCM RIFF/WAV: ``frames`` is a list of
-    per-frame tuples of ``n_channels`` int16 samples. ``extra_chunk``
-    prepends an odd-sized LIST chunk before fmt/data to exercise the
-    2-byte RIFF chunk alignment walk."""
-    import struct
-
-    data = b"".join(struct.pack(f"<{n_channels}h", *f) for f in frames)
-    fmt = struct.pack(
-        "<HHIIHH", 1, n_channels, sample_rate,
-        sample_rate * n_channels * 2, n_channels * 2, 16,
-    )
-    chunks = b""
-    if extra_chunk:
-        chunks += b"LIST" + struct.pack("<I", 5) + b"INFOx" + b"\x00"  # odd size + pad
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-_FRAMES = [(1000, -1000), (-2000, 500), (0, 3000), (32767, -32768)]
-
-
-def test_decode_wav_real_no_fake(spark):
-    """The one codec-free audio container decodes FOR REAL: a
-    hand-assembled stereo 16-bit PCM WAV (with an odd-sized leading LIST
-    chunk ⇒ RIFF pad-byte walk exercised) through ``decode_wav`` and
-    through the full mapInPandas pipeline with ``fake=False`` yields the
-    hand-computed signal statistics."""
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import (
-        FEATURE_DIM,
-        MEDIA_SCHEMA,
-        decode_wav,
-        extract_features,
-        is_wav,
-    )
-
-    payload = _make_wav(2, 8000, _FRAMES, extra_chunk=True)
-    assert is_wav(payload)
-    n_ch, rate, n_frames, feat = decode_wav(payload)
-    assert (n_ch, rate, n_frames) == (2, 8000, 4) and len(feat) == FEATURE_DIM
-
-    flat = [s for f in _FRAMES for s in f]
-    ch0 = [f[0] for f in _FRAMES]  # 1000, -2000, 0, 32767 -> crossings at 0->1, 1->2
-    zcr = sum((a >= 0) != (b >= 0) for a, b in zip(ch0, ch0[1:])) / (len(ch0) - 1)
-    expect = [
-        sum(flat) / len(flat) / 32768.0,
-        (sum(s * s for s in flat) / len(flat)) ** 0.5 / 32768.0,
-        min(flat) / 32768.0,
-        max(flat) / 32768.0,
-        zcr,
-        4 / 16777216.0,
-        2 / 16.0,
-        8000 / 131072.0,
-    ]
-    assert feat == _pytest.approx(expect, rel=1e-12)
-
-    media = spark.createDataFrame(
-        [("w1", "audio", "audio/wav", payload, None, None, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=False).collect()[0]
-    assert row["n_bytes"] == len(payload)
-    assert list(row["feature"]) == _pytest.approx(expect, rel=1e-6)
-
-
-def test_decode_wav_rejects_non_pcm_and_truncated(spark):
-    import struct
-
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import decode_wav, is_wav
-
-    good = _make_wav(1, 8000, [(5,), (-5,)])
-    # flip audio_format from 1 (PCM) to 3 (IEEE float): fmt body starts
-    # after RIFF(12) + "fmt "(4) + size(4)
-    non_pcm = good[:20] + struct.pack("<H", 3) + good[22:]
-    assert not is_wav(non_pcm)
-    with _pytest.raises(ValueError, match="PCM"):
-        decode_wav(non_pcm)
-    # empty data chunk: header ok, no complete frames
-    empty = _make_wav(1, 8000, [])
-    with _pytest.raises(ValueError, match="no complete"):
-        decode_wav(empty)
-
-
-def test_extract_features_mixed_real_formats(spark):
-    """One fake=False pass over a frame mixing both real formats: the BMP
-    row and the WAV row each take their own decode branch."""
-    from yckg_spark.operators.multimodal import MEDIA_SCHEMA, extract_features
-
-    media = spark.createDataFrame(
-        [
-            ("b1", "image", "image/bmp", _make_bmp(3, 2, _PX), 3, 2, None),
-            ("w1", "audio", "audio/wav", _make_wav(2, 8000, _FRAMES), None, None, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = {r["media_id"]: r["feature"] for r in extract_features(media, fake=False).collect()}
-    assert set(out) == {"b1", "w1"}
-    assert out["b1"] is not None and out["w1"] is not None
-    assert out["b1"] != out["w1"]
-
-
-def test_extract_features_undecodable_still_raises(spark, media):
-    """fake=False remains a declared stub for formats without a stdlib
-    codec: the fixture's pseudo-PNG/JPEG payloads (invalid signatures)
-    are undecodable and must raise."""
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import extract_features
-
-    with _pytest.raises(Exception, match="NotImplementedError|Pillow|BMP"):
-        extract_features(media, fake=False).collect()
-
-
-def test_decode_bmp_truncated_payload_raises(spark):
-    from yckg_spark.operators.multimodal import decode_bmp, is_bmp
-
-    payload = _make_bmp(3, 2, _PX)[:-4]
-    assert is_bmp(payload)  # header intact — the pixel data is short
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="truncated"):
-        decode_bmp(payload)
-
-
-# ---------------------------------------------------------------------------
-# PNG: the compressed format decodable with stdlib zlib alone
-# ---------------------------------------------------------------------------
-
-
-def _png_chunk(ctype, body):
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(body))
-        + ctype
-        + body
-        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-    )
-
-
-def _filter_line(ftype, line, prev, bpp):
-    """Forward (encoder-side) PNG scanline filter — the exact inverse of
-    the decoder's unfilter, so any filter choice must round-trip."""
-    out = bytearray(line)
-    if ftype == 1:
-        for i in range(len(line) - 1, bpp - 1, -1):
-            out[i] = (line[i] - line[i - bpp]) & 0xFF
-    elif ftype == 2:
-        for i in range(len(line)):
-            out[i] = (line[i] - prev[i]) & 0xFF
-    elif ftype == 3:
-        for i in range(len(line)):
-            a = line[i - bpp] if i >= bpp else 0
-            out[i] = (line[i] - ((a + prev[i]) >> 1)) & 0xFF
-    elif ftype == 4:
-        for i in range(len(line)):
-            a = line[i - bpp] if i >= bpp else 0
-            c = prev[i - bpp] if i >= bpp else 0
-            b = prev[i]
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-            out[i] = (line[i] - pred) & 0xFF
-    return bytes(out)
-
-
-def _make_png(width, height, raster_rows, color_type=2, filters=None,
-              palette=None, bit_depth=8, interlace=0):
-    """Hand-assembled PNG: ``raster_rows`` is ``height`` rows of raw
-    channel bytes (already channel-packed per ``color_type``);
-    ``filters`` picks the per-row filter type (default all 0).
-    ``interlace=1`` stores a genuine Adam7 pass sequence (filter 0)."""
-    import struct
-    import zlib
-
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    if interlace == 1:
-        stream = bytearray()
-        passes = ((0, 8, 0, 8), (4, 8, 0, 8), (0, 4, 4, 8), (2, 4, 0, 4),
-                  (0, 2, 2, 4), (1, 2, 0, 2), (0, 1, 1, 2))
-        for x0, dx, y0, dy in passes:
-            for y in range(y0, height, dy):
-                row = raster_rows[y]
-                line = b"".join(
-                    bytes(row[x * channels : (x + 1) * channels])
-                    for x in range(x0, width, dx)
-                )
-                if line:
-                    stream += b"\x00" + line
-    else:
-        filters = filters or [0] * height
-        prev = bytes(width * channels)
-        stream = bytearray()
-        for ftype, row in zip(filters, raster_rows):
-            stream += bytes([ftype]) + _filter_line(ftype, bytes(row), prev, channels)
-            prev = bytes(row)
-    ihdr = struct.pack(">IIBBBBB", width, height, bit_depth, color_type, 0, 0, interlace)
-    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += _png_chunk(b"PLTE", bytes(palette))
-    out += _png_chunk(b"IDAT", zlib.compress(bytes(stream)))
-    out += _png_chunk(b"IEND", b"")
-    return out
-
-
-def _px_png_rows(pixel_rows):
-    """(r,g,b) tuple rows -> packed RGB byte rows (color type 2)."""
-    return [bytes(v for px in row for v in px) for row in pixel_rows]
-
-
-def test_decode_png_matches_bmp_cross_format():
-    """The cross-format oracle: one raster encoded as 24-bit BMP and as
-    8-bit RGB PNG decodes to bit-identical dimensions and features —
-    the PNG path (CRC walk, zlib inflate, unfilter) is verified against
-    the already-trusted BMP struct parse."""
-    from yckg_spark.operators.multimodal import decode_bmp, decode_png, is_png
-
-    png = _make_png(3, 2, _px_png_rows(_PX))
-    assert is_png(png)
-    assert decode_png(png) == decode_bmp(_make_bmp(3, 2, _PX))
-
-
-def test_decode_png_all_filters_roundtrip():
-    """Every scanline filter type (Sub/Up/Average/Paeth) inverts exactly:
-    the same raster encoded with filter 0 everywhere and with filters
-    1..4 per row decodes identically."""
-    from yckg_spark.operators.multimodal import decode_png
-
-    rows = [
-        bytes((x * 37 + y * 11 + c * 5) % 256 for x in range(4) for c in range(3))
-        for y in range(4)
-    ]
-    base = decode_png(_make_png(4, 4, rows))
-    filtered = decode_png(_make_png(4, 4, rows, filters=[1, 2, 3, 4]))
-    assert filtered == base
-
-
-def test_decode_png_color_types():
-    """Gray replicates to RGB, alpha is dropped, palette indices resolve:
-    all four non-RGB color types reduce to the same stats as their RGB
-    equivalent."""
-    from yckg_spark.operators.multimodal import decode_png
-
-    # 2x2 gray ramp == RGB with r=g=b
-    gray_vals = [[10, 200], [55, 255]]
-    gray_rows = [bytes(r) for r in gray_vals]
-    rgb_rows = [bytes(v for g in r for v in (g, g, g)) for r in gray_vals]
-    assert decode_png(_make_png(2, 2, gray_rows, color_type=0)) == decode_png(
-        _make_png(2, 2, rgb_rows, color_type=2)
-    )
-    # gray+alpha: alpha bytes ignored
-    ga_rows = [bytes(v for g in r for v in (g, 128)) for r in gray_vals]
-    assert decode_png(_make_png(2, 2, ga_rows, color_type=4)) == decode_png(
-        _make_png(2, 2, rgb_rows, color_type=2)
-    )
-    # RGBA: alpha dropped
-    px_rgba = [bytes(v for px in row for v in (*px, 77)) for row in _PX]
-    assert decode_png(_make_png(3, 2, px_rgba, color_type=6)) == decode_png(
-        _make_png(3, 2, _px_png_rows(_PX))
-    )
-    # palette: indices resolve through PLTE
-    flat_px = [px for row in _PX for px in row]
-    palette = bytes(v for px in flat_px for v in px)
-    idx_rows = [bytes([0, 1, 2]), bytes([3, 4, 5])]
-    assert decode_png(
-        _make_png(3, 2, idx_rows, color_type=3, palette=palette)
-    ) == decode_png(_make_png(3, 2, _px_png_rows(_PX)))
-
-
-def test_is_png_rejects_unsupported_and_corrupt():
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import decode_png, is_png
-
-    rows = _px_png_rows(_PX)
-    good = _make_png(3, 2, rows)
-    assert is_png(good)
-    assert not is_png(_make_png(3, 2, rows, bit_depth=16))   # 16-bit depth
-    assert not is_png(_make_png(3, 2, rows, interlace=3))    # unknown method
-    assert not is_png(b"\x89PNG-fake-1")                     # bad signature
-    # flip one IDAT byte: CRC must catch it
-    idat_pos = good.index(b"IDAT") + 4
-    corrupt = good[:idat_pos] + bytes([good[idat_pos] ^ 0xFF]) + good[idat_pos + 1 :]
-    with _pytest.raises(ValueError, match="CRC"):
-        decode_png(corrupt)
-    # truncate mid-chunk
-    with _pytest.raises(ValueError, match="truncated|IEND"):
-        decode_png(good[:-8])
-
-
-def test_extract_features_png_real_in_spark(spark):
-    """The full mapInPandas pipeline with fake=False decodes a real PNG
-    and produces the BMP-identical features (float32 column precision)."""
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_bmp,
-        extract_features,
-    )
-
-    png = _make_png(3, 2, _px_png_rows(_PX))
-    media = spark.createDataFrame(
-        [("p1", "image", "image/png", png, 3, 2, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=False).collect()[0]
-    assert row["n_bytes"] == len(png)
-    assert list(row["feature"]) == _pytest.approx(decode_bmp(_make_bmp(3, 2, _PX))[2], rel=1e-6)
-
-
-# ---------------------------------------------------------------------------
-# Real nearest-neighbor resample (BMP/PNG in -> 24-bit BMP out)
-# ---------------------------------------------------------------------------
-
-
-def test_resize_real_bmp_downsample(spark):
-    """fake=False resamples a decodable raster for real: a 6x4 BMP with
-    2x2 solid-color blocks downsampled to max_side=3 yields a 3x2 BMP
-    whose pixels are exactly the block colors (nearest-neighbor centers
-    land inside the blocks)."""
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _bmp_rgb,
-        is_bmp,
-        resize_images,
-    )
-
-    # 6x4 raster built from the 3x2 _PX grid, each pixel doubled both ways
-    big_rows = []
-    for row in _PX:
-        doubled = [px for px in row for _ in (0, 1)]
-        big_rows.append(doubled)
-        big_rows.append(doubled)
-    payload = _make_bmp(6, 4, big_rows)
-    media = spark.createDataFrame(
-        [("r1", "image", "image/bmp", payload, 6, 4, None)], MEDIA_SCHEMA
-    )
-    row = resize_images(media, max_side=3, fake=False).collect()[0]
-    assert (row["width"], row["height"]) == (3, 2)
-    out = bytes(row["payload"])
-    assert is_bmp(out)
-    w, h, rgb = _bmp_rgb(out)
-    assert (w, h) == (3, 2)
-    expect = bytes(v for r in _PX for px in r for v in px)
-    assert rgb == expect
-
-
-def test_resize_real_png_under_max_passthrough(spark):
-    """A decodable raster already under max_side passes through with its
-    original bytes untouched (no re-encode)."""
-    from yckg_spark.operators.multimodal import MEDIA_SCHEMA, resize_images
-
-    png = _make_png(3, 2, _px_png_rows(_PX))
-    media = spark.createDataFrame(
-        # metadata dims deliberately wrong: the real path trusts the bytes
-        [("r2", "image", "image/png", png, 999, 999, None)], MEDIA_SCHEMA
-    )
-    row = resize_images(media, max_side=256, fake=False).collect()[0]
-    assert (row["width"], row["height"]) == (3, 2)
-    assert bytes(row["payload"]) == png
-
-
-def test_resize_real_png_downsample_matches_bmp_input(spark):
-    """Format-independence of the real resample: the same raster arriving
-    as PNG or BMP produces byte-identical resized BMP output."""
-    from yckg_spark.operators.multimodal import MEDIA_SCHEMA, resize_images
-
-    big_rows = []
-    for row in _PX:
-        doubled = [px for px in row for _ in (0, 1)]
-        big_rows.append(doubled)
-        big_rows.append(doubled)
-    bmp = _make_bmp(6, 4, big_rows)
-    png_rows = [bytes(v for px in r for v in px) for r in big_rows]
-    png = _make_png(6, 4, png_rows)
-    media = spark.createDataFrame(
-        [
-            ("a", "image", "image/bmp", bmp, 6, 4, None),
-            ("b", "image", "image/png", png, 6, 4, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = {r["media_id"]: bytes(r["payload"]) for r in resize_images(media, max_side=3, fake=False).collect()}
-    assert out["a"] == out["b"]
-
-
-# ---------------------------------------------------------------------------
-# GIF: the second compressed format, decoded via hand-rolled LZW
-# ---------------------------------------------------------------------------
-
-
-def _lzw_encode(indices, min_code_size):
-    """Real GIF-variant LZW *encoder* (sequence-dict, variable code width,
-    LSB-first packing, clear on table-full) so the decoder is exercised
-    by a genuine compressed stream, not just literal codes."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code, width):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    width = min_code_size + 1
-    emit(clear, width)
-    run = b""
-    for idx in indices:
-        cand = run + bytes([idx])
-        if cand in table:
-            run = cand
-            continue
-        emit(table[run], width)
-        # the decoder grows its table AFTER consuming the code, so the
-        # encoder widens when next_code hits the width ceiling
-        table[cand] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << width) and width < 12:
-            width += 1
-        if next_code == (1 << 12):
-            emit(clear, width)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-        run = bytes([idx])
-    if run:
-        emit(table[run], width)
-    emit(eoi, width)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _make_gif(width, height, index_rows, palette, interlace=False,
-              min_code_size=None, extension=False, local_ct=False):
-    """Hand-assembled GIF89a: ``index_rows`` is top-down rows of palette
-    indices; ``palette`` is a list of (r,g,b). Optionally interlaced
-    storage, a graphic-control extension block, and the color table on
-    the image (local) instead of the screen (global)."""
-    import struct
-
-    n = 1
-    while (1 << n) < len(palette):
-        n += 1
-    n = max(n, 1)
-    ct = bytearray()
-    for (r, g, b) in palette:
-        ct += bytes((r, g, b))
-    ct += b"\x00" * (3 * ((1 << n) - len(palette)))
-    mcs = min_code_size if min_code_size is not None else max(2, n)
-
-    out = bytearray(b"GIF89a")
-    screen_flags = (0x80 | (n - 1)) if not local_ct else 0
-    out += struct.pack("<HHBBB", width, height, screen_flags, 0, 0)
-    if not local_ct:
-        out += ct
-    if extension:  # graphic control extension: must be skipped cleanly
-        out += b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-    rows = list(index_rows)
-    if interlace:
-        order = [r for start, step in ((0, 8), (4, 8), (2, 4), (1, 2))
-                 for r in range(start, height, step)]
-        rows = [index_rows[r] for r in order]
-    flat = [i for row in rows for i in row]
-    iflags = (0x40 if interlace else 0) | ((0x80 | (n - 1)) if local_ct else 0)
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, iflags)
-    if local_ct:
-        out += ct
-    out += bytes([mcs])
-    stream = _lzw_encode(flat, mcs)
-    for i in range(0, len(stream), 255):
-        chunk = stream[i : i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-_GIF_PALETTE = [px for row in _PX for px in row]  # 6 colors
-_GIF_INDEX_ROWS = [[0, 1, 2], [3, 4, 5]]  # reproduces _PX exactly
-
-
-def test_decode_gif_matches_bmp_and_png():
-    """Cross-format oracle #2: the _PX raster as GIF (palette + real LZW
-    round-trip) decodes to the same dims and features as BMP and PNG."""
-    from yckg_spark.operators.multimodal import (
-        decode_bmp,
-        decode_gif,
-        decode_png,
-        is_gif,
-    )
-
-    gif = _make_gif(3, 2, _GIF_INDEX_ROWS, _GIF_PALETTE)
-    assert is_gif(gif)
-    assert decode_gif(gif) == decode_bmp(_make_bmp(3, 2, _PX))
-    assert decode_gif(gif) == decode_png(_make_png(3, 2, _px_png_rows(_PX)))
-
-
-def test_decode_gif_variants_same_raster():
-    """Interlaced storage, a skipped GCE extension, and a local color
-    table all decode to the same statistics as the plain encoding."""
-    from yckg_spark.operators.multimodal import decode_gif
-
-    base = decode_gif(_make_gif(3, 2, _GIF_INDEX_ROWS, _GIF_PALETTE))
-    assert decode_gif(
-        _make_gif(3, 2, _GIF_INDEX_ROWS, _GIF_PALETTE, extension=True)
-    ) == base
-    assert decode_gif(
-        _make_gif(3, 2, _GIF_INDEX_ROWS, _GIF_PALETTE, local_ct=True)
-    ) == base
-    # interlace needs height >= 5 to exercise more than one pass
-    rows8 = [[(y * 3 + x) % 6 for x in range(3)] for y in range(8)]
-    plain = decode_gif(_make_gif(3, 8, rows8, _GIF_PALETTE))
-    inter = decode_gif(_make_gif(3, 8, rows8, _GIF_PALETTE, interlace=True))
-    assert inter == plain
-
-
-def test_decode_gif_lzw_table_growth():
-    """A raster long enough to force LZW code-width growth (table past
-    2^(mcs+1) entries) and the KwKwK case still round-trips: the decoded
-    statistics equal the same raster's PNG decode."""
-    from yckg_spark.operators.multimodal import decode_gif, decode_png
-
-    w, h = 64, 16
-    idx_rows = [[(x * x + 3 * y + (x * y) // 7) % 6 for x in range(w)] for y in range(h)]
-    gif = _make_gif(w, h, idx_rows, _GIF_PALETTE)
-    png_rows = [bytes(v for i in row for v in _GIF_PALETTE[i]) for row in idx_rows]
-    assert decode_gif(gif) == decode_png(_make_png(w, h, png_rows))
-
-
-def test_decode_gif_truncated_raises():
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import decode_gif
-
-    gif = _make_gif(3, 2, _GIF_INDEX_ROWS, _GIF_PALETTE)
-    with _pytest.raises(ValueError, match="truncated|image frame|LZW"):
-        decode_gif(gif[: len(gif) // 2])
-
-
-def test_extract_features_gif_real_in_spark(spark):
-    """fake=False over a GIF payload takes the real LZW decode branch in
-    the mapInPandas pipeline."""
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_bmp,
-        extract_features,
-    )
-
-    gif = _make_gif(3, 2, _GIF_INDEX_ROWS, _GIF_PALETTE)
-    media = spark.createDataFrame(
-        [("g1", "image", "image/gif", gif, 3, 2, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=False).collect()[0]
-    assert list(row["feature"]) == _pytest.approx(decode_bmp(_make_bmp(3, 2, _PX))[2], rel=1e-6)
-
-
-def test_resize_real_gif_input_matches_bmp_input(spark):
-    """The real resample accepts GIF input and produces the same resized
-    BMP bytes as the equivalent BMP input."""
-    from yckg_spark.operators.multimodal import MEDIA_SCHEMA, resize_images
-
-    big_idx = []
-    big_px = []
-    for row_idx, row_px in zip(_GIF_INDEX_ROWS, _PX):
-        di = [i for i in row_idx for _ in (0, 1)]
-        dp = [p for p in row_px for _ in (0, 1)]
-        big_idx.append(di)
-        big_px.append(dp)
-        big_idx.append(di)
-        big_px.append(dp)
-    gif = _make_gif(6, 4, big_idx, _GIF_PALETTE)
-    bmp = _make_bmp(6, 4, big_px)
-    media = spark.createDataFrame(
-        [
-            ("a", "image", "image/gif", gif, 6, 4, None),
-            ("b", "image", "image/bmp", bmp, 6, 4, None),
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = {r["media_id"]: bytes(r["payload"]) for r in resize_images(media, max_side=3, fake=False).collect()}
-    assert out["a"] == out["b"]
-
-
-# ---------------------------------------------------------------------------
-# WAV beyond 16-bit PCM: 8-bit PCM and G.711 a-law / mu-law
-# ---------------------------------------------------------------------------
-
-
-def _make_wav_raw(tag, n_channels, sample_rate, bits, data):
-    """RIFF/WAV container around arbitrary sample bytes with a given
-    format tag and bit depth."""
-    import struct
-
-    block = n_channels * bits // 8
-    fmt = struct.pack(
-        "<HHIIHH", tag, n_channels, sample_rate,
-        sample_rate * block, block, bits,
-    )
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def test_g711_expansion_anchor_values():
-    """The ITU G.711 expansions hit the published table extremes: mu-law
-    0xFF is digital zero / 0x80 and 0x00 are ±32124; a-law 0x55/0xD5 are
-    ±8 (no true zero) and 0x2A/0xAA are ±32256."""
-    from yckg_spark.operators.multimodal import _alaw_expand, _ulaw_expand
-
-    assert _ulaw_expand(0xFF) == 0
-    assert _ulaw_expand(0x80) == 32124
-    assert _ulaw_expand(0x00) == -32124
-    assert _alaw_expand(0x55) == 8
-    assert _alaw_expand(0xD5) == -8
-    assert _alaw_expand(0x2A) == 32256
-    assert _alaw_expand(0xAA) == -32256
-    # the expansion is sign-antisymmetric across the sign bit
-    for i in range(128):
-        assert _ulaw_expand(i) == -_ulaw_expand(i | 0x80)
-        assert _alaw_expand(i | 0x80) == -_alaw_expand(i)
-
-
-def test_decode_wav_8bit_pcm_matches_widened_16bit():
-    """8-bit unsigned PCM decodes to the same statistics as the same
-    signal stored as 16-bit PCM with samples (b-128)*256."""
-    from yckg_spark.operators.multimodal import decode_wav, is_wav
-
-    import struct
-
-    raw = bytes([0, 64, 128, 192, 255, 10, 250, 128])
-    wav8 = _make_wav_raw(1, 1, 8000, 8, raw)
-    wide = struct.pack("<8h", *((b - 128) * 256 for b in raw))
-    wav16 = _make_wav_raw(1, 1, 8000, 16, wide)
-    assert is_wav(wav8) and is_wav(wav16)
-    assert decode_wav(wav8) == decode_wav(wav16)
-
-
-def test_decode_wav_g711_matches_expanded_pcm():
-    """A mu-law (and a-law) stream decodes to the same statistics as the
-    16-bit PCM stream of its table-expanded samples — the container
-    changes, the linearized signal doesn't."""
-    from yckg_spark.operators.multimodal import (
-        _alaw_expand,
-        _ulaw_expand,
-        decode_wav,
-        is_wav,
-    )
-
-    import struct
-
-    raw = bytes([0xFF, 0x80, 0x00, 0x3C, 0xB7, 0xE1, 0x12, 0x9A])
-    for tag, expand in ((7, _ulaw_expand), (6, _alaw_expand)):
-        wav = _make_wav_raw(tag, 2, 8000, 8, raw)
-        assert is_wav(wav)
-        pcm = struct.pack("<8h", *(expand(b) for b in raw))
-        wav16 = _make_wav_raw(1, 2, 8000, 16, pcm)
-        assert decode_wav(wav) == decode_wav(wav16)
-
-
-def test_decode_wav_g711_in_spark(spark):
-    """fake=False routes a mu-law WAV through the real decode branch."""
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_wav,
-        extract_features,
-    )
-    import pytest as _pytest
-
-    wav = _make_wav_raw(7, 1, 8000, 8, bytes([0xFF, 0x80, 0x00, 0x42]))
-    media = spark.createDataFrame(
-        [("u1", "audio", "audio/basic", wav, None, None, None)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=False).collect()[0]
-    assert list(row["feature"]) == _pytest.approx(decode_wav(wav)[3], rel=1e-6)
-
-
-def test_is_wav_still_rejects_unknown_tags():
-    from yckg_spark.operators.multimodal import is_wav
-
-    # IEEE float (tag 3) and 24-bit PCM stay out of the decodable set
-    assert not is_wav(_make_wav_raw(3, 1, 8000, 32, b"\x00" * 8))
-    assert not is_wav(_make_wav_raw(1, 1, 8000, 24, b"\x00" * 6))
-
-
-def test_decode_png_adam7_interlaced():
-    """Adam7-interlaced storage decodes to the same raster as sequential:
-    a 9x9 image (all seven passes non-empty, ragged edges) and the small
-    3x2 case both match their non-interlaced twins."""
-    from yckg_spark.operators.multimodal import decode_png, is_png
-
-    for w, h in ((9, 9), (3, 2), (8, 8), (1, 1)):
-        rows = [
-            bytes((x * 31 + y * 17 + c * 7) % 256 for x in range(w) for c in range(3))
-            for y in range(h)
-        ]
-        seq = _make_png(w, h, rows)
-        inter = _make_png(w, h, rows, interlace=1)
-        assert is_png(inter)
-        assert decode_png(inter) == decode_png(seq)
-    # gray + interlace: channel mapping composes with deinterlacing
-    gray_rows = [bytes((x * 13 + y * 5) % 256 for x in range(9)) for y in range(9)]
-    assert decode_png(_make_png(9, 9, gray_rows, color_type=0, interlace=1)) == decode_png(
-        _make_png(9, 9, gray_rows, color_type=0)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Y4M: real (uncompressed) video — frame decode + timestamp sampling
-# ---------------------------------------------------------------------------
-
-
-def _make_y4m(width, height, frames_rgb, fps=(4, 1), chroma="444"):
-    """Hand-assembled YUV4MPEG2 stream: ``frames_rgb`` is a list of
-    frames, each height rows of (r,g,b). Chroma planes are box-averaged
-    for subsampled layouts, mirroring the decoder's nearest lookup on
-    constant-chroma content."""
-
-    def to_ycc(px):
-        r, g, b = px
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        cl = lambda v: 0 if v < 0 else (255 if v > 255 else int(v + 0.5))
-        return cl(y), cl(cb), cl(cr)
-
-    sub = {"444": (1, 1), "422": (2, 1), "420": (2, 2), "mono": None}[chroma]
-    out = bytearray(
-        f"YUV4MPEG2 W{width} H{height} F{fps[0]}:{fps[1]} Ip A1:1 C{chroma}\n".encode()
-    )
-    for frame in frames_rgb:
-        ycc = [[to_ycc(px) for px in row] for row in frame]
-        out += b"FRAME\n"
-        out += bytes(ycc[y][x][0] for y in range(height) for x in range(width))
-        if sub is not None:
-            cw = (width + sub[0] - 1) // sub[0]
-            ch_ = (height + sub[1] - 1) // sub[1]
-            for ci in (1, 2):
-                for cy in range(ch_):
-                    for cx in range(cw):
-                        acc = n = 0
-                        for dy in range(sub[1]):
-                            for dx in range(sub[0]):
-                                sx, sy = cx * sub[0] + dx, cy * sub[1] + dy
-                                if sx < width and sy < height:
-                                    acc += ycc[sy][sx][ci]
-                                    n += 1
-                        out += bytes([int(acc / n + 0.5)])
-    return bytes(out)
-
-
-def test_y4m_first_frame_gray_exact():
-    """A grayscale (r=g=b) 4:4:4 frame decodes near-exactly: Y carries
-    the value and Cb=Cr=128 make the color transform the identity up to
-    YCbCr rounding (<= 2)."""
-    from yckg_spark.operators.multimodal import _y4m_frame_rgb, is_y4m, y4m_frame_count
-
-    frame = [[(v, v, v) for v in (0, 77, 128, 255)] for _ in range(2)]
-    y4m = _make_y4m(4, 2, [frame])
-    assert is_y4m(y4m)
-    assert y4m_frame_count(y4m) == 1
-    w, h, rgb = _y4m_frame_rgb(y4m, 0)
-    assert (w, h) == (4, 2)
-    for y in range(2):
-        for x, v in enumerate((0, 77, 128, 255)):
-            got = rgb[(y * 4 + x) * 3 : (y * 4 + x) * 3 + 3]
-            assert all(abs(c - v) <= 2 for c in got)
-
-
-def test_y4m_mono_and_subsampled_layouts():
-    """mono carries Y only; 422/420 with constant chroma lose nothing to
-    subsampling — all layouts agree on a constant-hue frame."""
-    from yckg_spark.operators.multimodal import decode_y4m
-
-    frame = [[(120, 120, 120)] * 8 for _ in range(4)]
-    base = decode_y4m(_make_y4m(8, 4, [frame], chroma="444"))
-    for chroma in ("422", "420", "mono"):
-        got = decode_y4m(_make_y4m(8, 4, [frame], chroma=chroma))
-        assert got[0:2] == base[0:2]
-        assert got[2] == pytest.approx(base[2], abs=2 / 255)
-
-
-def test_y4m_sample_frame_features(spark):
-    """Real frame sampling: a 4-frame 4fps stream sampled every 500 ms
-    yields frames 0,0(250?),..— exactly the timestamps 0/500/750ms map
-    to via floor(ts*fps): distinct per-frame features prove the right
-    frames were decoded."""
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_y4m,
-        sample_frame_features,
-    )
-
-    shades = [10, 80, 160, 240]
-    frames = [[[(v, v, v)] * 4 for _ in range(2)] for v in shades]
-    y4m = _make_y4m(4, 2, frames, fps=(4, 1))  # 1 s of video, 250 ms/frame
-    media = spark.createDataFrame(
-        [("v1", "video", "video/x-y4m", y4m, 4, 2, 1000)], MEDIA_SCHEMA
-    )
-    rows = sample_frame_features(media, every_ms=250).collect()
-    assert [r["frame_ts_ms"] for r in sorted(rows, key=lambda r: r["frame_ts_ms"])] == [
-        0, 250, 500, 750,
-    ]
-    # each sampled frame has a distinct mean (shades differ)
-    means = [r["feature"][3] for r in sorted(rows, key=lambda r: r["frame_ts_ms"])]
-    assert means == sorted(means) and len(set(means)) == 4
-    # frame 0's features equal decode_y4m's first-frame stats
-    first = sorted(rows, key=lambda r: r["frame_ts_ms"])[0]
-    assert list(first["feature"]) == pytest.approx(decode_y4m(y4m)[2], rel=1e-6)
-
-
-def test_y4m_extract_features_and_resize(spark):
-    """fake=False feature extraction takes the Y4M branch, and the real
-    resample accepts a Y4M payload (first frame)."""
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_y4m,
-        extract_features,
-        is_bmp,
-        resize_images,
-    )
-
-    frame = [[(200, 100, 50)] * 16 for _ in range(8)]
-    y4m = _make_y4m(16, 8, [frame], chroma="420")
-    media = spark.createDataFrame(
-        [("v2", "video", "video/x-y4m", y4m, 16, 8, 250)], MEDIA_SCHEMA
-    )
-    row = extract_features(media, fake=False).collect()[0]
-    assert list(row["feature"]) == pytest.approx(decode_y4m(y4m)[2], rel=1e-6)
-    # resize_images only touches kind=="image" rows; hand it the Y4M
-    # payload as an image row (the raster path decodes frame 0)
-    as_image = spark.createDataFrame(
-        [("v2i", "image", "video/x-y4m", y4m, 16, 8, None)], MEDIA_SCHEMA
-    )
-    resized = resize_images(as_image, max_side=8, fake=False).collect()[0]
-    assert (resized["width"], resized["height"]) == (8, 4)
-    assert is_bmp(bytes(resized["payload"]))
-
-
-def test_y4m_truncated_and_sampling_rejects_compressed(spark):
-    import pytest as _pytest
-
-    from yckg_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _y4m_frame_rgb,
-        sample_frame_features,
-    )
-
-    frame = [[(9, 9, 9)] * 4 for _ in range(2)]
-    y4m = _make_y4m(4, 2, [frame])
-    with _pytest.raises(ValueError, match="truncated"):
-        _y4m_frame_rgb(y4m[:-3], 0)
-    with _pytest.raises(ValueError, match="truncated|frame header"):
-        _y4m_frame_rgb(y4m, 5)  # past the last frame
-    media = spark.createDataFrame(
-        [("m4", "video", "video/mp4", b"\x00mp4-fake", 1920, 1080, 3500)], MEDIA_SCHEMA
-    )
-    with _pytest.raises(Exception, match="NotImplementedError|codec"):
-        sample_frame_features(media).collect()

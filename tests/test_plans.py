@@ -71,21 +71,6 @@ def test_no_cartesian_in_kg_build(spark, pages):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_salted_agg_is_two_phase(spark, pages):
-    """The skew-handling aggregate must show two exchange-separated
-    aggregation rounds (salt phase + merge phase)."""
-    from pyspark.sql import functions as F
-
-    from yckg_spark.operators.canonicalize import salted_agg
-    from yckg_spark.operators.emit import emit_all
-    from yckg_spark.sources.web_pages import parse_records
-
-    t, _ = emit_all(parse_records(pages, use_extraction=False, cache=False))
-    agg = salted_agg(t, ["predicate"], {"n": "count"})
-    plan = _plan(agg)
-    assert plan.count("Exchange") >= 2, plan
-
-
 def test_minhash_band_join_carries_no_sig_array(spark):
     """The banded self-join must flow (id, band, bh) only: the 32-element
     signature array must not appear in any exchange partitioned on the band

@@ -10,7 +10,7 @@ columnar, Arrow-vectorized Spark DataFrame pipeline:
     → schema.org-typed triple emission              (pure Column expressions)
     → enrichment (schema.org hierarchy closure, skos mappings,
       Wikidata entity linking vs snapshot tables)
-    → canonicalization (deterministic skolem IRIs, salted dedup)
+    → canonicalization (deterministic skolem IRIs, map-side-combined dedup)
     → partitioned triple store + lineage manifest + metrics
     → competency-question query layer (Spark SQL)
 

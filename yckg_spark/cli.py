@@ -129,6 +129,15 @@ def cmd_query(args) -> int:
     from yckg_spark.operators.canonicalize import dedup_triples
     from yckg_spark.plans.queries import ALL_CQS, register
 
+    if args.cq is not None and (args.sparql is not None or args.sparql_file):
+        print("error: --cq runs a named CQ; it cannot be combined with "
+              "--sparql/--sparql-file", file=sys.stderr)
+        return 2
+    time_travel = args.as_of_sequence is not None or args.as_of_timestamp_ms is not None
+    if args.input_format == "nt" and time_travel:
+        print("error: --as-of-sequence/--as-of-timestamp-ms need a built store; "
+              "an N-Triples dump has no commit lineage", file=sys.stderr)
+        return 2
     sparql = args.sparql
     if args.sparql_file:
         with open(args.sparql_file) as fh:
@@ -669,12 +678,17 @@ def cmd_stats(args) -> int:
     ).collect()[0]
     out = {
         "n_docs": g["n_docs"],
-        "total_tokens": g["total_tokens"],
-        "total_chars": g["total_chars"],
+        "total_tokens": g["total_tokens"] or 0,
+        "total_chars": g["total_chars"] or 0,
         "approx_unique_texts": g["approx_unique"],
-        "approx_dup_rate": round(1 - g["approx_unique"] / max(g["n_docs"], 1), 4),
-        "quality_quartiles": [round(x, 6) for x in g["q_quartiles"]],
-        "token_p50_p90_p99": [int(x) for x in g["tok_pcts"]],
+        # ratios and percentiles of an empty corpus are undefined: null
+        "approx_dup_rate": (
+            round(1 - g["approx_unique"] / g["n_docs"], 4) if g["n_docs"] else None
+        ),
+        "quality_quartiles": (
+            None if g["q_quartiles"] is None else [round(x, 6) for x in g["q_quartiles"]]
+        ),
+        "token_p50_p90_p99": None if g["tok_pcts"] is None else [int(x) for x in g["tok_pcts"]],
         "seconds": round(time.time() - t0, 3),
     }
     if args.lang_col in docs.columns:

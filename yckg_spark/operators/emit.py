@@ -47,8 +47,6 @@ from yckg_spark.namespaces import (
     YELPVOC,
 )
 
-TRIPLE_COLS = ["subject", "predicate", "object", "is_literal", "datatype", "source_domain"]
-ERROR_COLS = ["subject", "predicate", "object", "kind", "source_domain"]
 
 def _null_str() -> Column:
     # built lazily — Column construction needs an active SparkContext
@@ -134,19 +132,6 @@ def _union_pairs(pairs):
         triples = t if triples is None else triples.unionByName(t)
         errors = e if errors is None else errors.unionByName(e)
     return triples, errors
-
-
-def _empty_errors(spark_df: DataFrame, domain: str) -> DataFrame:
-    return (
-        spark_df.select(
-            _null_str().alias("subject"),
-            _null_str().alias("predicate"),
-            _null_str().alias("object"),
-            F.lit("none").alias("kind"),
-            F.lit(domain).alias("source_domain"),
-        )
-        .limit(0)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -407,26 +392,7 @@ def user_triples(users: DataFrame) -> tuple[DataFrame, DataFrame]:
         _entry(None, None, lit=True, valid=~_is_sentinel(F.col("friends")), raw_key="friends", raw_val=F.col("friends")),
         _entry(None, None, lit=True, valid=~_is_sentinel(F.col("elite")), raw_key="elite", raw_val=F.col("elite")),
     ]
-    # the two routing entries must not emit triples when valid — drop them by
-    # filtering on predicate being non-null for the triple side:
-    x = users.select(subj.alias("subject"), F.explode(F.array(*entries)).alias("t")).select(
-        "subject", "t.*"
-    )
-    a_triples = x.filter(F.col("valid") & F.col("predicate").isNotNull()).select(
-        "subject",
-        "predicate",
-        "object",
-        "is_literal",
-        "datatype",
-        F.lit("user").alias("source_domain"),
-    )
-    a_errors = x.filter(~F.col("valid")).select(
-        "subject",
-        F.col("raw_key").alias("predicate"),
-        F.col("raw_val").alias("object"),
-        F.lit("none").alias("kind"),
-        F.lit("user").alias("source_domain"),
-    )
+    a_triples, a_errors = _explode_entries(users, subj, entries, "user")
 
     # friends: ", "-split → schema:knows IRI edges (:148-152).
     friends = (
@@ -499,24 +465,7 @@ def review_triples(reviews: DataFrame) -> tuple[DataFrame, DataFrame]:
         _scalar("text", F.col("text"), SCHEMA + "description", XSD_STRING),
         _entry(None, None, lit=True, valid=~_is_sentinel(F.col("date")), raw_key="date", raw_val=F.col("date")),
     ]
-    x = reviews.select(subj.alias("subject"), F.explode(F.array(*entries)).alias("t")).select(
-        "subject", "t.*"
-    )
-    a_triples = x.filter(F.col("valid") & F.col("predicate").isNotNull()).select(
-        "subject",
-        "predicate",
-        "object",
-        "is_literal",
-        "datatype",
-        F.lit("review").alias("source_domain"),
-    )
-    a_errors = x.filter(~F.col("valid")).select(
-        "subject",
-        F.col("raw_key").alias("predicate"),
-        F.col("raw_val").alias("object"),
-        F.lit("none").alias("kind"),
-        F.lit("review").alias("source_domain"),
-    )
+    a_triples, a_errors = _explode_entries(reviews, subj, entries, "review")
     # 'date' goes through the list branch (:139-157): ", "-split, space→T.
     dates = (
         reviews.filter(~_is_sentinel(F.col("date")))

@@ -22,9 +22,9 @@ matching test encoder.
 
 Reference parity note: the reference pipeline never decodes media
 (single-node pandas+rdflib, Code/create_yelp_nt_files.py operates on
-JSON only); this module exists for the training-data multimodal
-operators (SURVEY.md "multimodal columns"), giving ``extract_features``
-/ ``resize_images`` a real decode for the dominant web image format.
+JSON only). No build, query, CLI or driver path calls this module; it
+stands alone as a candidate decoder for the one swap point in
+``multimodal._decode_one``.
 """
 
 from __future__ import annotations

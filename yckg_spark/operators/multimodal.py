@@ -1,49 +1,19 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed in Arrow-batched ``mapInPandas`` stages.
+with typed metadata, turned into fixed-dim feature vectors in an
+Arrow-batched ``mapInPandas`` stage, plus two pure-expression helpers over
+the metadata: video frame-timestamp sampling and per-kind size stats.
 
-Decode coverage — six formats are decoded FOR REAL, dependency-free:
-
-- 24-bit BMP rasters (``decode_bmp``): pure struct parse.
-- 8-bit PNG, all five scanline filters, gray/RGB/palette/alpha color
-  types (``decode_png``): PNG's compression is DEFLATE, which the
-  Python stdlib ``zlib`` decodes — so even this *compressed* format
-  needs no codec library. Same integer-exact channel statistics as
-  BMP, so one raster encoded both ways yields identical features.
-- GIF87a/GIF89a first frame (``decode_gif``): variable-width LZW is
-  pure bit-twiddling, implemented here directly — the second
-  *compressed* format that needs no codec library. Interlace and
-  local color tables handled.
-- Huffman JPEG, sequential AND progressive (``decode_jpeg`` via
-  ``operators/jpeg.py``): marker walk, Huffman entropy decode across
-  multi-scan spectral-selection / successive-approximation layers,
-  dequantize, IDCT, chroma upsample, YCbCr→RGB — all plain
-  arithmetic, no codec library.
-- RIFF/WAV audio (``decode_wav``): 8/16-bit integer PCM (pure struct
-  parse) plus G.711 a-law/mu-law (pure ITU table expansion).
-- YUV4MPEG2 (Y4M) video (``decode_y4m`` / ``sample_frame_features``):
-  raw uncompressed YCbCr frame planes behind a text header — real
-  video frame decode and timestamp-sampled per-frame features with no
-  codec at all (420/422/444/mono layouts).
-
-The remaining formats (MP3, compressed video, arithmetic-coded JPEG)
-stay STUBBED — no stdlib decoder and the container has no media libs: with
-``fake=True`` a deterministic hash-derived feature vector stands in,
-with ``fake=False`` undecodable payloads raise NotImplementedError. Everything Spark-side — schemas, batch iteration,
-partitioning, UDF signatures, output shapes — is real and tested;
-swapping in Pillow/torchaudio later only widens ``_decode_one``'s
-format dispatch. ``resize_images(fake=False)`` likewise resamples
-decodable rasters (BMP/PNG/GIF/JPEG/Y4M-frame-0 in → 24-bit BMP out,
-nearest-neighbor) for real and raises only for undecodable payloads.
+No media codec ships here. ``_decode_one`` maps each payload to
+``FEATURE_DIM`` floats taken from its sha256 digest, a deterministic
+stand-in that a SQL oracle can recompute exactly. It is the single swap
+point for a real decoder: everything Spark-side (schemas, batch
+iteration, output shape) stays as it is when it changes.
 """
 
 from __future__ import annotations
 
 import hashlib
-import struct
-import zlib
 from collections.abc import Iterator
-
-from yckg_spark.operators.jpeg import is_jpeg, jpeg_rgb
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -82,713 +52,18 @@ FEATURES_SCHEMA = StructType(
 FEATURE_DIM = 8
 
 
-def is_bmp(payload: bytes | None) -> bool:
-    """True if the payload is an uncompressed 24-bit bottom-up-or-top-down
-    BMP we can decode without any codec library."""
-    if payload is None or len(payload) < 54 or payload[:2] != b"BM":
-        return False
-    bpp, compression = struct.unpack_from("<HI", payload, 28)
-    return bpp == 24 and compression == 0
-
-
-def decode_bmp(payload: bytes) -> tuple[int, int, list[float]]:
-    """REAL decode of an uncompressed 24-bit BMP — pure-Python struct
-    parse, no codec libs (BMP is the one raster format that needs none).
-
-    Returns (width, height, FEATURE_DIM channel statistics): mean B/G/R,
-    mean/min/max luma (BT.601 weights), all /255, plus width and height
-    /65536 — deterministic exact arithmetic, recomputable by any oracle
-    from the same bytes. Handles 4-byte row padding and negative
-    (top-down) heights; row order doesn't affect the statistics.
-    """
-    data_offset = struct.unpack_from("<I", payload, 10)[0]
-    width, height_raw = struct.unpack_from("<ii", payload, 18)
-    height = abs(height_raw)
-    if width <= 0 or height == 0:
-        raise ValueError("BMP with non-positive dimensions")
-    row_bytes = width * 3
-    stride = (row_bytes + 3) & ~3  # rows padded to 4-byte boundaries
-    need = data_offset + stride * height
-    if len(payload) < need:
-        raise ValueError(f"truncated BMP: {len(payload)} bytes < {need}")
-    sum_b = sum_g = sum_r = 0
-    min_luma = float("inf")
-    max_luma = float("-inf")
-    for r in range(height):
-        row = payload[data_offset + r * stride : data_offset + r * stride + row_bytes]
-        for c in range(0, row_bytes, 3):
-            b, g, rr = row[c], row[c + 1], row[c + 2]
-            sum_b += b
-            sum_g += g
-            sum_r += rr
-            luma = 0.299 * rr + 0.587 * g + 0.114 * b
-            min_luma = min(min_luma, luma)
-            max_luma = max(max_luma, luma)
-    n = width * height
-    mean_luma = (0.299 * sum_r + 0.587 * sum_g + 0.114 * sum_b) / n
-    return (
-        width,
-        height,
-        [
-            sum_b / n / 255.0,
-            sum_g / n / 255.0,
-            sum_r / n / 255.0,
-            mean_luma / 255.0,
-            min_luma / 255.0,
-            max_luma / 255.0,
-            width / 65536.0,
-            height / 65536.0,
-        ],
-    )
-
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-# channels per PNG color type: 0 gray, 2 RGB, 3 palette, 4 gray+alpha, 6 RGBA
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _png_chunks(payload: bytes) -> Iterator[tuple[bytes, bytes]]:
-    """Walk PNG chunks, yielding (type, data); verifies each CRC-32."""
-    pos = len(_PNG_SIG)
-    while pos + 8 <= len(payload):
-        (size,) = struct.unpack_from(">I", payload, pos)
-        ctype = payload[pos + 4 : pos + 8]
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) < size or pos + 12 + size > len(payload):
-            raise ValueError("truncated PNG chunk")
-        (crc,) = struct.unpack_from(">I", payload, pos + 8 + size)
-        if zlib.crc32(ctype + body) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-        yield ctype, body
-        if ctype == b"IEND":
-            return
-        pos += 12 + size
-    raise ValueError("PNG ended without IEND chunk")
-
-
-def _png_ihdr(payload: bytes) -> tuple[int, int, int, int, int] | None:
-    """(width, height, bit_depth, color_type, interlace) from the IHDR
-    chunk, or None if the payload isn't PNG-shaped. No CRC walk — this
-    backs the cheap ``is_png`` probe."""
-    if payload is None or len(payload) < 33 or payload[: len(_PNG_SIG)] != _PNG_SIG:
-        return None
-    if payload[12:16] != b"IHDR":
-        return None
-    w, h = struct.unpack_from(">II", payload, 16)
-    depth, color, _comp, _filt, interlace = struct.unpack_from("BBBBB", payload, 24)
-    return w, h, depth, color, interlace
-
-
-def is_png(payload: bytes | None) -> bool:
-    """True if the payload is an 8-bit-depth PNG of a color type we
-    decode (gray / RGB / palette / gray+alpha / RGBA), sequential or
-    Adam7-interlaced. PNG's only compression method is DEFLATE — stdlib
-    ``zlib`` territory — so this needs no codec library despite being a
-    compressed format."""
-    ihdr = _png_ihdr(payload)
-    if ihdr is None:
-        return False
-    w, h, depth, color, interlace = ihdr
-    return w > 0 and h > 0 and depth == 8 and color in _PNG_CHANNELS and interlace in (0, 1)
-
-
-def _png_unfilter(raw: bytes, width: int, height: int, channels: int) -> bytes:
-    """Undo PNG per-scanline filtering (types 0-4: None/Sub/Up/Average/
-    Paeth) on the decompressed IDAT stream. 8-bit depth ⇒ the filter
-    unit (bpp) equals the channel count."""
-    stride = width * channels
-    bpp = channels
-    if len(raw) < (stride + 1) * height:
-        raise ValueError("truncated PNG: decompressed data shorter than raster")
-    out = bytearray()
-    prev = bytearray(stride)
-    pos = 0
-    for _ in range(height):
-        ftype = raw[pos]
-        line = bytearray(raw[pos + 1 : pos + 1 + stride])
-        pos += 1 + stride
-        if ftype == 1:  # Sub
-            for i in range(bpp, stride):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                c = prev[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                line[i] = (line[i] + pred) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-        out += line
-        prev = line
-    return bytes(out)
-
-
-# Adam7 pass geometry: (x_start, x_step, y_start, y_step) per pass
-_ADAM7 = (
-    (0, 8, 0, 8),
-    (4, 8, 0, 8),
-    (0, 4, 4, 8),
-    (2, 4, 0, 4),
-    (0, 2, 2, 4),
-    (1, 2, 0, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _png_deinterlace(raw: bytes, width: int, height: int, channels: int) -> bytes:
-    """Reassemble an Adam7-interlaced PNG: each pass is an independent
-    sub-image with its own filtered scanlines; unfilter each and scatter
-    its pixels to their grid positions."""
-    full = bytearray(width * height * channels)
-    pos = 0
-    for x0, dx, y0, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw == 0 or ph == 0:
-            continue  # empty pass at this image size
-        stride = pw * channels
-        chunk = raw[pos : pos + (stride + 1) * ph]
-        pos += (stride + 1) * ph
-        sub = _png_unfilter(chunk, pw, ph, channels)
-        for py in range(ph):
-            y = y0 + py * dy
-            for px in range(pw):
-                x = x0 + px * dx
-                s = (py * pw + px) * channels
-                d = (y * width + x) * channels
-                full[d : d + channels] = sub[s : s + channels]
-    if pos > len(raw):
-        raise ValueError("truncated PNG: interlaced data shorter than passes")
-    return bytes(full)
-
-
-def _png_rgb(payload: bytes) -> tuple[int, int, bytes]:
-    """REAL decode of an 8-bit PNG to a top-down row-major RGB byte
-    string (alpha dropped, gray replicated, palette resolved); handles
-    both sequential and Adam7-interlaced storage."""
-    ihdr = _png_ihdr(payload)
-    if ihdr is None:
-        raise ValueError("not a PNG")
-    width, height, depth, color, interlace = ihdr
-    if depth != 8 or color not in _PNG_CHANNELS:
-        raise ValueError(f"unsupported PNG bit depth {depth} / color type {color}")
-    if interlace not in (0, 1):
-        raise ValueError(f"unknown PNG interlace method {interlace}")
-    if width <= 0 or height <= 0:
-        raise ValueError("PNG with non-positive dimensions")
-    palette: bytes | None = None
-    idat = bytearray()
-    for ctype, body in _png_chunks(payload):
-        if ctype == b"PLTE":
-            palette = body
-        elif ctype == b"IDAT":
-            idat += body
-    channels = _PNG_CHANNELS[color]
-    inflated = zlib.decompress(bytes(idat))
-    if interlace == 1:
-        raster = _png_deinterlace(inflated, width, height, channels)
-    else:
-        raster = _png_unfilter(inflated, width, height, channels)
-    if color == 2:
-        return width, height, raster
-    rgb = bytearray(width * height * 3)
-    if color == 3:
-        if palette is None:
-            raise ValueError("palette PNG without PLTE chunk")
-        for i, idx in enumerate(raster):
-            rgb[i * 3 : i * 3 + 3] = palette[idx * 3 : idx * 3 + 3]
-    elif color in (0, 4):  # gray (+alpha): replicate luma, drop alpha
-        for i in range(width * height):
-            g = raster[i * channels]
-            rgb[i * 3] = rgb[i * 3 + 1] = rgb[i * 3 + 2] = g
-    else:  # color == 6, RGBA: drop alpha
-        for i in range(width * height):
-            rgb[i * 3 : i * 3 + 3] = raster[i * 4 : i * 4 + 3]
-    return width, height, bytes(rgb)
-
-
-def _rgb_stats(width: int, height: int, rgb: bytes) -> list[float]:
-    """FEATURE_DIM channel statistics over a row-major RGB raster — the
-    exact arithmetic of ``decode_bmp`` (integer channel sums, BT.601
-    luma, one final float division), so the same pixels produce the
-    same features regardless of the container format they arrived in."""
-    sum_b = sum_g = sum_r = 0
-    min_luma = float("inf")
-    max_luma = float("-inf")
-    for i in range(0, width * height * 3, 3):
-        rr, g, b = rgb[i], rgb[i + 1], rgb[i + 2]
-        sum_b += b
-        sum_g += g
-        sum_r += rr
-        luma = 0.299 * rr + 0.587 * g + 0.114 * b
-        min_luma = min(min_luma, luma)
-        max_luma = max(max_luma, luma)
-    n = width * height
-    mean_luma = (0.299 * sum_r + 0.587 * sum_g + 0.114 * sum_b) / n
-    return [
-        sum_b / n / 255.0,
-        sum_g / n / 255.0,
-        sum_r / n / 255.0,
-        mean_luma / 255.0,
-        min_luma / 255.0,
-        max_luma / 255.0,
-        width / 65536.0,
-        height / 65536.0,
-    ]
-
-
-def decode_png(payload: bytes) -> tuple[int, int, list[float]]:
-    """REAL decode of an 8-bit PNG — chunk walk with CRC-32 verification,
-    stdlib ``zlib`` inflate, all five scanline filters undone, color
-    types 0/2/3/4/6 mapped to RGB (alpha dropped) — then the same
-    FEATURE_DIM statistics as ``decode_bmp``. One raster encoded as both
-    BMP and PNG therefore yields bit-identical features (pinned by
-    test_multimodal's cross-format case)."""
-    width, height, rgb = _png_rgb(payload)
-    return width, height, _rgb_stats(width, height, rgb)
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> bytearray:
-    """GIF-variant LZW decompression — variable code width (min+1 up to
-    12 bits, LSB-first bit packing), clear/end-of-information codes,
-    table rebuild on clear. Pure integer arithmetic, no codec library
-    (LZW has no stdlib decoder, unlike PNG's DEFLATE)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    # bit reader state
-    acc = 0
-    nbits = 0
-    pos = 0
-
-    def fresh_table() -> list[bytes]:
-        return [bytes([i]) for i in range(clear)] + [b"", b""]
-
-    table = fresh_table()
-    width = min_code_size + 1
-    prev: bytes | None = None
-    while len(out) < n_pixels:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("truncated GIF LZW stream")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = fresh_table()
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("GIF LZW: first code after clear not a literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):  # the KwKwK case
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError("GIF LZW: code beyond table")
-        out += entry
-        prev = entry
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-    return out
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))  # (start row, step)
-
-
-def _gif_first_frame(payload: bytes) -> tuple[int, int, bytes]:
-    """Parse a GIF87a/GIF89a container to the first image frame's indices
-    resolved through its (local-over-global) color table, as a top-down
-    row-major RGB byte string. Extensions are skipped; interlaced frames
-    are de-interlaced; transparency is ignored (the alpha-drop
-    convention shared with PNG decode)."""
-    if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF")
-    _sw, _sh, flags = struct.unpack_from("<HHB", payload, 6)
-    pos = 13
-    global_ct: bytes | None = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        global_ct = payload[pos : pos + 3 * n]
-        pos += 3 * n
-    while pos < len(payload):
-        block = payload[pos]
-        if block == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif block == 0x2C:  # image descriptor
-            _left, _top, width, height, iflags = struct.unpack_from("<HHHHB", payload, pos + 1)
-            pos += 10
-            ct = global_ct
-            if iflags & 0x80:
-                n = 2 << (iflags & 0x07)
-                ct = payload[pos : pos + 3 * n]
-                pos += 3 * n
-            if ct is None:
-                raise ValueError("GIF frame without a color table")
-            if width <= 0 or height <= 0:
-                raise ValueError("GIF with non-positive dimensions")
-            min_code_size = payload[pos]
-            pos += 1
-            data = bytearray()
-            while pos < len(payload) and payload[pos] != 0:
-                size = payload[pos]
-                data += payload[pos + 1 : pos + 1 + size]
-                pos += 1 + size
-            idx = _gif_lzw_decode(bytes(data), min_code_size, width * height)
-            if len(idx) < width * height:
-                raise ValueError("truncated GIF: too few pixels decoded")
-            if iflags & 0x40:  # de-interlace: rows arrive in 4 passes
-                order = [
-                    r
-                    for start, step in _GIF_INTERLACE_PASSES
-                    for r in range(start, height, step)
-                ]
-                rows = [idx[i * width : (i + 1) * width] for i in range(height)]
-                deinterlaced = bytearray(width * height)
-                for src, dst in enumerate(order):
-                    deinterlaced[dst * width : (dst + 1) * width] = rows[src]
-                idx = deinterlaced
-            rgb = bytearray(width * height * 3)
-            for i in range(width * height):
-                ci = idx[i]
-                if ci * 3 + 3 > len(ct):
-                    raise ValueError("GIF pixel index beyond color table")
-                rgb[i * 3 : i * 3 + 3] = ct[ci * 3 : ci * 3 + 3]
-            return width, height, bytes(rgb)
-        elif block == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-    raise ValueError("GIF without an image frame")
-
-
-def is_gif(payload: bytes | None) -> bool:
-    """True if the payload is a GIF87a/GIF89a we can decode for real —
-    LZW is pure bit-twiddling, so like BMP and PNG this needs no codec
-    library."""
-    return payload is not None and len(payload) >= 13 and payload[:6] in (b"GIF87a", b"GIF89a")
-
-
-def decode_gif(payload: bytes) -> tuple[int, int, list[float]]:
-    """REAL decode of a GIF's first frame — extension walk, pure-Python
-    variable-width LZW, optional de-interlace, color-table resolution —
-    then the same FEATURE_DIM statistics as ``decode_bmp``/``decode_png``
-    (cross-format identity pinned in test_multimodal)."""
-    width, height, rgb = _gif_first_frame(payload)
-    return width, height, _rgb_stats(width, height, rgb)
-
-
-def decode_jpeg(payload: bytes) -> tuple[int, int, list[float]]:
-    """REAL decode of a Huffman JPEG, sequential or progressive (see
-    operators/jpeg.py — pure-Python Huffman + IDCT, no codec library),
-    then the same FEATURE_DIM statistics as the other raster decoders.
-    JPEG is lossy, so unlike BMP/PNG/GIF the stats match the source
-    raster only to quantization error — but they are bit-deterministic
-    for given bytes."""
-    width, height, rgb = jpeg_rgb(payload)
-    return width, height, _rgb_stats(width, height, rgb)
-
-
-# WAVE format tags we decode: 1 = integer PCM, 6 = G.711 a-law, 7 = G.711
-# mu-law. The G.711 expansions are pure table arithmetic (ITU-T G.711),
-# no codec library involved.
-_WAV_FORMATS = (1, 6, 7)
-
-
-def _ulaw_expand(u: int) -> int:
-    """ITU-T G.711 mu-law byte → linear int16 sample."""
-    u = ~u & 0xFF
-    sign = u & 0x80
-    exponent = (u >> 4) & 0x07
-    mantissa = u & 0x0F
-    sample = (((mantissa << 3) + 0x84) << exponent) - 0x84
-    return -sample if sign else sample
-
-
-def _alaw_expand(a: int) -> int:
-    """ITU-T G.711 a-law byte → linear int16 sample."""
-    a ^= 0x55
-    sign = a & 0x80
-    exponent = (a >> 4) & 0x07
-    mantissa = a & 0x0F
-    if exponent == 0:
-        sample = (mantissa << 4) + 8
-    else:
-        sample = ((mantissa << 4) + 0x108) << (exponent - 1)
-    return -sample if sign else sample
-
-
-_ULAW_TABLE = [_ulaw_expand(i) for i in range(256)]
-_ALAW_TABLE = [_alaw_expand(i) for i in range(256)]
-
-
-def _wav_fmt_data(payload: bytes) -> tuple[int, int, int, int, bytes] | None:
-    """Walk the RIFF chunk list; return (format_tag, n_channels,
-    sample_rate, bits_per_sample, data_bytes) for a WAVE whose format tag
-    we know, else None. Chunks are 2-byte aligned per the RIFF spec (odd
-    sizes carry a pad byte)."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    pos, fmt, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid, size = payload[pos : pos + 4], struct.unpack_from("<I", payload, pos + 4)[0]
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt = struct.unpack_from("<HHIIHH", body, 0)
-        elif cid == b"data":
-            data = body
-        pos += 8 + size + (size & 1)
-    if fmt is None or data is None or fmt[0] not in _WAV_FORMATS:
-        return None
-    return fmt[0], fmt[1], fmt[2], fmt[5], data
-
-
-def _wav_decodable(parsed: tuple[int, int, int, int, bytes] | None) -> bool:
-    if parsed is None:
-        return False
-    tag, n_ch, rate, bits, _data = parsed
-    if n_ch <= 0 or rate <= 0:
-        return False
-    if tag == 1:
-        return bits in (8, 16)
-    return bits == 8  # G.711 is always 8-bit bytes
-
-
-def is_wav(payload: bytes | None) -> bool:
-    """True if the payload is a RIFF/WAV we decode without any codec
-    library: 8/16-bit integer PCM, or G.711 a-law/mu-law (pure table
-    expansion)."""
-    if payload is None:
-        return False
-    return _wav_decodable(_wav_fmt_data(payload))
-
-
-def decode_wav(payload: bytes) -> tuple[int, int, int, list[float]]:
-    """REAL decode of RIFF/WAV audio — pure-Python struct parse plus,
-    for G.711, the ITU expansion tables; no codec libs. Formats: 16-bit
-    and 8-bit integer PCM (tag 1), a-law (tag 6), mu-law (tag 7); all
-    are widened to the linear int16 range before the statistics, so the
-    same signal carried in any of them yields comparable features.
-
-    Returns (n_channels, sample_rate, n_frames, FEATURE_DIM signal
-    statistics): mean, RMS, min, max of all samples (each /32768), the
-    zero-crossing rate of channel 0, then n_frames/2^24, n_channels/16,
-    sample_rate/2^17. All sums/extrema/crossings accumulate in exact
-    integer arithmetic before one final float division, so the features
-    are bit-reproducible and recomputable by any oracle from the bytes.
-    """
-    parsed = _wav_fmt_data(payload)
-    if not _wav_decodable(parsed):
-        raise ValueError("not a PCM or G.711 WAV we can decode")
-    tag, n_ch, rate, bits, data = parsed
-    sample_bytes = bits // 8
-    frame_bytes = sample_bytes * n_ch
-    n_frames = len(data) // frame_bytes
-    if n_frames == 0:
-        raise ValueError("WAV with no complete sample frames")
-    n = n_frames * n_ch
-    if tag == 1 and bits == 16:
-        samples = struct.unpack_from(f"<{n}h", data, 0)
-    elif tag == 1:  # 8-bit PCM is unsigned, 128-centred; widen to int16
-        samples = tuple((b - 128) * 256 for b in data[:n])
-    elif tag == 7:
-        samples = tuple(_ULAW_TABLE[b] for b in data[:n])
-    else:  # tag == 6
-        samples = tuple(_ALAW_TABLE[b] for b in data[:n])
-    total = sum(samples)
-    sq_total = sum(s * s for s in samples)
-    ch0 = samples[::n_ch]
-    crossings = sum(
-        1 for a, b in zip(ch0, ch0[1:]) if (a >= 0) != (b >= 0)
-    )
-    return (
-        n_ch,
-        rate,
-        n_frames,
-        [
-            total / n / 32768.0,
-            (sq_total / n) ** 0.5 / 32768.0,
-            min(samples) / 32768.0,
-            max(samples) / 32768.0,
-            crossings / max(1, len(ch0) - 1),
-            n_frames / 16777216.0,
-            n_ch / 16.0,
-            rate / 131072.0,
-        ],
-    )
-
-
-_Y4M_SIG = b"YUV4MPEG2 "
-# chroma layout → (x subsample, y subsample); mono has no chroma planes
-_Y4M_CHROMA = {"420": (2, 2), "420jpeg": (2, 2), "420mpeg2": (2, 2),
-               "420paldv": (2, 2), "422": (2, 1), "444": (1, 1), "mono": None}
-
-
-def _y4m_header(payload: bytes) -> tuple[int, int, int, int, int, str] | None:
-    """(width, height, fps_num, fps_den, header_end, chroma) from a
-    YUV4MPEG2 stream header, or None if not Y4M-shaped."""
-    if payload is None or not payload.startswith(_Y4M_SIG):
-        return None
-    nl = payload.find(b"\n", 0, 256)
-    if nl < 0:
-        return None
-    w = h = 0
-    fn, fd = 30, 1
-    chroma = "420"
-    try:
-        for tok in payload[len(_Y4M_SIG) : nl].decode("ascii").split():
-            if tok[0] == "W":
-                w = int(tok[1:])
-            elif tok[0] == "H":
-                h = int(tok[1:])
-            elif tok[0] == "F":
-                fn, fd = (int(x) for x in tok[1:].split(":"))
-            elif tok[0] == "C":
-                chroma = tok[1:]
-    except (ValueError, UnicodeDecodeError):
-        return None
-    if w <= 0 or h <= 0 or fn <= 0 or fd <= 0:
-        return None
-    return w, h, fn, fd, nl + 1, chroma
-
-
-def is_y4m(payload: bytes | None) -> bool:
-    """True if the payload is a YUV4MPEG2 (Y4M) stream of a chroma layout
-    we decode — the uncompressed video interchange format: a text header
-    plus raw YCbCr frames, so real video decode with no codec at all."""
-    hdr = _y4m_header(payload)
-    return hdr is not None and hdr[5] in _Y4M_CHROMA
-
-
-def _y4m_frame_rgb(payload: bytes, frame_idx: int = 0) -> tuple[int, int, bytes]:
-    """Decode one frame of a Y4M stream to top-down RGB (full-range
-    BT.601/JFIF matrix — Y4M carries no range metadata, so full range is
-    the deterministic documented choice)."""
-    hdr = _y4m_header(payload)
-    if hdr is None or hdr[5] not in _Y4M_CHROMA:
-        raise ValueError("not a decodable Y4M stream")
-    width, height, _fn, _fd, pos, chroma = hdr
-    sub = _Y4M_CHROMA[chroma]
-    ysize = width * height
-    if sub is None:
-        csize = 0
-        cw = ch_ = 0
-    else:
-        cw = (width + sub[0] - 1) // sub[0]
-        ch_ = (height + sub[1] - 1) // sub[1]
-        csize = cw * ch_
-    frame_bytes = ysize + 2 * csize
-    for _ in range(frame_idx + 1):
-        nl = payload.find(b"\n", pos)
-        if nl < 0 or payload[pos : pos + 5] != b"FRAME":
-            raise ValueError("truncated Y4M: frame header missing")
-        start = nl + 1
-        if len(payload) < start + frame_bytes:
-            raise ValueError("truncated Y4M: incomplete frame payload")
-        pos = start + frame_bytes
-    yp = payload[start : start + ysize]
-    cbp = payload[start + ysize : start + ysize + csize]
-    crp = payload[start + ysize + csize : start + frame_bytes]
-    rgb = bytearray(ysize * 3)
-    for y in range(height):
-        for x in range(width):
-            yy = yp[y * width + x]
-            if sub is None:
-                rr = gg = bb = float(yy)
-            else:
-                ci = (y // sub[1]) * cw + (x // sub[0])
-                cb, cr = cbp[ci], crp[ci]
-                rr = yy + 1.402 * (cr - 128)
-                gg = yy - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
-                bb = yy + 1.772 * (cb - 128)
-            d = (y * width + x) * 3
-            rgb[d] = 0 if rr < 0 else (255 if rr > 255 else int(rr + 0.5))
-            rgb[d + 1] = 0 if gg < 0 else (255 if gg > 255 else int(gg + 0.5))
-            rgb[d + 2] = 0 if bb < 0 else (255 if bb > 255 else int(bb + 0.5))
-    return width, height, bytes(rgb)
-
-
-def y4m_frame_count(payload: bytes) -> int:
-    """Number of complete frames in a Y4M stream (header walk only)."""
-    hdr = _y4m_header(payload)
-    if hdr is None or hdr[5] not in _Y4M_CHROMA:
-        raise ValueError("not a decodable Y4M stream")
-    width, height, _fn, _fd, pos, chroma = hdr
-    sub = _Y4M_CHROMA[chroma]
-    csize = 0 if sub is None else (
-        ((width + sub[0] - 1) // sub[0]) * ((height + sub[1] - 1) // sub[1])
-    )
-    frame_bytes = width * height + 2 * csize
-    n = 0
-    while payload[pos : pos + 5] == b"FRAME":
-        nl = payload.find(b"\n", pos)
-        if nl < 0 or len(payload) < nl + 1 + frame_bytes:
-            break
-        n += 1
-        pos = nl + 1 + frame_bytes
-    return n
-
-
-def decode_y4m(payload: bytes) -> tuple[int, int, list[float]]:
-    """REAL decode of a Y4M video's first frame (the convention GIF's
-    first frame established) — raw-plane parse + BT.601 conversion, then
-    the shared FEATURE_DIM statistics."""
-    width, height, rgb = _y4m_frame_rgb(payload, 0)
-    return width, height, _rgb_stats(width, height, rgb)
-
-
-def _decode_one(payload: bytes | None, fake: bool) -> list[float] | None:
+def _decode_one(payload: bytes | None) -> list[float] | None:
     if payload is None:
         return None
-    if not fake:
-        if is_bmp(payload):
-            return decode_bmp(payload)[2]
-        if is_png(payload):
-            return decode_png(payload)[2]
-        if is_gif(payload):
-            return decode_gif(payload)[2]
-        if is_jpeg(payload):
-            return decode_jpeg(payload)[2]
-        if is_wav(payload):
-            return decode_wav(payload)[3]
-        if is_y4m(payload):
-            return decode_y4m(payload)[2]
-        raise NotImplementedError(
-            "real decode beyond BMP/PNG/GIF/JPEG/WAV/Y4M requires "
-            "Pillow/torchaudio — not in this container"
-        )
-    # deterministic fake: 8 floats derived from the content hash. 16-bit
-    # slices / 2^16 are exactly representable in float32 AND exactly
-    # recomputable as doubles in a SQL oracle (hex-substr cast), so the
-    # values survive the float32 column type without precision drift.
+    # 8 floats derived from the content hash. 16-bit slices / 2^16 are
+    # exactly representable in float32 AND exactly recomputable as doubles
+    # in a SQL oracle (hex-substr cast), so the values survive the float32
+    # column type without precision drift.
     h = hashlib.sha256(payload).digest()
     return [int.from_bytes(h[i * 2 : i * 2 + 2], "big") / 65536.0 for i in range(FEATURE_DIM)]
 
 
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Binary → fixed-dim feature vectors via mapInPandas (Arrow batches).
 
     The 100 TB shape: repartition by media_id so decode work spreads evenly,
@@ -802,165 +77,11 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
                 {
                     "media_id": pdf["media_id"],
                     "n_bytes": pdf["payload"].map(lambda b: 0 if b is None else len(b)).astype("int64"),
-                    "feature": pdf["payload"].map(lambda b: _decode_one(b, fake)),
+                    "feature": pdf["payload"].map(_decode_one),
                 }
             )
 
     return media.select("media_id", "payload").mapInPandas(batches, FEATURES_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
-
-def _bmp_rgb(payload: bytes) -> tuple[int, int, bytes]:
-    """Extract a top-down row-major RGB byte string from an uncompressed
-    24-bit BMP (inverse of ``_encode_bmp``); handles row padding and
-    bottom-up vs top-down storage."""
-    data_offset = struct.unpack_from("<I", payload, 10)[0]
-    width, height_raw = struct.unpack_from("<ii", payload, 18)
-    height = abs(height_raw)
-    if width <= 0 or height == 0:
-        raise ValueError("BMP with non-positive dimensions")
-    row_bytes = width * 3
-    stride = (row_bytes + 3) & ~3
-    if len(payload) < data_offset + stride * height:
-        raise ValueError("truncated BMP")
-    rgb = bytearray(width * height * 3)
-    for r in range(height):
-        src = r if height_raw < 0 else height - 1 - r  # bottom-up unless negative
-        row = payload[data_offset + src * stride : data_offset + src * stride + row_bytes]
-        for c in range(width):
-            b, g, rr = row[c * 3], row[c * 3 + 1], row[c * 3 + 2]
-            base = (r * width + c) * 3
-            rgb[base] = rr
-            rgb[base + 1] = g
-            rgb[base + 2] = b
-    return width, height, bytes(rgb)
-
-
-def _encode_bmp(width: int, height: int, rgb: bytes) -> bytes:
-    """Serialize a top-down row-major RGB raster as an uncompressed
-    bottom-up 24-bit BMP (4-byte-padded rows) — the resample output
-    container, chosen because it round-trips through ``decode_bmp``."""
-    row_bytes = width * 3
-    stride = (row_bytes + 3) & ~3
-    pad = b"\x00" * (stride - row_bytes)
-    body = bytearray()
-    for r in range(height - 1, -1, -1):  # bottom-up storage
-        for c in range(width):
-            base = (r * width + c) * 3
-            body += bytes((rgb[base + 2], rgb[base + 1], rgb[base]))
-        body += pad
-    offset = 14 + 40
-    hdr = b"BM" + struct.pack("<IHHI", offset + len(body), 0, 0, offset)
-    info = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return bytes(hdr + info + body)
-
-
-def _raster_rgb(payload: bytes) -> tuple[int, int, bytes] | None:
-    """(width, height, top-down RGB bytes) for any raster format we decode
-    for real (24-bit BMP, 8-bit PNG, GIF first frame, sequential JPEG,
-    Y4M first frame), else None."""
-    if is_bmp(payload):
-        return _bmp_rgb(payload)
-    if is_png(payload):
-        return _png_rgb(payload)
-    if is_gif(payload):
-        return _gif_first_frame(payload)
-    if is_jpeg(payload):
-        return jpeg_rgb(payload)
-    if is_y4m(payload):
-        return _y4m_frame_rgb(payload, 0)
-    return None
-
-
-def _nearest_resample(width: int, height: int, rgb: bytes, nw: int, nh: int) -> bytes:
-    """Nearest-neighbor resample of a top-down RGB raster — pure integer
-    arithmetic (pixel-center mapping ⌊(i+0.5)·src/dst⌋ via (2i+1)·src//(2·dst)),
-    deterministic and library-free."""
-    out = bytearray(nw * nh * 3)
-    for y in range(nh):
-        sy = min(height - 1, ((2 * y + 1) * height) // (2 * nh))
-        for x in range(nw):
-            sx = min(width - 1, ((2 * x + 1) * width) // (2 * nw))
-            src = (sy * width + sx) * 3
-            dst = (y * nw + x) * 3
-            out[dst : dst + 3] = rgb[src : src + 3]
-    return bytes(out)
-
-
-def _resize_dims(w: int | None, h: int | None, max_side: int) -> tuple[int, int] | None:
-    if not w or not h:
-        return None
-    if max(w, h) <= max_side:
-        return w, h
-    scale = max_side / max(w, h)
-    return max(1, round(w * scale)), max(1, round(h * scale))
-
-
-def resize_images(media: DataFrame, max_side: int = 256, fake: bool = True) -> DataFrame:
-    """Image resize over Arrow batches. Aspect-preserving target dims are
-    pure arithmetic; the resample itself is REAL for the rasters we decode
-    (BMP/PNG/GIF in → nearest-neighbor → 24-bit BMP out, dims taken from the
-    bytes rather than the metadata columns) when ``fake=False``, and a
-    NotImplementedError stub only for undecodable compressed formats.
-    ``fake=True`` keeps the deterministic content-hash placeholder sized
-    from the metadata dims. Rows without dimensions pass through with
-    null payload (the errors-side convention)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "width": [], "height": [], "payload": []}
-            for mid, w, h, payload in zip(
-                pdf["media_id"], pdf["width"], pdf["height"], pdf["payload"]
-            ):
-                out["media_id"].append(mid)
-                if not fake and payload is not None:
-                    raster = _raster_rgb(bytes(payload))
-                    if raster is None:
-                        raise NotImplementedError(
-                            "real resample beyond BMP/PNG/GIF rasters requires "
-                            "Pillow — not in this container"
-                        )
-                    rw, rh, rgb = raster
-                    nw, nh = _resize_dims(rw, rh, max_side)
-                    out["width"].append(nw)
-                    out["height"].append(nh)
-                    if (nw, nh) == (rw, rh):
-                        out["payload"].append(bytes(payload))  # under max: untouched
-                    else:
-                        out["payload"].append(
-                            _encode_bmp(nw, nh, _nearest_resample(rw, rh, rgb, nw, nh))
-                        )
-                    continue
-                dims = _resize_dims(
-                    None if pd.isna(w) else int(w), None if pd.isna(h) else int(h), max_side
-                )
-                if dims is None or payload is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["payload"].append(None)
-                    continue
-                nw, nh = dims
-                seed = hashlib.sha256(payload).digest()
-                fake_px = (seed * ((nw * nh * 3) // len(seed) + 1))[: nw * nh * 3]
-                out["width"].append(nw)
-                out["height"].append(nh)
-                out["payload"].append(fake_px)
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "width", "height", "payload")
-        .mapInPandas(batches, RESIZED_SCHEMA)
-    )
 
 
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -974,63 +95,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                 F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
             ).alias("frame_ts_ms"),
         )
-    )
-
-
-FRAME_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("frame_ts_ms", LongType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("feature", ArrayType(FloatType()), True),
-    ]
-)
-
-
-def sample_frame_features(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL video frame sampling over Arrow batches: for every decodable
-    video payload (Y4M), decode the frame nearest each ``every_ms``
-    timestamp and emit its FEATURE_DIM statistics — one row per sampled
-    frame. Undecodable video payloads raise (the compressed-video stub);
-    null payloads emit nothing (errors-side convention).
-
-    The 100 TB shape matches ``extract_features``: payload bytes stay in
-    the executors, work spreads by repartitioning on media_id, and each
-    Arrow batch bounds memory to its own frames.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "frame_ts_ms": [], "width": [], "height": [], "feature": []}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                payload = bytes(payload)
-                if not is_y4m(payload):
-                    raise NotImplementedError(
-                        "real frame sampling beyond Y4M requires a video "
-                        "codec — not in this container"
-                    )
-                w, h, fn, fd, _pos, _chroma = _y4m_header(payload)
-                n_frames = y4m_frame_count(payload)
-                duration_ms = n_frames * 1000 * fd / fn
-                ts = 0
-                while ts < duration_ms:
-                    idx = min(n_frames - 1, int(ts * fn / (1000 * fd)))
-                    fw, fh, rgb = _y4m_frame_rgb(payload, idx)
-                    out["media_id"].append(mid)
-                    out["frame_ts_ms"].append(ts)
-                    out["width"].append(fw)
-                    out["height"].append(fh)
-                    out["feature"].append(_rgb_stats(fw, fh, rgb))
-                    ts += every_ms
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload")
-        .mapInPandas(batches, FRAME_FEATURES_SCHEMA)
     )
 
 
