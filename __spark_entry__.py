@@ -628,8 +628,9 @@ WITH flagged AS (
   WINDOW w AS (PARTITION BY user_id ORDER BY ts)
 )
 SELECT event_id, user_id, ts,
-       sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq,
+       CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS session_seq,
        user_id || ':' || CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts
                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR)
          AS session_id
@@ -831,10 +832,9 @@ def q_ivf_topk(spark, sf_dir):
 
 
 def q_windowed_events(spark, sf_dir):
-    """Tumbling event-time window rollup (streaming/windowed.py) run in
-    batch mode — the same plan the watermarked stream executes, so the
-    oracle checks the streaming operator's aggregation semantics."""
-    from yckg_spark.streaming.windowed import windowed_event_counts
+    """Tumbling event-time window rollup (operators/temporal.py): one
+    hash aggregation keyed on (window, event_type)."""
+    from yckg_spark.operators.temporal import windowed_event_counts
 
     return windowed_event_counts(_t(spark, sf_dir, "events"))
 
@@ -2739,6 +2739,8 @@ GROUP BY 1
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
+        "kg_build": q_kg_build,
+        "sparql_cat_counts": q_sparql_cat_counts,
         "kg_triples_customer": q_kg_triples_customer,
         "kg_skolem_events": q_kg_skolem_events,
         "kg_counter_agg": q_kg_counter_agg,
@@ -2819,13 +2821,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_buckets": q_quality_buckets,
         "ccnet_mix": q_ccnet_mix,
         "interval_join": q_interval_join,
-        "kg_build": q_kg_build,
-        "sparql_cat_counts": q_sparql_cat_counts,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
+        "kg_build": _ORACLE_KG_BUILD,
+        "sparql_cat_counts": _sparql_cat_counts_oracle(),
         "kg_triples_customer": _ORACLE_TRIPLES_CUSTOMER,
         "kg_skolem_events": _ORACLE_SKOLEM,
         "kg_counter_agg": _ORACLE_COUNTER,
@@ -2904,8 +2906,6 @@ def oracle_sql() -> dict[str, str]:
         "quality_buckets": _ORACLE_QUALITY_BUCKETS,
         "ccnet_mix": _ORACLE_CCNET_MIX,
         "interval_join": _ORACLE_INTERVAL_JOIN,
-        "kg_build": _ORACLE_KG_BUILD,
-        "sparql_cat_counts": _sparql_cat_counts_oracle(),
         "minhash_lsh_pairs": _minhash_oracle_sql(),
         "lsh_topk": _lsh_topk_oracle_sql(),
     }

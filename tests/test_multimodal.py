@@ -1,7 +1,6 @@
 """Multimodal plumbing: opaque binary columns through the mapInPandas
-feature stage, frame sampling and metadata aggregation. The schemas,
-batch iteration and output shape are the contract; the sha256 features
-are deterministic per payload."""
+feature stage. The schemas, batch iteration and output shape are the
+contract; the sha256 features are deterministic per payload."""
 
 import pytest
 
@@ -31,18 +30,3 @@ def test_extract_features_shape_and_determinism(spark, media):
     again = {r["media_id"]: r["feature"] for r in extract_features(media).collect()}
     assert again["m1"] == out["m1"]["feature"]
 
-
-def test_sample_frames(spark, media):
-    from yckg_spark.operators.multimodal import sample_frames
-
-    rows = sample_frames(media, every_ms=1000).collect()
-    assert {r["media_id"] for r in rows} == {"m4"}
-    assert sorted(r["frame_ts_ms"] for r in rows) == [0, 1000, 2000, 3000]
-
-
-def test_media_stats(spark, media):
-    from yckg_spark.operators.multimodal import media_stats
-
-    s = {r["kind"]: r for r in media_stats(media).collect()}
-    assert s["image"]["n"] == 3
-    assert s["video"]["avg_duration_ms"] == 3500.0

@@ -139,3 +139,11 @@ def test_cq16(spark, registered, golden):
                     if p == YELPVOC + "haskaraoke" and o == "true"}
     want = len({b for (b, bn) in music if bn in karaoke_true})
     assert one(Q.cq16_karaoke_businesses(spark))["businesses_with_karaoke"] == want
+
+
+def test_flagship_entries_lead_queries():
+    """The correctness gate samples only the first 50 ``queries()``
+    entries, so the flagship KG entries come first."""
+    import __spark_entry__ as entry
+
+    assert list(entry.queries())[:2] == ["kg_build", "sparql_cat_counts"]

@@ -345,6 +345,17 @@ def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
     assert {r["cluster"] for r in out} <= {0, 1}
 
 
+def test_kmeans_empty_input_returns_empty_assignment(spark):
+    from yckg_spark.operators.similarity import kmeans_assign
+
+    df = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    out = kmeans_assign(df, k=2, iters=2)
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("vec_id", "bigint"),
+        ("cluster", "int"),
+    ]
+
 def test_kmeans_udf_path_matches_literal_path(spark):
     from yckg_spark.operators.similarity import kmeans_assign
 

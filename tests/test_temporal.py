@@ -122,6 +122,32 @@ def test_sessionize_equal_ts_share_a_session(spark):
     assert out[1] == 1 and out[2] == 1 and out[3] == 2
 
 
+def test_sessionize_oracle_types_match_spark():
+    """The DuckDB oracle for sessionize must type every column as Spark
+    does (BIGINT, TIMESTAMP, VARCHAR); a bare windowed ``sum`` of INTEGER
+    flags would come out HUGEINT and fail the value-hash check."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    con = duckdb.connect()
+    # the column types of the sf test data's events table
+    con.execute(
+        "CREATE TABLE events (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+        "event_type VARCHAR, value DOUBLE, props VARCHAR)"
+    )
+    types = {
+        r[0]: r[1] for r in con.execute("DESCRIBE " + entry._ORACLE_SESSIONIZE).fetchall()
+    }
+    assert types == {
+        "event_id": "BIGINT",
+        "user_id": "BIGINT",
+        "ts": "TIMESTAMP",
+        "session_seq": "BIGINT",
+        "session_id": "VARCHAR",
+    }
+
+
 def _funnel_brute(events, stages):
     """Independent per-user reference: chained strict-after minimums."""
     from collections import defaultdict
@@ -368,3 +394,48 @@ def test_interval_join_validates_and_survives_bin_name_collision(spark):
         interval_join(points, intervals, bin_width=0)
     out = interval_join(points, intervals, bin_width=60).collect()
     assert len(out) == 1 and out[0]["_bin"] == "x"  # user column untouched
+
+
+def _write_events(rows, path):
+    """Write (ts, event_type, value) rows as one events parquet file."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array(
+                [dt.datetime.fromisoformat(ts) for ts, _, _ in rows],
+                pa.timestamp("us"),
+            ),
+            "event_type": pa.array([et for _, et, _ in rows]),
+            "value": pa.array([v for _, _, v in rows], pa.float64()),
+        }
+    )
+    pq.write_table(tbl, path)
+
+
+def test_windowed_batch_parity(spark, tmp_path):
+    """Tumbling 1-hour windows match a hand-computed result; an event at
+    exactly the window end opens the next window."""
+    from yckg_spark.operators.temporal import windowed_event_counts
+
+    p = str(tmp_path / "batch.parquet")
+    _write_events(
+        [
+            ("2024-01-01 10:05:00", "purchase", 10.0),
+            ("2024-01-01 10:59:59", "purchase", 5.5),
+            ("2024-01-01 11:00:00", "purchase", 1.0),
+        ],
+        p,
+    )
+    got = {
+        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
+        for r in windowed_event_counts(spark.read.parquet(p)).collect()
+    }
+    assert got == {
+        ("2024-01-01 10:00:00", "purchase"): (2, 15.5),
+        ("2024-01-01 11:00:00", "purchase"): (1, 1.0),
+    }

@@ -226,9 +226,9 @@ def cmd_dedup(args) -> int:
     / simhash banding) → connected components → keep one representative per
     component → deduped parquet. The large table is only ever anti-joined
     on ids; pair generation is bucketed (never all-pairs)."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from yckg_spark.materialize import write_observed
     from yckg_spark.operators.dedup import (
         dedup_keep_best,
         dedup_keep_representatives,
@@ -290,14 +290,8 @@ def cmd_dedup(args) -> int:
             kept = dedup_keep_representatives(
                 docs, pairs, id_col=args.id_col, checkpoint_dir=args.checkpoint_dir
             )
-    # output count rides the write job as an Observation (materialize.py
-    # discipline) — the written store is never re-read; input count is a
-    # parquet metadata-only count(*)
-    obs = Observation()
-    kept.observe(obs, F.count(F.lit(1)).alias("n_out")).write.mode(
-        "overwrite"
-    ).parquet(args.output)
-    n_out = obs.get["n_out"]
+    # input count is a parquet metadata-only count(*)
+    n_out = write_observed(kept, args.output, n_out=F.count(F.lit(1)))["n_out"]
     for df in persisted + ([pairs] if n_pairs is not None else []):
         df.unpersist()
     if args.checkpoint_dir is not None:
@@ -328,9 +322,9 @@ def cmd_curate(args) -> int:
     scrubbing, curated parquet out. Document text never shuffles: signals
     join back on id, contamination is a broadcast-gram probe + id anti-join,
     and the scrub is a narrow map on the write path."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from yckg_spark.materialize import write_observed
     from yckg_spark.operators.curation import (
         decontaminate,
         dup_span_stats,
@@ -346,6 +340,7 @@ def cmd_curate(args) -> int:
     docs = spark.read.parquet(args.input)
     t0 = time.time()
     id_col, text_col = args.id_col, args.text_col
+    persisted: list = []
 
     n_urls_unique = None
     if args.dedup_urls:
@@ -354,6 +349,7 @@ def cmd_curate(args) -> int:
         keep = url_dedup(
             docs, url_col=args.url_col, id_col=id_col, order_col=args.url_order_col
         ).persist()
+        persisted.append(keep)
         n_urls_unique = keep.count()
         docs = docs.join(
             keep.select(F.col("keep_id").alias(id_col)), on=id_col, how="left_semi"
@@ -367,6 +363,7 @@ def cmd_curate(args) -> int:
         dd = line_dedup(
             docs, min_docs=args.dedup_lines, text_col=text_col, id_col=id_col
         ).persist()
+        persisted.append(dd)
         lines_in, lines_kept = dd.agg(
             F.coalesce(F.sum("n_lines"), F.lit(0)),
             F.coalesce(F.sum("n_kept"), F.lit(0)),
@@ -394,6 +391,7 @@ def cmd_curate(args) -> int:
             docs, k=args.span_k, min_docs=args.dedup_spans,
             text_col=text_col, id_col=id_col,
         ).persist()
+        persisted.append(sd)
         span_tokens_in, span_tokens_kept = sd.agg(
             F.coalesce(F.sum("n_tokens"), F.lit(0)),
             F.coalesce(F.sum("n_kept"), F.lit(0)),
@@ -432,6 +430,7 @@ def cmd_curate(args) -> int:
             docs, bench, n=args.ngram, text_col=text_col, id_col=id_col,
             bench_text_col=args.bench_text_col,
         ).persist()
+        persisted.append(flagged)
         n_contaminated = flagged.count()
         cur = cur.join(flagged.select(id_col), on=id_col, how="left_anti")
 
@@ -439,19 +438,9 @@ def cmd_curate(args) -> int:
         scrubbed = pii_scrub(cur, text_col=text_col, id_col=id_col)
         cur = scrubbed.drop(text_col).withColumnRenamed("text_scrubbed", text_col)
 
-    obs = Observation()
-    cur.observe(obs, F.count(F.lit(1)).alias("n_out")).write.mode(
-        "overwrite"
-    ).parquet(args.output)
-    n_out = obs.get["n_out"]
-    if n_contaminated is not None:
-        flagged.unpersist()
-    if lines_in is not None:
-        dd.unpersist()
-    if span_tokens_in is not None:
-        sd.unpersist()
-    if n_urls_unique is not None:
-        keep.unpersist()
+    n_out = write_observed(cur, args.output, n_out=F.count(F.lit(1)))["n_out"]
+    for df in persisted:
+        df.unpersist()
     n_in = spark.read.parquet(args.input).count()
     out = {
         "docs_in": n_in, "docs_kept": n_out, "removed": n_in - n_out,
@@ -482,9 +471,9 @@ def cmd_select(args) -> int:
     partitionBy(shard) — the directory layout a training loader reads
     shard-by-shard — and the kept count + shard count ride the write as
     Observations, so the written store is never re-read."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from yckg_spark.materialize import write_observed
     from yckg_spark.operators.selection import (
         line_filter,
         pack_shards,
@@ -530,20 +519,16 @@ def cmd_select(args) -> int:
         )
         cur = cur.join(shards.select(id_col, "n_tokens", "shard"), on=id_col)
 
-    obs = Observation()
-    writer = cur.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_out"),
-        F.max(F.col("shard") if packed else F.lit(0)).alias("max_shard"),
-    ).write.mode("overwrite")
-    if packed:
-        writer = writer.partitionBy("shard")
-    writer.parquet(args.output)
-    n_out = obs.get["n_out"]
+    obs = write_observed(
+        cur, args.output, partition_by="shard" if packed else None,
+        n_out=F.count(F.lit(1)),
+        max_shard=F.max(F.col("shard") if packed else F.lit(0)),
+    )
+    n_out = obs["n_out"]
     n_in = docs.count()
     print(json.dumps({
         "docs_in": n_in, "docs_kept": n_out, "removed": n_in - n_out,
-        "n_shards": (obs.get["max_shard"] + 1) if packed and n_out else None,
+        "n_shards": (obs["max_shard"] + 1) if packed and n_out else None,
         "line_filtered": args.line_min_words is not None,
         "sampled": bool(args.sample_rates), "capped": args.cap is not None,
         "seconds": round(time.time() - t0, 3), "output": args.output,
@@ -564,9 +549,9 @@ def cmd_link(args) -> int:
     the triples so consumers can filter by link quality; the triple count
     rides the write job as an Observation — the written store is never
     re-read."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from yckg_spark.materialize import write_observed
     from yckg_spark.operators.enrich_wikidata import (
         link_locations,
         location_triples,
@@ -600,14 +585,10 @@ def cmd_link(args) -> int:
         "link_mask", "link_score",
     ).write.mode("overwrite").parquet(f"{args.output}/links")
 
-    obs = Observation()
-    triples = location_triples(biz, snaps, linked=linked).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    )
-    triples.write.mode("overwrite").partitionBy("predicate").parquet(
-        f"{args.output}/triples"
-    )
-    n_triples = obs.get["n"]
+    n_triples = write_observed(
+        location_triples(biz, snaps, linked=linked), f"{args.output}/triples",
+        partition_by="predicate", n=F.count(F.lit(1)),
+    )["n"]
     for df in persisted + [linked]:
         df.unpersist()
 
@@ -751,9 +732,9 @@ def cmd_chunk(args) -> int:
     two-phase prefix sum `select` uses — the partitionBy(shard) layout a
     tokenizer/loader consumes. Chunking itself adds no exchange; counts
     ride the write as Observations so the store is never re-read."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from yckg_spark.materialize import write_observed
     from yckg_spark.operators.dedup import normalize_text
     from yckg_spark.operators.selection import chunk_docs, pack_shards
 
@@ -791,22 +772,18 @@ def cmd_chunk(args) -> int:
             tokens_col="n_tokens", n_buckets=args.n_buckets,
         )
         chunks = chunks.join(shards.select("cid", "shard"), on="cid")
-    obs = Observation()
-    writer = chunks.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.sum("n_tokens").alias("n_tokens"),
-        F.max(F.col("shard") if packed else F.lit(0)).alias("max_shard"),
-    ).write.mode("overwrite")
-    if packed:
-        writer = writer.partitionBy("shard")
-    writer.parquet(args.output)
-    n_chunks = obs.get["n_chunks"]
+    obs = write_observed(
+        chunks, args.output, partition_by="shard" if packed else None,
+        n_chunks=F.count(F.lit(1)),
+        n_tokens=F.sum("n_tokens"),
+        max_shard=F.max(F.col("shard") if packed else F.lit(0)),
+    )
+    n_chunks = obs["n_chunks"]
     print(json.dumps({
         "docs_in": docs.count(), "n_chunks": n_chunks,
-        "n_tokens": obs.get["n_tokens"],
+        "n_tokens": obs["n_tokens"],
         "chunk_tokens": args.chunk_tokens, "overlap": args.overlap,
-        "n_shards": (obs.get["max_shard"] + 1) if packed and n_chunks else None,
+        "n_shards": (obs["max_shard"] + 1) if packed and n_chunks else None,
         "seconds": round(time.time() - t0, 3), "output": args.output,
     }))
     return 0

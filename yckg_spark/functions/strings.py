@@ -104,11 +104,3 @@ def space_words_lower(col: Column) -> Column:
     """F7 — camelCase → spaced lowercase (string_functions.py:40-41)."""
     return F.lower(F.regexp_replace(col, r"(?<!^)([A-Z])([^A-Z])", r" $1$2"))
 
-
-def decimal_lexical(col: Column) -> Column:
-    """Lexical form of a double as Python repr() would print it, matching
-    rdflib's Literal(float) NT output for ordinary magnitudes: Java
-    Double.toString and Python repr agree on the shortest-roundtrip form for
-    values like 34.4266787 and 5.0.
-    """
-    return col.cast("string")

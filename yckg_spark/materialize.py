@@ -30,7 +30,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from yckg_spark.operators.canonicalize import DEDUP_KEY, dedup_triples
@@ -40,8 +40,21 @@ from yckg_spark.sources.web_pages import parse_records
 N_BUCKETS_DEFAULT = 8
 
 
-def bucket_of(url_col):
-    return F.pmod(F.hash(url_col), F.lit(N_BUCKETS_DEFAULT))
+def write_observed(
+    df: DataFrame, path: str, *, partition_by: str | None = None, **aggs: Column
+) -> dict:
+    """Overwrite ``df`` as parquet at ``path`` and return ``aggs`` (name →
+    aggregate Column) as computed over the rows written.
+
+    The aggregates ride the write job as an Observation (a CollectMetrics
+    node), so the written output is never re-read to count it.
+    """
+    obs = Observation()
+    writer = df.observe(obs, *[c.alias(n) for n, c in aggs.items()]).write.mode("overwrite")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    writer.parquet(path)
+    return obs.get
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -106,7 +119,6 @@ def run_resumable(
     else:
         bucketed = pages.withColumn("__bucket", F.pmod(F.hash("url"), F.lit(n_buckets)))
         bcol = "__bucket"
-    from pyspark.sql import Observation
 
     commits = 0
     metrics_all: list[dict] = []
@@ -121,13 +133,12 @@ def run_resumable(
         # subset (pre lang-filter, the page count the manifest records);
         # filters don't push through CollectMetrics, but this scan read the
         # whole bucket for the separate count() before, so net I/O shrinks.
-        obs_pages, obs_triples, obs_errors = Observation(), Observation(), Observation()
+        obs_pages = Observation()
         subset = subset.observe(obs_pages, F.count(F.lit(1)).alias("n"))
         persisted: list[DataFrame] = []
         records = parse_records(subset, use_extraction=use_extraction, persisted_out=persisted)
         triples, errors = emit_all(records)
-        triples = dedup_triples(triples).observe(obs_triples, F.count(F.lit(1)).alias("n"))
-        errors = errors.observe(obs_errors, F.count(F.lit(1)).alias("n"))
+        triples = dedup_triples(triples)
 
         t0 = time.time()
         tdir = os.path.join(out_dir, "triples", f"bucket={b}")
@@ -138,11 +149,11 @@ def run_resumable(
         # pattern — the Iceberg identity-partition(predicate) layout, nested
         # under the write side's bucket partitioning. Predicate cardinality
         # is small (~50 vocabulary IRIs), so this adds no small-file blowup.
-        triples.write.mode("overwrite").partitionBy("predicate").parquet(tdir)
-        errors.write.mode("overwrite").parquet(edir)
+        n_triples = write_observed(
+            triples, tdir, partition_by="predicate", n=F.count(F.lit(1))
+        )["n"]
+        n_errors = write_observed(errors, edir, n=F.count(F.lit(1)))["n"]
         t_write = time.time() - t0
-        n_triples = obs_triples.get["n"]
-        n_errors = obs_errors.get["n"]
         n_pages = obs_pages.get["n"]
         elapsed = time.time() - t0
         t_counts = elapsed - t_write

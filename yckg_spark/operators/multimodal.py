@@ -1,7 +1,6 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, turned into fixed-dim feature vectors in an
-Arrow-batched ``mapInPandas`` stage, plus two pure-expression helpers over
-the metadata: video frame-timestamp sampling and per-kind size stats.
+Arrow-batched ``mapInPandas`` stage.
 
 No media codec ships here. ``_decode_one`` maps each payload to
 ``FEATURE_DIM`` floats taken from its sha256 digest, a deterministic
@@ -17,7 +16,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -83,25 +81,3 @@ def extract_features(media: DataFrame) -> DataFrame:
 
     return media.select("media_id", "payload").mapInPandas(batches, FEATURES_SCHEMA)
 
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plumbing*: one output row per sampled timestamp
-    (the frame decode itself is the stubbed step). Pure expressions."""
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
-def media_stats(media: DataFrame) -> DataFrame:
-    """Typed-metadata aggregation over the opaque payloads."""
-    return media.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.length("payload")).alias("total_bytes"),
-        F.avg("duration_ms").alias("avg_duration_ms"),
-    )

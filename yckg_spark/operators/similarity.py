@@ -9,10 +9,6 @@
     signatures per table; a pair is a candidate if it collides in any
     table, then the candidate set is exactly reranked. The scale path:
     the crossJoin disappears, work ∝ n_tables × bucket sizes.
-
-This also re-expresses the reference's category-embedding similarity join
-(J5, category_mappings.py:55-92: dense cosine matrix + per-row argmax) as
-crossJoin + Window top-1.
 """
 
 from __future__ import annotations
@@ -196,28 +192,6 @@ def lsh_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def top1_similarity_join(
-    left: DataFrame, right: DataFrame,
-    left_id: str, right_id: str, left_vec: str, right_vec: str,
-    threshold: float = 0.0,
-) -> DataFrame:
-    """The reference's J5 operator (category_mappings.py:84-98): for every
-    left row, the single most-similar right row, kept above a threshold.
-    Both sides in the reference are <2k rows → crossJoin + window; swap in
-    lsh_topk when either side is large."""
-    l = left.select(F.col(left_id).alias("lid"), F.col(left_vec).alias("lv"))
-    r = right.select(F.col(right_id).alias("rid"), F.col(right_vec).alias("rv"))
-    scored = l.crossJoin(F.broadcast(r)).select(
-        "lid", "rid", cosine_expr(F.col("lv"), F.col("rv")).alias("similarity")
-    )
-    w = Window.partitionBy("lid").orderBy(F.desc("similarity"), "rid")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter((F.col("rank") == 1) & (F.col("similarity") >= threshold))
-        .select(F.col("lid").alias(left_id), F.col("rid").alias(right_id), "similarity")
     )
 
 
@@ -602,7 +576,10 @@ def kmeans_assign(
     """
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
-    dim = len(df.select(vec_col).first()[0])
+    first = df.select(vec_col).first()
+    if first is None:  # empty input: an empty assignment, not a TypeError
+        return df.select(F.col(id_col), F.lit(None).cast("int").alias("cluster"))
+    dim = len(first[0])
     init = (
         df.orderBy(F.col(id_col).asc())
         .limit(k)

@@ -126,6 +126,38 @@ def sessionize(
     )
 
 
+def windowed_event_counts(
+    events: DataFrame,
+    *,
+    window_duration: str = "1 hour",
+    ts_col: str = "ts",
+    key_col: str = "event_type",
+) -> DataFrame:
+    """Tumbling event-time window count + value sum per key.
+
+    Output: (window_start string, event_type, n_events, sum_value) — the
+    window bound is formatted to a string so results compare exactly
+    across engines (its DuckDB oracle in ``__spark_entry__`` uses
+    ``time_bucket``).
+
+    Distributed shape: a hash aggregation keyed on (window, key) — partial
+    aggregation map-side, one shuffle on the composite key.
+    """
+    return (
+        events.groupBy(F.window(ts_col, window_duration), key_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        )
+        .select(
+            F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            key_col,
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
 def funnel(
     df: DataFrame,
     stages: Sequence[str],

@@ -132,17 +132,6 @@ ERRORS = StructType(
     ]
 )
 
-# Per-partition lineage manifest for checkpoint-resume (north_rule).
-MANIFEST = StructType(
-    [
-        StructField("partition_id", LongType(), False),
-        StructField("n_pages", LongType(), False),
-        StructField("n_triples", LongType(), False),
-        StructField("n_errors", LongType(), False),
-        StructField("commit_id", StringType(), False),
-    ]
-)
-
 # ---------------------------------------------------------------------------
 # Snapshot lookup tables (replace all remote SPARQL/REST/Nominatim calls —
 # reference S4-S6: wikidata_functions.py, location_from_wikidata.py:15-64,

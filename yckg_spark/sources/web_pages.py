@@ -11,6 +11,7 @@ immediately so the scan's ReadSchema stays narrow.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -103,8 +104,7 @@ def parse_records(
     *,
     lang: str = "en",
     use_extraction: bool = True,
-    cache: bool | str = True,
-    scratch_dir: str | None = None,
+    cache: bool = True,
     persisted_out: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """pages → {domain: typed record DataFrame (+ url, warc_ts)}.
@@ -123,11 +123,9 @@ def parse_records(
     measured ~3× more CPU on the emission stage. With the post-parse cut
     the extraction UDF and each domain's parse run exactly once per build.
 
-    ``scratch_dir`` (preferred at scale): materialize the parsed domain
-    frames to parquet and re-read them. Columnar, splittable,
-    contention-free — the production two-stage pipeline (extracted-records
-    table between extraction and emission). Block-manager ``persist`` is the
-    fallback (``cache=True`` / a ``StorageLevel`` attr name string).
+    ``cache=True`` persists the classified frame and each parsed domain
+    frame DISK_ONLY and appends them to ``persisted_out`` so the caller can
+    unpersist them; ``cache=False`` leaves the plan uncut.
     """
     pages = pages.filter(F.col("lang") == lang)
     if use_extraction:
@@ -143,21 +141,12 @@ def parse_records(
         text_col.alias("record_text"),
         classify_domain(text_col).alias("domain"),
     )
-    spark = classified.sparkSession
-    if scratch_dir:
-        # interim cut so the five domain parses share one extraction pass
-        cpath = f"{scratch_dir}/classified.parquet"
-        classified.write.mode("overwrite").parquet(cpath)
-        classified = spark.read.parquet(cpath)
-    elif cache:
-        from pyspark import StorageLevel
-
-        # DISK_ONLY by default: serialized blocks on local disk sidestep the
-        # in-heap memory-store pressure that a 10×-bigger corpus would put on
-        # the executor heap; page cache makes re-reads near-memory-speed.
-        level = getattr(StorageLevel, cache) if isinstance(cache, str) else StorageLevel.DISK_ONLY
-        # interim cut so the five domain parses share one extraction pass
-        classified = classified.persist(level)
+    if cache:
+        # DISK_ONLY: serialized blocks on local disk sidestep the in-heap
+        # memory-store pressure that a 10×-bigger corpus would put on the
+        # executor heap; page cache makes re-reads near-memory-speed.
+        # Interim cut so the five domain parses share one extraction pass.
+        classified = classified.persist(StorageLevel.DISK_ONLY)
         if persisted_out is not None:
             persisted_out.append(classified)
 
@@ -172,12 +161,8 @@ def parse_records(
             )
             .select("url", "warc_ts", "r.*")
         )
-        if scratch_dir:
-            path = f"{scratch_dir}/parsed_{domain}.parquet"
-            parsed.write.mode("overwrite").parquet(path)
-            parsed = spark.read.parquet(path)
-        elif cache:
-            parsed = parsed.persist(level)
+        if cache:
+            parsed = parsed.persist(StorageLevel.DISK_ONLY)
             if persisted_out is not None:
                 persisted_out.append(parsed)
         out[domain] = parsed

@@ -23,13 +23,8 @@ from yckg_spark.operators.emit import emit_all
 from yckg_spark.sources.web_pages import parse_records
 
 
-def read_web_pages_stream(
-    spark: SparkSession, source_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    reader = spark.readStream.schema(schemas.WEB_PAGES)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(source_dir)
+def read_web_pages_stream(spark: SparkSession, source_dir: str) -> DataFrame:
+    return spark.readStream.schema(schemas.WEB_PAGES).parquet(source_dir)
 
 
 def start_incremental_build(
@@ -40,7 +35,6 @@ def start_incremental_build(
     *,
     use_extraction: bool = True,
     available_now: bool = True,
-    dedup_within_batch: bool = True,
 ):
     """web_pages files → triples parquet, exactly-once per input file.
 
@@ -69,8 +63,7 @@ def start_incremental_build(
         )
         try:
             triples, errors = emit_all(records)
-            if dedup_within_batch:
-                triples = dedup_triples(triples)
+            triples = dedup_triples(triples)
             triples.write.mode("overwrite").parquet(f"{out_dir}/triples/batch={batch_id}")
             errors.write.mode("overwrite").parquet(f"{out_dir}/errors/batch={batch_id}")
         finally:
