@@ -260,6 +260,20 @@ def classify(rec):
     return None
 
 
+def page_golden(page):
+    """One page's record → (triples set, errors set)."""
+    rec = json.loads(page["text"])
+    domain = classify(rec)
+    fn = {
+        "business": business_triples,
+        "user": user_triples,
+        "review": review_triples,
+        "tip": lambda r: tip_triples(r, page["url"]),
+        "checkin": checkin_triples,
+    }[domain]
+    return fn(rec)
+
+
 def golden_from_pages(pages):
     """pages (list of dicts with url/text/lang) → (triples set, errors set).
 
@@ -269,16 +283,14 @@ def golden_from_pages(pages):
     for p in pages:
         if p["lang"] != "en":
             continue
-        rec = json.loads(p["text"])
-        domain = classify(rec)
-        fn = {
-            "business": lambda r: business_triples(r),
-            "user": lambda r: user_triples(r),
-            "review": lambda r: review_triples(r),
-            "tip": lambda r: tip_triples(r, p["url"]),
-            "checkin": lambda r: checkin_triples(r),
-        }[domain]
-        t, e = fn(rec)
+        t, e = page_golden(p)
         T |= t
         E |= e
     return T, E
+
+
+def golden_error_counts(pages):
+    """The error rows as a multiset: one per (English page, rejected field)."""
+    from collections import Counter
+
+    return Counter(e for p in pages if p["lang"] == "en" for e in page_golden(p)[1])

@@ -3,6 +3,7 @@ the independent Python oracle. P/R must be 1.0 at fixture scale (the driver
 rule requires ≥0.95; we hold the engine to exact)."""
 
 import json
+from collections import Counter
 
 import pyarrow.parquet as pq
 import pytest
@@ -78,3 +79,17 @@ def test_emission_deterministic_across_parallelism(spark, smoke_fixture_dir):
         return {tuple(r) for r in t.collect()}
 
     assert run(2) == run(13)
+
+
+def test_one_pass_emission_matches_oracle_multiset(spark, smoke_fixture_dir):
+    """The one-projection-per-domain emission against the oracle: the
+    triple set equals it, and the error rows match as a multiset — the
+    manifest's ``n_errors`` counts rows, so a duplicated or lost error row
+    would change it even when the set is right."""
+    pages = read_web_pages(spark, f"{smoke_fixture_dir}/web_pages.parquet")
+    triples, errors = emit_all(parse_records(pages, use_extraction=False))
+    rows = pq.read_table(f"{smoke_fixture_dir}/web_pages.parquet", columns=["url", "text", "lang"]).to_pylist()
+    want_triples, _ = oracle.golden_from_pages(rows)
+    assert {tuple(r) for r in triples.drop("source_domain").collect()} == want_triples
+    got = Counter((r["subject"], r["predicate"], r["kind"]) for r in errors.collect())
+    assert got == oracle.golden_error_counts(rows)

@@ -50,8 +50,7 @@ def test_resume_after_kill_no_dupes_no_missing(spark, pages, tmp_path):
 def test_manifest_metrics(spark, pages, tmp_path):
     out = str(tmp_path / "kg2")
     run_resumable(spark, pages, out, n_buckets=4, use_extraction=False)
-    m = read_manifest(spark, out)
-    rows = m.collect()
+    rows = read_manifest(spark, out)
     assert len(rows) == 4
     for r in rows:
         assert r["n_triples"] > 0
@@ -249,6 +248,44 @@ def test_vacuum_removes_orphans_keeps_committed(spark, pages, tmp_path):
     assert read_triples(spark, out).count() == before
     # idempotent: a second pass finds nothing
     assert remove_orphans(spark, out)["n_removed"] == 0
+
+
+def test_read_triples_skips_uncommitted_buckets(spark, pages, tmp_path):
+    """A bucket dir with no manifest row (a killed run's residue) is not
+    part of the store: the latest read, like the as-of read, leaves it out."""
+    out = str(tmp_path / "kg")
+    run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
+    committed = read_triples(spark, out)
+    before = committed.count()
+    orphan = tmp_path / "kg" / "triples" / "bucket=9" / "predicate=http%3A%2F%2Fex%2Fp"
+    committed.limit(3).drop("bucket", "predicate").write.parquet(str(orphan))
+    latest = read_triples(spark, out)
+    assert {r["bucket"] for r in latest.select("bucket").distinct().collect()} == {0, 1}
+    assert latest.count() == before
+
+
+def test_manifest_reads_start_no_spark_job(spark, pages, tmp_path):
+    """Reading the manifest is driver-side file IO: listing the committed
+    buckets, an as-of read (whose bucket dirs hold more predicate dirs than
+    Spark's parallel-listing threshold), and a resume with nothing left to
+    commit start no Spark job."""
+    out = str(tmp_path / "kg")
+    run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
+    sc = spark.sparkContext
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    threshold = spark.conf.get(key)
+    assert len(os.listdir(tmp_path / "kg" / "triples" / "bucket=0")) > int(threshold)
+    try:
+        sc.setJobGroup("manifest-reads", "manifest reads")
+        assert completed_buckets(spark, out) == {0, 1}
+        read_triples(spark, out, as_of_sequence=1)
+        assert run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)[
+            "buckets_committed"
+        ] == 0
+        assert list(sc.statusTracker().getJobIdsForGroup("manifest-reads")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert spark.conf.get(key) == threshold
 
 
 def test_vacuum_on_empty_store(spark, tmp_path):

@@ -330,6 +330,32 @@ def test_kmeans_single_iter_ties_break_low_and_validation(spark):
         kmeans_assign(df, k=2, iters=0)
 
 
+def test_kmeans_destroys_replaced_codebook_broadcasts(spark, monkeypatch):
+    """Above ``literal_k_max`` each iteration broadcasts a new codebook;
+    every one an iteration replaced is destroyed, and only the last, which
+    the returned frame reads, stays valid."""
+    from pyspark import SparkContext
+
+    from yckg_spark.operators.similarity import kmeans_assign
+
+    made = []
+    broadcast = SparkContext.broadcast
+
+    def tracked(self, value):
+        bc = broadcast(self, value)
+        made.append(bc)
+        return bc
+
+    df = spark.createDataFrame(
+        [(i, [float(i), float(i % 3)]) for i in range(12)], ["vec_id", "embedding"]
+    )
+    monkeypatch.setattr(SparkContext, "broadcast", tracked)
+    out = kmeans_assign(df, k=3, iters=3, literal_k_max=2).collect()
+    assert len(out) == 12
+    assert len(made) == 3
+    assert [bc._jbroadcast.isValid() for bc in made] == [False, False, True]
+
+
 def test_kmeans_empty_cluster_keeps_previous_centroid(spark):
     from yckg_spark.operators.similarity import kmeans_assign
 

@@ -204,6 +204,20 @@ def test_literal_quotes_are_escaped():
     assert "= 'O''Hare'" in sql
 
 
+def test_literal_backslash_matches_stored_literal(spark):
+    """A backslash in a SPARQL literal reaches the SQL literal doubled, so
+    Spark unescapes it back and the pattern matches the stored value."""
+    rows = [
+        ("http://ex/a", "https://schema.org/name", "C:\\dir", True, None),
+        ("http://ex/b", "https://schema.org/name", "C:dir", True, None),
+    ]
+    spark.createDataFrame(
+        rows, "subject string, predicate string, object string, is_literal boolean, datatype string"
+    ).createOrReplaceTempView("bs_triples")
+    got = run_sparql(spark, """SELECT ?s WHERE { ?s schema:name "C:\\dir" . }""", view="bs_triples")
+    assert [r["s"] for r in got.collect()] == ["http://ex/a"]
+
+
 def test_comments_are_ignored():
     sql = compile_sparql(
         """# leading comment

@@ -1,29 +1,37 @@
 """The predicate / type / IRI mapping core — the heart of the recipe.
 
-Re-realizes, as *data* plus Column expressions:
+Re-realizes, as *data*:
   * ``get_schema_predicate`` (reference: Code/UtilityFunctions/
     schema_functions.py:12-76) — 14 hand-mapped schema.org predicates plus a
     ``yelpvoc:{key}`` fallback with runtime datatype inference;
   * ``get_schema_type``   (schema_functions.py:79-102) — entity → class;
   * ``get_iri``           (Code/UtilityFunctions/get_iri.py:5-18) — per-domain
-    URI minting roots.
+    URI minting roots;
+  * the reference's per-key ``match`` dispatch (create_yelp_nt_files.py:
+    111-178, 198-304) — ``EMISSIONS``, one row per (domain, field) with its
+    predicate, datatype, sentinel rule and error kind, built from the maps
+    above. ``operators/emit.py`` renders it into one projection per domain.
 
-The reference dispatches these per row with ``match`` statements; here the
-known-key table is a plain dict used at *plan construction time* (the schema
-is fixed per domain, so the lookup is resolved while building the DataFrame
-plan — zero runtime cost), and the fallback datatype inference is a native
-Column expression (see functions/strings.py) running JVM-side.
+The reference dispatches these per row; here the tables are resolved while
+the plan is built (the schema is fixed per domain), and the value-dependent
+parts (sentinel tests, datatype inference) are native Column expressions.
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from yckg_spark.namespaces import (
+    BUSINESS_URI,
+    RDF_TYPE,
     SCHEMA,
+    USER_URI,
     XSD_ANYURI,
     XSD_DATETIME,
     XSD_DECIMAL,
     XSD_INTEGER,
     XSD_STRING,
+    YELPCAT,
     YELPENT,
     YELPVOC,
 )
@@ -103,6 +111,9 @@ TYPE_MAP: dict[str, str] = {
     "HairSpecializesIn": SCHEMA + "LocationFeatureSpecification",
     "DietaryRestrictions": SCHEMA + "LocationFeatureSpecification",
     "hours": SCHEMA + "OpeningHoursSpecification",
+    "tip": YELPVOC + "Tip",
+    "checkin": SCHEMA + "ArriveAction",
+    "category": YELPVOC + "YelpCategory",
 }
 
 
@@ -123,3 +134,95 @@ IRI_ROOTS: dict[str, str] = {
 
 def iri_root(domain: str) -> str:
     return IRI_ROOTS[domain]
+
+
+# ---------------------------------------------------------------------------
+# The emission table
+# ---------------------------------------------------------------------------
+
+# Sentinel rules: which values of a field become an error row, not a triple.
+SENTINEL = "sentinel"  # null or one of NONE_SENTINELS
+EMPTY = "empty"  # null or ""
+NULL = "null"  # null
+# ``datatype`` value: infer it from the whole field value (isdigit → float →
+# string, schema_functions.py:59-65)
+INFERRED = "inferred"
+
+
+class Emission(NamedTuple):
+    """One row of the emission table. Per record, a row yields one triple
+    (one per item of a ``split`` field; the business categories, attributes
+    and hours rows expand as families in operators/emit.py) or, when
+    ``rule`` rejects the value, one error row ``(subject, field, raw value,
+    kind)``."""
+
+    domain: str
+    field: str | None  # record field (or SQL over the record); None: fixed object
+    predicate: str
+    datatype: str | None  # literal datatype IRI, INFERRED, or None: IRI object
+    rule: str | None = None  # sentinel rule; None: never an error
+    kind: str | None = None  # error kind of a rejected value
+    prefix: str = ""  # prepended to the object; the whole object if no field
+    split: str | None = None  # list field: its item separator
+
+
+def _known(domain: str, key: str, **kw) -> Emission:
+    return Emission(domain, key, *PREDICATE_MAP[key], SENTINEL, "none", **kw)
+
+
+def _fallback(domain: str, key: str, datatype: str = XSD_INTEGER) -> Emission:
+    # yelpvoc:{key}; a JSON number's datatype is fixed by its parse schema
+    return Emission(domain, key, predicate_for(key), datatype, SENTINEL, "none")
+
+
+EMISSIONS: tuple[Emission, ...] = (
+    # business (create_yelp_nt_files.py:21-195)
+    Emission("business", None, RDF_TYPE, None, prefix=TYPE_MAP["business"]),
+    Emission("business", "business_id", SCHEMA + "url", None, prefix=BUSINESS_URI),
+    *(
+        _known("business", k)
+        for k in ("name", "address", "city", "state", "postal_code", "latitude",
+                  "longitude", "stars", "review_count", "is_open")
+    ),
+    # the three families operators/emit.py expands: categories → keywords
+    # edge + category node; attributes → yelpvoc:{key} literal or nested
+    # blank node; hours → blank node of per-day literals. A falsy
+    # categories value is NOT deleted by the reference (:86-89); a null
+    # attributes/hours dict stays a plain key (dictionary_functions.py:11-16).
+    Emission("business", "categories", SCHEMA + "keywords", None, EMPTY, "none",
+             prefix=YELPCAT, split=", "),
+    Emission("business", "attributes", YELPVOC, INFERRED, NULL, "none"),
+    Emission("business", "hours", PREDICATE_MAP["hours"][0], None, NULL, "none"),
+    # user (list branch :139-157: friends split on ", ", elite on ",")
+    Emission("user", None, RDF_TYPE, None, prefix=TYPE_MAP["user"]),
+    Emission("user", "user_id", SCHEMA + "url", None, prefix=USER_URI),
+    *(_known("user", k) for k in ("name", "review_count", "yelping_since")),
+    *(_fallback("user", k) for k in ("useful", "funny", "cool", "fans")),
+    _fallback("user", "average_stars", XSD_DECIMAL),
+    _fallback("user", "compliment_count"),
+    Emission("user", "friends", PREDICATE_MAP["friends"][0], None, SENTINEL, "none",
+             prefix=IRI_ROOTS["user"], split=", "),
+    Emission("user", "elite", YELPVOC + "elite", INFERRED, SENTINEL, "none", split=","),
+    # review (:55-81 url and author, :160-166 business link as an IRI)
+    Emission("review", None, RDF_TYPE, None, prefix=TYPE_MAP["review"]),
+    Emission("review", "concat(business_id, '?hrid=', review_id)", SCHEMA + "url", None,
+             prefix=BUSINESS_URI),
+    Emission("review", "user_id", SCHEMA + "author", None, prefix=IRI_ROOTS["user"]),
+    Emission("review", "business_id", PREDICATE_MAP["business_id"][0], None, NULL, "none",
+             prefix=IRI_ROOTS["business"]),
+    *(_known("review", k) for k in ("stars", "text")),
+    *(_fallback("review", k) for k in ("useful", "funny", "cool")),
+    _known("review", "date", split=", "),
+    # tip (:253-304): no sentinel routing, business link an anyURI literal
+    Emission("tip", "user_id", SCHEMA + "author", None, prefix=IRI_ROOTS["user"]),
+    Emission("tip", None, RDF_TYPE, None, prefix=TYPE_MAP["tip"]),
+    Emission("tip", "business_id", *PREDICATE_MAP["business_id"], prefix=IRI_ROOTS["business"]),
+    Emission("tip", "text", *PREDICATE_MAP["text"]),
+    Emission("tip", "date", *PREDICATE_MAP["date"]),
+    Emission("tip", "compliment_count", YELPVOC + "compliment_count", XSD_INTEGER),
+    # checkin (:198-250): one row per (business, date) with its count ``n``
+    Emission("checkin", "business_id", SCHEMA + "object", None, prefix=IRI_ROOTS["checkin"]),
+    Emission("checkin", None, RDF_TYPE, None, prefix=TYPE_MAP["checkin"]),
+    Emission("checkin", "d", SCHEMA + "startTime", XSD_DATETIME),
+    Emission("checkin", "n", SCHEMA + "interactionStatistic", XSD_INTEGER),
+)

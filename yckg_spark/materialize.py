@@ -30,14 +30,22 @@ import json
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from yckg_spark.operators.canonicalize import DEDUP_KEY, dedup_triples
-from yckg_spark.operators.emit import emit_all
+from yckg_spark.operators.emit import emit_rows, split_rows
 from yckg_spark.sources.web_pages import parse_records
 
 N_BUCKETS_DEFAULT = 8
+# the committed store as read: the written columns, then the bucket and
+# predicate partition columns. Given, not inferred, so a read of a manifest
+# store starts no footer-reading job.
+STORE_SCHEMA = (
+    "subject string, object string, is_literal boolean, datatype string,"
+    " source_domain string, bucket int, predicate string"
+)
 
 
 def write_observed(
@@ -61,25 +69,24 @@ def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "manifest")
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+def read_manifest(spark: SparkSession, out_dir: str) -> list[dict]:
+    """The store's manifest rows (one ``bucket-K.json`` per commit) as
+    dicts, in file-name order; ``[]`` when there are none. Driver-side file
+    reads only, no Spark job."""
     # manifest IO goes through the Hadoop FS API so the store (and its
     # lineage) can live on hdfs://, s3a://, or a local dir alike
     from yckg_spark.fsutil import list_names, read_text
 
     p = _manifest_path(out_dir)
-    rows = [
+    return [
         json.loads(read_text(spark, os.path.join(p, f)))
         for f in list_names(spark, p)
         if f.endswith(".json")
     ]
-    return spark.createDataFrame(rows) if rows else None
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    m = read_manifest(spark, out_dir)
-    if m is None:
-        return set()
-    return {r["bucket"] for r in m.select("bucket").collect()}
+    return {r["bucket"] for r in read_manifest(spark, out_dir)}
 
 
 def run_resumable(
@@ -103,12 +110,8 @@ def run_resumable(
 
     mkdirs(spark, _manifest_path(out_dir))
     prior = read_manifest(spark, out_dir)
-    done = set()
-    seq_base = 0
-    if prior is not None:
-        done = {r["bucket"] for r in prior.select("bucket").collect()}
-        if "sequence_number" in prior.columns:
-            seq_base = prior.agg(F.max("sequence_number")).collect()[0][0] or 0
+    done = {r["bucket"] for r in prior}
+    seq_base = max((r.get("sequence_number") or 0 for r in prior), default=0)
     if "bucket" in pages.columns:
         # pre-bucketed corpus (Iceberg bucket(url) emulation): the bucket
         # filter is a PartitionFilter, so each commit scans ONLY its own
@@ -137,7 +140,11 @@ def run_resumable(
         subset = subset.observe(obs_pages, F.count(F.lit(1)).alias("n"))
         persisted: list[DataFrame] = []
         records = parse_records(subset, use_extraction=use_extraction, persisted_out=persisted)
-        triples, errors = emit_all(records)
+        # one emission pass feeds both sinks: the emitted rows are cut
+        # DISK_ONLY, and the triples and errors writes read the cut
+        rows = emit_rows(records).persist(StorageLevel.DISK_ONLY)
+        persisted.append(rows)
+        triples, errors = split_rows(rows)
         triples = dedup_triples(triples)
 
         t0 = time.time()
@@ -185,10 +192,10 @@ def run_resumable(
         )
         metrics_all.append(commit)
         commits += 1
-        # drop exactly this bucket's stage-cut blocks (classified + parsed
-        # domains) before the next bucket materializes its own — a blanket
-        # clearCache() would also evict unrelated frames a shared session
-        # (tests, bench harness, callers) has persisted
+        # drop exactly this bucket's stage-cut blocks (classified, parsed
+        # domains, emitted rows) before the next bucket materializes its
+        # own — a blanket clearCache() would also evict unrelated frames a
+        # shared session (tests, bench harness, callers) has persisted
         for df in persisted:
             df.unpersist()
         if fail_after is not None and commits >= fail_after:
@@ -204,12 +211,12 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     """The store's commit lineage ordered by sequence — the emulation of
     Iceberg's ``<table>.snapshots`` metadata table. One row per bucket
     commit with its metrics, sequence number, and commit timestamp."""
-    m = read_manifest(spark, out_dir)
-    if m is None:
+    rows = read_manifest(spark, out_dir)
+    if not rows:
         raise ValueError(f"no manifest under {out_dir}")
-    if "sequence_number" not in m.columns:
+    if any("sequence_number" not in r for r in rows):
         raise ValueError("store predates snapshot lineage (no sequence_number)")
-    return m.orderBy("sequence_number")
+    return spark.createDataFrame(rows).orderBy("sequence_number")
 
 
 def read_triples(
@@ -223,22 +230,49 @@ def read_triples(
     emulated over the append-only bucket layout: committed buckets are
     immutable, so the state as of a commit is the union of the bucket
     partitions whose manifest row has ``sequence_number`` (or
-    ``committed_at_ms``) at or below the bound. The historical read is
-    partition-pruned at the path level — later buckets are never opened.
+    ``committed_at_ms``) at or below the bound. The read is partition-pruned
+    at the path level: later buckets, and bucket dirs with no manifest row
+    (a killed run's residue), are never opened. A store without a manifest
+    (``compact_store`` or stream output) is read whole.
     """
     tdir = os.path.join(out_dir, "triples")
-    if as_of_sequence is None and as_of_timestamp_ms is None:
+    as_of = as_of_sequence is not None or as_of_timestamp_ms is not None
+    rows = read_manifest(spark, out_dir)
+    if not rows:
+        if as_of:
+            raise ValueError(f"no manifest under {out_dir}")
         return spark.read.parquet(tdir)
-    snaps = snapshots(spark, out_dir)
+    if as_of and any("sequence_number" not in r for r in rows):
+        raise ValueError("store predates snapshot lineage (no sequence_number)")
     if as_of_sequence is not None:
-        snaps = snaps.filter(F.col("sequence_number") <= as_of_sequence)
+        rows = [r for r in rows if r["sequence_number"] <= as_of_sequence]
     if as_of_timestamp_ms is not None:
-        snaps = snaps.filter(F.col("committed_at_ms") <= as_of_timestamp_ms)
-    buckets = [r["bucket"] for r in snaps.select("bucket").collect()]
-    if not buckets:
+        rows = [r for r in rows if r["committed_at_ms"] <= as_of_timestamp_ms]
+    if not rows:
         raise ValueError("no snapshot at or before the requested point")
-    paths = [os.path.join(tdir, f"bucket={b}") for b in sorted(buckets)]
-    return spark.read.option("basePath", tdir).parquet(*paths)
+    paths = [os.path.join(tdir, f"bucket={b}") for b in sorted(r["bucket"] for r in rows)]
+    return _read_buckets(spark, tdir, paths)
+
+
+def _read_buckets(spark: SparkSession, tdir: str, paths: list[str]) -> DataFrame:
+    """Read committed bucket dirs. Each holds one dir per predicate (about
+    70 on the fixtures), over Spark's 32-dir threshold, so Spark lists every
+    bucket in a Spark job with one task per dir: about 3 s of CPU per read
+    of a two-bucket local store, against 0.1 s listed on the driver. A local
+    store is listed on the driver; a remote one keeps Spark's parallel
+    listing, where each listing call is a round trip."""
+    from yckg_spark.fsutil import is_local
+
+    reader = spark.read.option("basePath", tdir).schema(STORE_SCHEMA)
+    if not is_local(spark, tdir):
+        return reader.parquet(*paths)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, str(2**31 - 1))
+    try:
+        return reader.parquet(*paths)  # lists the files now, on the driver
+    finally:
+        spark.conf.set(key, threshold)
 
 
 def compact_store(
@@ -274,9 +308,8 @@ def remove_orphans(spark: SparkSession, out_dir: str) -> dict:
     bucket layout. Orphans arise when a run is killed mid-write (the data
     lands before the manifest row commits; resume normally overwrites the
     dir, but a reconfigured or abandoned run leaves it forever) — they are
-    invisible to readers (``read_triples`` time-travel unions only
-    manifest-listed buckets) but they hold storage and show up in naive
-    directory scans. Committed buckets are never touched, so the action is
+    invisible to readers (``read_triples`` unions only manifest-listed
+    buckets) but they hold storage and show up in naive directory scans. Committed buckets are never touched, so the action is
     safe to run concurrently with readers.
 
     Driver state is O(#partition dirs) names; the listing and deletes go
@@ -285,10 +318,7 @@ def remove_orphans(spark: SparkSession, out_dir: str) -> dict:
     """
     from yckg_spark.fsutil import delete, exists, list_names
 
-    m = read_manifest(spark, out_dir)
-    committed: set[int] = set()
-    if m is not None:
-        committed = {r["bucket"] for r in m.select("bucket").collect()}
+    committed = completed_buckets(spark, out_dir)
     removed: list[str] = []
     for sub in ("triples", "errors"):
         base = os.path.join(out_dir, sub)

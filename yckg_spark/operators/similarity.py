@@ -517,7 +517,8 @@ def _nearest_l2_udf(spark, centroids: list[list[float]]):
     cluster — the same tie rule as the literal-path struct min. Distances
     via the expansion ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2 with the
     row-constant ||x||^2 dropped: one BLAS matmul per Arrow batch against
-    a broadcast numpy codebook, plan size independent of k."""
+    a broadcast numpy codebook, plan size independent of k. Returns the
+    UDF and its broadcast, which the caller destroys once no job reads it."""
     import numpy as np
     import pandas as pd
 
@@ -532,7 +533,7 @@ def _nearest_l2_udf(spark, centroids: list[list[float]]):
         return pd.Series(np.argmin(d, axis=1).astype("int32"))
 
     nearest_fn.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    return F.pandas_udf("int")(nearest_fn)
+    return F.pandas_udf("int")(nearest_fn), bc
 
 
 def kmeans_assign(
@@ -587,10 +588,12 @@ def kmeans_assign(
         .collect()
     )
     centroids = [[float(x) for x in r[0]] for r in init]
+    codebooks = []  # the broadcast the current assignment reads, if any
 
     def assign(cents: list[list[float]]) -> DataFrame:
         if len(cents) > literal_k_max:
-            nearest = _nearest_l2_udf(df.sparkSession, cents)
+            nearest, bc = _nearest_l2_udf(df.sparkSession, cents)
+            codebooks.append(bc)
             return df.select(
                 F.col(id_col),
                 F.col(vec_col),
@@ -627,5 +630,9 @@ def kmeans_assign(
         for r in rows:
             new_cents[r["cluster"]] = [float(r[f"c{d}"]) for d in range(dim)]
         centroids = new_cents
+        # the collect above was the last job to read the replaced codebook;
+        # the final one stays alive for the returned frame
+        while codebooks:
+            codebooks.pop().destroy()
         assigned = assign(centroids)
     return assigned.select(id_col, "cluster")

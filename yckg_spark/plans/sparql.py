@@ -424,7 +424,8 @@ class _Parser:
 
 
 def _esc(s: str) -> str:
-    return s.replace("'", "''")
+    # Spark SQL string literals unescape backslashes, so double them first
+    return s.replace("\\", "\\\\").replace("'", "''")
 
 
 def _resolve(term, prefixes) -> str:

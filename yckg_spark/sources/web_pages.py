@@ -113,15 +113,12 @@ def parse_records(
     pre-extracted ``text`` column is trusted (both paths are byte-identical
     on well-formed corpora — asserted by tests/test_extract.py).
 
-    The triple emission downstream is a union of ~12 projection branches
-    over these records, so the post-extraction classified frame needs a
-    stage cut — without one every branch re-runs the extraction UDF.
-
-    The cut sits AFTER the typed ``from_json`` parse, not on the raw
-    classified text: emission fans out into ~12 triple-family branches and
-    a pre-parse cut re-runs the (expensive) JSON parse in every branch —
-    measured ~3× more CPU on the emission stage. With the post-parse cut
-    the extraction UDF and each domain's parse run exactly once per build.
+    The five domain parses all read the post-extraction classified frame,
+    so it needs a stage cut — without one every domain re-runs the
+    extraction UDF. Each parsed domain frame is cut too: callers that emit
+    triples and errors in two actions (``emit_all`` then two writes) would
+    otherwise re-run the JSON parse per action. With both cuts the
+    extraction UDF and each domain's parse run exactly once per build.
 
     ``cache=True`` persists the classified frame and each parsed domain
     frame DISK_ONLY and appends them to ``persisted_out`` so the caller can

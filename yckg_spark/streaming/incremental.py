@@ -53,10 +53,9 @@ def start_incremental_build(
     pages = read_web_pages_stream(spark, source_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist the parsed domain frames: emit_all fans out into ~12
-        # branches and two actions follow — without the stage cut the
-        # extraction UDF and per-domain parses re-run per branch per action
-        # (the exact multi-pass cost the batch path was measured to avoid)
+        # persist the parsed domain frames: two actions (the triples and
+        # errors writes) follow — without the stage cut the extraction UDF
+        # and per-domain parses re-run per action
         persisted: list[DataFrame] = []
         records = parse_records(
             batch_df, use_extraction=use_extraction, persisted_out=persisted
