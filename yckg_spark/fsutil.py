@@ -62,12 +62,6 @@ def mkdirs(spark: SparkSession, path: str) -> None:
     fs.mkdirs(jpath)
 
 
-def is_local(spark: SparkSession, path: str) -> bool:
-    """Whether ``path`` lives on the local filesystem (``file:``)."""
-    fs, _, _ = _fs(spark, path)
-    return fs.getScheme() == "file"
-
-
 def list_names(spark: SparkSession, path: str) -> list[str]:
     """File/dir names directly under ``path`` ([] if it doesn't exist)."""
     fs, jpath, _ = _fs(spark, path)

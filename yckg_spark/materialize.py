@@ -30,21 +30,22 @@ import json
 import os
 import time
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
+from yckg_spark import schemas
 from yckg_spark.operators.canonicalize import DEDUP_KEY, dedup_triples
-from yckg_spark.operators.emit import emit_rows, split_rows
+from yckg_spark.operators.emit import emit_cut
 from yckg_spark.sources.web_pages import parse_records
 
 N_BUCKETS_DEFAULT = 8
-# the committed store as read: the written columns, then the bucket and
-# predicate partition columns. Given, not inferred, so a read of a manifest
-# store starts no footer-reading job.
-STORE_SCHEMA = (
-    "subject string, object string, is_literal boolean, datatype string,"
-    " source_domain string, bucket int, predicate string"
+# the committed store as read: the written triple columns, then the bucket
+# and predicate partition columns. Given, not inferred, so a read of a
+# manifest store starts no footer-reading job.
+STORE_SCHEMA = StructType(
+    [StructField(f.name, f.dataType) for f in schemas.TRIPLES if f.name != "predicate"]
+    + [StructField("bucket", IntegerType()), StructField("predicate", StringType())]
 )
 
 
@@ -140,11 +141,8 @@ def run_resumable(
         subset = subset.observe(obs_pages, F.count(F.lit(1)).alias("n"))
         persisted: list[DataFrame] = []
         records = parse_records(subset, use_extraction=use_extraction, persisted_out=persisted)
-        # one emission pass feeds both sinks: the emitted rows are cut
-        # DISK_ONLY, and the triples and errors writes read the cut
-        rows = emit_rows(records).persist(StorageLevel.DISK_ONLY)
-        persisted.append(rows)
-        triples, errors = split_rows(rows)
+        # one emission pass feeds both sinks (the triples and errors writes)
+        triples, errors = emit_cut(records, persisted)
         triples = dedup_triples(triples)
 
         t0 = time.time()
@@ -251,28 +249,7 @@ def read_triples(
     if not rows:
         raise ValueError("no snapshot at or before the requested point")
     paths = [os.path.join(tdir, f"bucket={b}") for b in sorted(r["bucket"] for r in rows)]
-    return _read_buckets(spark, tdir, paths)
-
-
-def _read_buckets(spark: SparkSession, tdir: str, paths: list[str]) -> DataFrame:
-    """Read committed bucket dirs. Each holds one dir per predicate (about
-    70 on the fixtures), over Spark's 32-dir threshold, so Spark lists every
-    bucket in a Spark job with one task per dir: about 3 s of CPU per read
-    of a two-bucket local store, against 0.1 s listed on the driver. A local
-    store is listed on the driver; a remote one keeps Spark's parallel
-    listing, where each listing call is a round trip."""
-    from yckg_spark.fsutil import is_local
-
-    reader = spark.read.option("basePath", tdir).schema(STORE_SCHEMA)
-    if not is_local(spark, tdir):
-        return reader.parquet(*paths)
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    threshold = spark.conf.get(key)
-    spark.conf.set(key, str(2**31 - 1))
-    try:
-        return reader.parquet(*paths)  # lists the files now, on the driver
-    finally:
-        spark.conf.set(key, threshold)
+    return spark.read.option("basePath", tdir).schema(STORE_SCHEMA).parquet(*paths)
 
 
 def compact_store(

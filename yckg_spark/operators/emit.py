@@ -7,14 +7,16 @@ datatype, sentinel rule and error kind. Each domain's rows render into one
 ``array<struct>`` of candidate rows — a scalar field one entry, a list field
 a ``transform`` over its split value, and the business categories,
 attributes and hours families a ``transform`` over their split value or
-map — and one ``inline`` explodes it: one projection and one pass per
+map, after a pre-projection that computes what the family reads more than
+once — and one ``inline`` explodes it: one projection and one pass per
 domain. Checkin first counts its (business, date) pairs with a ``groupBy``.
 
 Every candidate is a triple or an error row. A value its field's sentinel
 rule rejects becomes a row with a non-null ``kind`` that carries the raw
 key and value (the reference's none list, create_yelp_nt_files.py:112-114).
-``emit_rows`` returns both kinds in one frame, so one pass can feed both
-sinks; ``emit_all`` splits it into ``(triples, errors)``.
+``emit_rows`` returns both kinds in one frame; ``emit_all`` splits it into
+``(triples, errors)``, and ``emit_cut`` splits a DISK_ONLY cut of it, so a
+caller that writes both runs the emission once.
 
 The Columns are built once per SparkContext and reused by every call, so a
 commit's driver work is a handful of DataFrame calls. Blank nodes are
@@ -29,10 +31,11 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark import SparkContext
+from pyspark import SparkContext, StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from yckg_spark import schemas
 from yckg_spark.functions.mappings import (
     EMISSIONS,
     EMPTY,
@@ -54,8 +57,8 @@ from yckg_spark.functions.strings import (
 )
 from yckg_spark.namespaces import RDF_TYPE, XSD_DATETIME, YELPVOC
 
-TRIPLE_COLS = ["subject", "predicate", "object", "is_literal", "datatype", "source_domain"]
-ERROR_COLS = ["subject", "predicate", "object", "kind", "source_domain"]
+TRIPLE_COLS = schemas.TRIPLES.fieldNames()
+ERROR_COLS = schemas.ERRORS.fieldNames()
 
 
 def _lit(x: Column | str | None) -> Column:
@@ -82,58 +85,84 @@ def _rejected(rule: str, value: Column) -> Column:
     return value.isNull()
 
 
-def _field_entries(e: Emission, subject: Column) -> Column:
-    """array<struct> of one table row's candidate rows."""
+def _datatype(e: Emission, value: Column) -> Column | str | None:
+    # an INFERRED datatype is read off the whole value (:142), not a list item
+    return inferred_datatype(value) if e.datatype == INFERRED else e.datatype
+
+
+def _field_entries(e: Emission, subject: Column) -> tuple[list[Column], Column]:
+    """One table row's ``(pre-projection columns, array<struct> of candidate
+    rows)``. ``subject`` is the record's subject expression, for the
+    pre-projection; the candidate rows read it as the column ``subject``."""
+    s = F.col("subject")
     if e.field is None:
-        return F.array(_row(subject, e.predicate, e.prefix, literal=False))
+        return [], F.array(_row(s, e.predicate, e.prefix, literal=False))
     value = F.expr(e.field).cast("string")
 
     def triple(item: Column) -> Column:
-        # an INFERRED datatype is read off the whole value (:142), not the item
-        datatype = inferred_datatype(value) if e.datatype == INFERRED else e.datatype
         if e.datatype == XSD_DATETIME:
             item = normalize_datetime(item)
         obj = F.concat(F.lit(e.prefix), item) if e.prefix else item
-        return _row(subject, e.predicate, obj, datatype, literal=e.datatype is not None)
+        return _row(s, e.predicate, obj, _datatype(e, value), literal=e.datatype is not None)
 
+    pre: list[Column] = []
     family = _FAMILIES.get((e.domain, e.field))
     if family is not None:
-        out = family(e, subject)
+        pre, out = family(e, subject)
     elif e.split is not None:
         out = F.transform(F.split(value, e.split), triple)
     else:
         out = F.array(triple(value))
     if e.rule is None:
-        return out
-    error = _row(subject, e.field, value, literal=False, kind=e.kind)
-    return F.when(_rejected(e.rule, value), F.array(error)).otherwise(out)
+        return pre, out
+    error = _row(s, e.field, value, literal=False, kind=e.kind)
+    return pre, F.when(_rejected(e.rule, value), F.array(error)).otherwise(out)
 
 
-def _categories(e: Emission, subject: Column) -> Column:
+# A family is called with its table row and the record's subject expression
+# and returns ``(pre-projection columns, array<struct> of candidate rows)``:
+# the pre-projection computes, once per record, what its rows read more than
+# once.
+
+
+def _categories(e: Emission, subject: Column) -> tuple[list[Column], Column]:
     # ", "-split, sanitized (:86-108): keywords edge + the category's node
     def pair(c: Column) -> Column:
         cat = F.concat(F.lit(e.prefix), sanitize_iri(c))
         return F.array(
-            _row(subject, e.predicate, cat, literal=False),
+            _row(F.col("subject"), e.predicate, cat, literal=False),
             _row(cat, RDF_TYPE, TYPE_MAP["category"], literal=False),
         )
 
-    return F.flatten(F.transform(F.split(F.col(e.field), e.split), pair))
+    return [], F.flatten(F.transform(F.split(F.col(e.field), e.split), pair))
 
 
-def _attributes(e: Emission, subject: Column) -> Column:
+def _attributes(e: Emission, subject: Column) -> tuple[list[Column], Column]:
     """Flattened attributes dict (dictionary_functions.py:1-18, dispatched
     per key at :111-178): a sentinel value is an error row; a plain key a
     ``yelpvoc:{key}`` literal typed from its value; a nested pseudo-JSON key
     (:116-137) a blank node typed by TYPE_MAP with one literal per parsed
     entry, or an ``error`` row when the repair chain cannot parse it (the
-    reference's exception at :183 kills the whole record)."""
+    reference's exception at :183 kills the whole record). The
+    pre-projection parses each nested value and names its blank node."""
+
+    def prepared(kv: Column) -> Column:
+        nested = kv["key"].isin(*NESTED_ATTRIBUTE_KEYS)
+        parse = nested & ~_rejected(SENTINEL, kv["value"])
+        return F.struct(
+            kv["key"].alias("key"),
+            kv["value"].alias("value"),
+            F.when(parse, F.from_json(repair_pseudo_json(kv["value"]), "map<string,string>")).alias("parsed"),
+            F.when(nested, skolem_iri(subject, kv["key"])).alias("bnode"),
+        )
+
     type_of = F.create_map(*[F.lit(x) for k in sorted(NESTED_ATTRIBUTE_KEYS) for x in (k, TYPE_MAP[k])])
+    s = F.col("subject")
 
     def entries(a: Column) -> Column:
         key, value, bnode = a["key"], a["value"], a["bnode"]
         head = F.array(
-            _row(subject, F.concat(F.lit(YELPVOC + "has"), key), bnode, literal=False),
+            _row(s, F.concat(F.lit(YELPVOC + "has"), key), bnode, literal=False),
             _row(bnode, RDF_TYPE, type_of[key], literal=False),
         )
         sub = F.transform(
@@ -146,29 +175,31 @@ def _attributes(e: Emission, subject: Column) -> Column:
         )
         return (
             F.when(_rejected(SENTINEL, value),
-                   F.array(_row(subject, key, value, literal=False, kind=e.kind)))
+                   F.array(_row(s, key, value, literal=False, kind=e.kind)))
             .when(~key.isin(*NESTED_ATTRIBUTE_KEYS),
-                  F.array(_row(subject, F.concat(F.lit(e.predicate), key), value, inferred_datatype(value))))
-            .when(a["parsed"].isNull(), F.array(_row(subject, key, None, literal=False, kind="error")))
+                  F.array(_row(s, F.concat(F.lit(e.predicate), key), value, _datatype(e, value))))
+            .when(a["parsed"].isNull(), F.array(_row(s, key, None, literal=False, kind="error")))
             .otherwise(F.concat(head, sub))
         )
 
-    return F.flatten(F.transform(F.col("__attrs"), entries))
+    attrs = F.transform(F.map_entries(F.col(e.field)), prepared).alias("__attrs")
+    return [attrs], F.flatten(F.transform(F.col("__attrs"), entries))
 
 
-def _hours(e: Emission, subject: Column) -> Column:
+def _hours(e: Emission, subject: Column) -> tuple[list[Column], Column]:
     # exempt from flattening (dictionary_functions.py:12): yelpvoc:hasHours →
     # blank node typed OpeningHoursSpecification, plain per-day literals
     bnode = F.col("__hours_bnode")
     head = F.array(
-        _row(subject, e.predicate, bnode, literal=False),
+        _row(F.col("subject"), e.predicate, bnode, literal=False),
         _row(bnode, RDF_TYPE, TYPE_MAP["hours"], literal=False),
     )
     days = F.transform(
-        F.map_entries(F.col("hours")),
+        F.map_entries(F.col(e.field)),
         lambda kv: _row(bnode, F.concat(F.lit(YELPVOC + "has"), kv["key"]), kv["value"]),
     )
-    return F.concat(head, days)
+    pre = F.when(F.col(e.field).isNotNull(), skolem_iri(subject, e.field)).alias("__hours_bnode")
+    return [pre], F.concat(head, days)
 
 
 _FAMILIES = {
@@ -176,27 +207,6 @@ _FAMILIES = {
     ("business", "attributes"): _attributes,
     ("business", "hours"): _hours,
 }
-
-
-def _extra_columns(domain: str, subject: Column) -> list[Column]:
-    """Per-record values the families read more than once, computed once."""
-    if domain != "business":
-        return []
-
-    def prepared(kv: Column) -> Column:
-        nested = kv["key"].isin(*NESTED_ATTRIBUTE_KEYS)
-        parse = nested & ~_rejected(SENTINEL, kv["value"])
-        return F.struct(
-            kv["key"].alias("key"),
-            kv["value"].alias("value"),
-            F.when(parse, F.from_json(repair_pseudo_json(kv["value"]), "map<string,string>")).alias("parsed"),
-            F.when(nested, skolem_iri(subject, kv["key"])).alias("bnode"),
-        )
-
-    return [
-        F.transform(F.map_entries(F.col("attributes")), prepared).alias("__attrs"),
-        F.when(F.col("hours").isNotNull(), skolem_iri(subject, "hours")).alias("__hours_bnode"),
-    ]
 
 
 def _subject(domain: str) -> Column:
@@ -211,7 +221,7 @@ def _subject(domain: str) -> Column:
 def _render(domain: str) -> tuple:
     """The domain's ``(checkin count stage or None, pre-projection, emission)``."""
     subject = _subject(domain)
-    entries = F.concat(*[_field_entries(e, F.col("subject")) for e in EMISSIONS if e.domain == domain])
+    fields = [_field_entries(e, subject) for e in EMISSIONS if e.domain == domain]
     count = None
     if domain == "checkin":
         # Counter(dates) per row ≡ a count per (business, date): a business
@@ -220,7 +230,8 @@ def _render(domain: str) -> tuple:
         count = ([F.col("business_id"), days.alias("d")],
                  [F.col("business_id"), normalize_datetime(F.col("d")).alias("d")],
                  F.count(F.lit(1)).alias("n"))
-    pre = [F.col("*"), subject.alias("subject"), *_extra_columns(domain, subject)]
+    pre = [F.col("*"), subject.alias("subject"), *(c for cols, _ in fields for c in cols)]
+    entries = F.concat(*(out for _, out in fields))
     return count, pre, [F.inline(entries), F.lit(domain).alias("source_domain")]
 
 
@@ -256,3 +267,14 @@ def split_rows(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
 def emit_all(records: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     """``(triples, errors)`` of all domains present in ``records``."""
     return split_rows(emit_rows(records))
+
+
+def emit_cut(
+    records: dict[str, DataFrame], persisted_out: list[DataFrame]
+) -> tuple[DataFrame, DataFrame]:
+    """``emit_all`` for a caller that writes both frames: they read one
+    DISK_ONLY cut of ``emit_rows``, so the two writes run the emission once.
+    The cut is appended to ``persisted_out`` for the caller to unpersist."""
+    rows = emit_rows(records).persist(StorageLevel.DISK_ONLY)
+    persisted_out.append(rows)
+    return split_rows(rows)

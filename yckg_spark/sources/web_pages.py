@@ -115,14 +115,12 @@ def parse_records(
 
     The five domain parses all read the post-extraction classified frame,
     so it needs a stage cut — without one every domain re-runs the
-    extraction UDF. Each parsed domain frame is cut too: callers that emit
-    triples and errors in two actions (``emit_all`` then two writes) would
-    otherwise re-run the JSON parse per action. With both cuts the
-    extraction UDF and each domain's parse run exactly once per build.
+    extraction UDF. The parsed domain frames are not cut: a build reads
+    each once, through ``emit.emit_cut``.
 
-    ``cache=True`` persists the classified frame and each parsed domain
-    frame DISK_ONLY and appends them to ``persisted_out`` so the caller can
-    unpersist them; ``cache=False`` leaves the plan uncut.
+    ``cache=True`` persists the classified frame DISK_ONLY and appends it
+    to ``persisted_out`` so the caller can unpersist it; ``cache=False``
+    leaves the plan uncut.
     """
     pages = pages.filter(F.col("lang") == lang)
     if use_extraction:
@@ -147,20 +145,13 @@ def parse_records(
         if persisted_out is not None:
             persisted_out.append(classified)
 
-    out: dict[str, DataFrame] = {}
-    for domain in DOMAINS:
-        parsed = (
-            classified.filter(F.col("domain") == domain)
-            .select(
-                "url",
-                "warc_ts",
-                F.from_json(F.col("record_text"), _RECORD_SCHEMAS[domain]).alias("r"),
-            )
-            .select("url", "warc_ts", "r.*")
+    return {
+        domain: classified.filter(F.col("domain") == domain)
+        .select(
+            "url",
+            "warc_ts",
+            F.from_json(F.col("record_text"), _RECORD_SCHEMAS[domain]).alias("r"),
         )
-        if cache:
-            parsed = parsed.persist(StorageLevel.DISK_ONLY)
-            if persisted_out is not None:
-                persisted_out.append(parsed)
-        out[domain] = parsed
-    return out
+        .select("url", "warc_ts", "r.*")
+        for domain in DOMAINS
+    }

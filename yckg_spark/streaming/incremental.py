@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from yckg_spark import schemas
 from yckg_spark.operators.canonicalize import dedup_triples
-from yckg_spark.operators.emit import emit_all
+from yckg_spark.operators.emit import emit_cut
 from yckg_spark.sources.web_pages import parse_records
 
 
@@ -53,15 +53,15 @@ def start_incremental_build(
     pages = read_web_pages_stream(spark, source_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist the parsed domain frames: two actions (the triples and
-        # errors writes) follow — without the stage cut the extraction UDF
-        # and per-domain parses re-run per action
+        # the same stage cuts as a batch commit: the classified pages, and
+        # the emitted rows that both writes read — without them the
+        # extraction UDF and the emission re-run per write
         persisted: list[DataFrame] = []
         records = parse_records(
             batch_df, use_extraction=use_extraction, persisted_out=persisted
         )
         try:
-            triples, errors = emit_all(records)
+            triples, errors = emit_cut(records, persisted)
             triples = dedup_triples(triples)
             triples.write.mode("overwrite").parquet(f"{out_dir}/triples/batch={batch_id}")
             errors.write.mode("overwrite").parquet(f"{out_dir}/errors/batch={batch_id}")
