@@ -79,7 +79,8 @@ def test_nt_export_roundtrip(spark, pages, tmp_path):
 def test_bucketed_build_matches_flat_and_prunes(spark, pages, tmp_path):
     """Bucket-partitioned corpus (Iceberg bucket(url) emulation): identical
     store content to the flat-corpus build, AND the per-bucket subset scan
-    is partition-pruned (the 0.8-efficiency scaling fix)."""
+    is partition-pruned (the 0.8-efficiency scaling fix). The corpus path is
+    a file:// URI: data and spec sidecar go through the same filesystem."""
     from pyspark.sql import functions as F
 
     from yckg_spark.sources.web_pages import (
@@ -88,9 +89,10 @@ def test_bucketed_build_matches_flat_and_prunes(spark, pages, tmp_path):
         write_bucketed_pages,
     )
 
-    bdir = str(tmp_path / "bucketed")
+    bdir = "file://" + str(tmp_path / "bucketed")
     write_bucketed_pages(pages, bdir, n_buckets=4)
     assert read_bucket_spec(bdir)["n_buckets"] == 4
+    assert read_bucket_spec(str(tmp_path / "bucketed"))["n_buckets"] == 4
 
     bpages = read_web_pages(spark, bdir)
     assert "bucket" in bpages.columns
@@ -252,16 +254,29 @@ def test_vacuum_removes_orphans_keeps_committed(spark, pages, tmp_path):
 
 def test_read_triples_skips_uncommitted_buckets(spark, pages, tmp_path):
     """A bucket dir with no manifest row (a killed run's residue) is not
-    part of the store: the latest read, like the as-of read, leaves it out."""
+    part of the store: the latest read, like the as-of read, leaves it out,
+    and so does compaction, which rewrites the store as read."""
+    from pyspark.sql import functions as F
+
+    from yckg_spark.materialize import compact_store
+
     out = str(tmp_path / "kg")
     run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
     committed = read_triples(spark, out)
     before = committed.count()
     orphan = tmp_path / "kg" / "triples" / "bucket=9" / "predicate=http%3A%2F%2Fex%2Fp"
-    committed.limit(3).drop("bucket", "predicate").write.parquet(str(orphan))
+    committed.limit(3).drop("bucket", "predicate").withColumn(
+        "subject", F.lit("http://ex/orphan")
+    ).write.parquet(str(orphan))
     latest = read_triples(spark, out)
     assert {r["bucket"] for r in latest.select("bucket").distinct().collect()} == {0, 1}
     assert latest.count() == before
+
+    cdir = str(tmp_path / "compacted")
+    result = compact_store(spark, out, cdir, n_buckets=4)
+    compacted = read_triples(spark, cdir)
+    assert compacted.filter(F.col("subject") == "http://ex/orphan").count() == 0
+    assert result["n_triples"] == compacted.count() == dedup_triples(committed).count()
 
 
 def test_manifest_reads_start_no_spark_job(spark, pages, tmp_path):

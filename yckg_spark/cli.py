@@ -106,8 +106,8 @@ def cmd_export_nt(args) -> int:
 
 
 def cmd_compact(args) -> int:
-    """Global dedup + canonical re-layout of any triples output (e.g. a
-    streaming run's batch dirs) — the Iceberg rewrite-data-files job."""
+    """Global dedup + canonical re-layout of a store's committed triples
+    (a build or a stream) — the Iceberg rewrite-data-files job."""
     from yckg_spark.materialize import compact_store
 
     spark = _spark(args)
@@ -520,7 +520,7 @@ def cmd_select(args) -> int:
         cur = cur.join(shards.select(id_col, "n_tokens", "shard"), on=id_col)
 
     obs = write_observed(
-        cur, args.output, partition_by="shard" if packed else None,
+        cur, args.output, partition_by=["shard"] if packed else None,
         n_out=F.count(F.lit(1)),
         max_shard=F.max(F.col("shard") if packed else F.lit(0)),
     )
@@ -587,7 +587,7 @@ def cmd_link(args) -> int:
 
     n_triples = write_observed(
         location_triples(biz, snaps, linked=linked), f"{args.output}/triples",
-        partition_by="predicate", n=F.count(F.lit(1)),
+        partition_by=["predicate"], n=F.count(F.lit(1)),
     )["n"]
     for df in persisted + [linked]:
         df.unpersist()
@@ -773,7 +773,7 @@ def cmd_chunk(args) -> int:
         )
         chunks = chunks.join(shards.select("cid", "shard"), on="cid")
     obs = write_observed(
-        chunks, args.output, partition_by="shard" if packed else None,
+        chunks, args.output, partition_by=["shard"] if packed else None,
         n_chunks=F.count(F.lit(1)),
         n_tokens=F.sum("n_tokens"),
         max_shard=F.max(F.col("shard") if packed else F.lit(0)),

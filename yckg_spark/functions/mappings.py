@@ -132,10 +132,6 @@ IRI_ROOTS: dict[str, str] = {
 }
 
 
-def iri_root(domain: str) -> str:
-    return IRI_ROOTS[domain]
-
-
 # ---------------------------------------------------------------------------
 # The emission table
 # ---------------------------------------------------------------------------

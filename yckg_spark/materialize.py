@@ -3,8 +3,9 @@ checkpoint-resume, metrics, and N-Triples export.
 
 Production sink is a partitioned Iceberg table (atomic snapshot commits);
 this sandbox has no Iceberg runtime jar, so the store is directory-partitioned
-parquet with the same commit discipline: one *bucket* of input pages is
-processed per commit, the triples land under ``triples/bucket=K/`` in a
+parquet with the same commit discipline: one *bucket* of input pages (a
+build bucket or a stream micro-batch) is processed per commit
+(``commit_bucket``), the triples land under ``triples/bucket=K/`` in a
 single atomic job, and the lineage manifest row (with per-commit metrics) is
 written only after the data job succeeds — so a crash between the two at
 worst re-processes one bucket into an overwritten partition dir (idempotent),
@@ -30,13 +31,14 @@ import json
 import os
 import time
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from yckg_spark import schemas
 from yckg_spark.operators.canonicalize import DEDUP_KEY, dedup_triples
-from yckg_spark.operators.emit import emit_cut
+from yckg_spark.operators.emit import emit_rows, split_rows
 from yckg_spark.sources.web_pages import parse_records
 
 N_BUCKETS_DEFAULT = 8
@@ -50,18 +52,19 @@ STORE_SCHEMA = StructType(
 
 
 def write_observed(
-    df: DataFrame, path: str, *, partition_by: str | None = None, **aggs: Column
+    df: DataFrame, path: str, *, partition_by: list[str] | None = None, **aggs: Column
 ) -> dict:
-    """Overwrite ``df`` as parquet at ``path`` and return ``aggs`` (name →
-    aggregate Column) as computed over the rows written.
+    """Overwrite ``df`` as parquet at ``path``, partitioned by the columns
+    ``partition_by``, and return ``aggs`` (name → aggregate Column) as
+    computed over the rows written.
 
     The aggregates ride the write job as an Observation (a CollectMetrics
     node), so the written output is never re-read to count it.
     """
     obs = Observation()
     writer = df.observe(obs, *[c.alias(n) for n, c in aggs.items()]).write.mode("overwrite")
-    if partition_by is not None:
-        writer = writer.partitionBy(partition_by)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return obs.get
 
@@ -90,6 +93,94 @@ def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
     return {r["bucket"] for r in read_manifest(spark, out_dir)}
 
 
+def commit_bucket(
+    spark: SparkSession,
+    pages: DataFrame,
+    out_dir: str,
+    bucket: int,
+    sequence_number: int,
+    *,
+    use_extraction: bool = True,
+) -> dict:
+    """Commit ``pages`` as bucket ``bucket`` of the store at ``out_dir`` and
+    return its manifest row — the one write path of the store's triples and
+    errors (a build bucket and a stream micro-batch alike).
+
+    The triples land under ``triples/bucket=K/predicate=P``, the error rows
+    under ``errors/bucket=K``, and the manifest row ``bucket-K.json`` only
+    after both data writes succeeded. Each write overwrites its dir, so
+    re-running a commit with the same ``bucket`` replaces it.
+    """
+    from yckg_spark.fsutil import write_text
+
+    # Commit metrics ride the write jobs as Observations (CollectMetrics
+    # nodes) instead of re-reading the written partitions afterwards.
+    # obs_pages sits on the raw pages (pre lang-filter, the page count the
+    # manifest records).
+    obs_pages = Observation()
+    pages = pages.observe(obs_pages, F.count(F.lit(1)).alias("n"))
+    persisted: list[DataFrame] = []
+    try:
+        records = parse_records(pages, use_extraction=use_extraction, persisted_out=persisted)
+        # one DISK_ONLY cut of the emitted rows feeds both sinks, so the
+        # triples and errors writes run the emission once
+        rows = emit_rows(records).persist(StorageLevel.DISK_ONLY)
+        persisted.append(rows)
+        triples, errors = split_rows(rows)
+
+        t0 = time.time()
+        # predicate-partitioned store: every CQ filters `predicate = <iri>`
+        # (one pattern per self-join side), so the query side prunes to the
+        # matching partition dirs instead of re-scanning the full store per
+        # pattern — the Iceberg identity-partition(predicate) layout, nested
+        # under the write side's bucket partitioning. Predicate cardinality
+        # is small (~50 vocabulary IRIs), so this adds no small-file blowup.
+        n_triples = write_observed(
+            dedup_triples(triples),
+            os.path.join(out_dir, "triples", f"bucket={bucket}"),
+            partition_by=["predicate"],
+            n=F.count(F.lit(1)),
+        )["n"]
+        n_errors = write_observed(
+            errors, os.path.join(out_dir, "errors", f"bucket={bucket}"), n=F.count(F.lit(1))
+        )["n"]
+        t_write = time.time() - t0
+        n_pages = obs_pages.get["n"]
+        elapsed = time.time() - t0
+
+        commit = {
+            "bucket": bucket,
+            "n_pages": n_pages,
+            "n_triples": n_triples,
+            "n_errors": n_errors,
+            "seconds": round(elapsed, 3),
+            "write_s": round(t_write, 3),
+            "counts_s": round(elapsed - t_write, 3),
+            "triples_per_sec": round(n_triples / elapsed, 1) if elapsed else None,
+            "commit_id": f"b{bucket}-{n_pages}-{n_triples}",
+            # snapshot lineage for time-travel reads (Iceberg snapshot id /
+            # commit timestamp equivalents). Buckets are immutable once
+            # committed, so the table state as of sequence N is exactly the
+            # union of buckets with sequence <= N. Within one writer the
+            # sequence is a total order; concurrent shard writers can tie
+            # (they'd race Iceberg's optimistic commit too) — as-of reads
+            # then include all tied commits, which is still deterministic.
+            "sequence_number": sequence_number,
+            "committed_at_ms": int(time.time() * 1000),
+        }
+        write_text(
+            spark, os.path.join(_manifest_path(out_dir), f"bucket-{bucket}.json"),
+            json.dumps(commit),
+        )
+        return commit
+    finally:
+        # drop exactly this commit's stage cuts (classified pages, emitted
+        # rows) — a blanket clearCache() would also evict unrelated frames a
+        # shared session (tests, bench harness, callers) has persisted
+        for df in persisted:
+            df.unpersist()
+
+
 def run_resumable(
     spark: SparkSession,
     pages: DataFrame,
@@ -99,7 +190,8 @@ def run_resumable(
     fail_after: int | None = None,
     only_buckets: list[int] | None = None,
 ) -> dict:
-    """Build the KG bucket-by-bucket with commit-level lineage.
+    """Build the KG bucket-by-bucket with commit-level lineage: one
+    ``commit_bucket`` per bucket that has no manifest row yet.
 
     ``fail_after`` aborts after that many bucket commits (test hook for the
     kill-and-resume scenario). ``only_buckets`` restricts this process to a
@@ -107,7 +199,7 @@ def run_resumable(
     real cluster) split one build between them; each writes disjoint
     partitions and manifest rows, so shards compose. Returns run metrics.
     """
-    from yckg_spark.fsutil import mkdirs, write_text
+    from yckg_spark.fsutil import mkdirs
 
     mkdirs(spark, _manifest_path(out_dir))
     prior = read_manifest(spark, out_dir)
@@ -124,84 +216,23 @@ def run_resumable(
         bucketed = pages.withColumn("__bucket", F.pmod(F.hash("url"), F.lit(n_buckets)))
         bcol = "__bucket"
 
-    commits = 0
-    metrics_all: list[dict] = []
+    commits: list[dict] = []
     for b in range(n_buckets):
         if b in done or (only_buckets is not None and b not in only_buckets):
             continue
         subset = bucketed.filter(F.col(bcol) == b).drop(bcol)
-        # Commit metrics ride the write jobs as Observations (CollectMetrics
-        # nodes) instead of re-reading the written partitions afterwards —
-        # three saved actions per commit; at 100 TB the old way re-read
-        # every written partition once. obs_pages sits on the raw bucket
-        # subset (pre lang-filter, the page count the manifest records);
-        # filters don't push through CollectMetrics, but this scan read the
-        # whole bucket for the separate count() before, so net I/O shrinks.
-        obs_pages = Observation()
-        subset = subset.observe(obs_pages, F.count(F.lit(1)).alias("n"))
-        persisted: list[DataFrame] = []
-        records = parse_records(subset, use_extraction=use_extraction, persisted_out=persisted)
-        # one emission pass feeds both sinks (the triples and errors writes)
-        triples, errors = emit_cut(records, persisted)
-        triples = dedup_triples(triples)
-
-        t0 = time.time()
-        tdir = os.path.join(out_dir, "triples", f"bucket={b}")
-        edir = os.path.join(out_dir, "errors", f"bucket={b}")
-        # predicate-partitioned store: every CQ filters `predicate = <iri>`
-        # (one pattern per self-join side), so the query side prunes to the
-        # matching partition dirs instead of re-scanning the full store per
-        # pattern — the Iceberg identity-partition(predicate) layout, nested
-        # under the write side's bucket partitioning. Predicate cardinality
-        # is small (~50 vocabulary IRIs), so this adds no small-file blowup.
-        n_triples = write_observed(
-            triples, tdir, partition_by="predicate", n=F.count(F.lit(1))
-        )["n"]
-        n_errors = write_observed(errors, edir, n=F.count(F.lit(1)))["n"]
-        t_write = time.time() - t0
-        n_pages = obs_pages.get["n"]
-        elapsed = time.time() - t0
-        t_counts = elapsed - t_write
-
-        commit = {
-            "bucket": b,
-            "n_pages": n_pages,
-            "n_triples": n_triples,
-            "n_errors": n_errors,
-            "seconds": round(elapsed, 3),
-            "write_s": round(t_write, 3),
-            "counts_s": round(t_counts, 3),
-            "triples_per_sec": round(n_triples / elapsed, 1) if elapsed else None,
-            "commit_id": f"b{b}-{n_pages}-{n_triples}",
-            # snapshot lineage for time-travel reads (Iceberg snapshot id /
-            # commit timestamp equivalents). Buckets are immutable once
-            # committed, so the table state as of sequence N is exactly the
-            # union of buckets with sequence <= N. Within one writer the
-            # sequence is a total order; concurrent shard writers can tie
-            # (they'd race Iceberg's optimistic commit too) — as-of reads
-            # then include all tied commits, which is still deterministic.
-            "sequence_number": seq_base + commits + 1,
-            "committed_at_ms": int(time.time() * 1000),
-        }
-        # manifest row written only after the data commit succeeded
-        write_text(
-            spark, os.path.join(_manifest_path(out_dir), f"bucket-{b}.json"),
-            json.dumps(commit),
+        commits.append(
+            commit_bucket(
+                spark, subset, out_dir, b, seq_base + len(commits) + 1,
+                use_extraction=use_extraction,
+            )
         )
-        metrics_all.append(commit)
-        commits += 1
-        # drop exactly this bucket's stage-cut blocks (classified, parsed
-        # domains, emitted rows) before the next bucket materializes its
-        # own — a blanket clearCache() would also evict unrelated frames a
-        # shared session (tests, bench harness, callers) has persisted
-        for df in persisted:
-            df.unpersist()
-        if fail_after is not None and commits >= fail_after:
-            raise RuntimeError(f"injected failure after {commits} commits")
+        if fail_after is not None and len(commits) >= fail_after:
+            raise RuntimeError(f"injected failure after {len(commits)} commits")
     return {
-        "buckets_committed": commits,
-        "total_triples": sum(m["n_triples"] for m in metrics_all),
-        "commits": metrics_all,
+        "buckets_committed": len(commits),
+        "total_triples": sum(m["n_triples"] for m in commits),
+        "commits": commits,
     }
 
 
@@ -231,7 +262,7 @@ def read_triples(
     ``committed_at_ms``) at or below the bound. The read is partition-pruned
     at the path level: later buckets, and bucket dirs with no manifest row
     (a killed run's residue), are never opened. A store without a manifest
-    (``compact_store`` or stream output) is read whole.
+    (``compact_store`` output) is read whole.
     """
     tdir = os.path.join(out_dir, "triples")
     as_of = as_of_sequence is not None or as_of_timestamp_ms is not None
@@ -258,24 +289,23 @@ def compact_store(
     out_dir: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
 ) -> dict:
-    """Rewrite any triples output (a streaming run's ``batch=N`` dirs, a
-    resumable build, or a union of shards) as one globally-deduplicated
-    store in the canonical layout: ``bucket(subject)`` dirs × ``predicate``
-    partitions. The streaming path appends at-least-once-shaped batch dirs
-    (idempotent per batch but never cross-batch deduped); this is the
-    downstream compaction job that makes the store equivalent to a batch
-    build — the Iceberg rewrite-data-files maintenance action.
+    """Rewrite a store (a resumable build, a stream's micro-batches, or a
+    union of shards) as one globally-deduplicated store in the canonical
+    layout: ``bucket(subject)`` dirs × ``predicate`` partitions. Each
+    commit dedups only within itself, so a triple emitted by two buckets
+    is stored twice; this is the downstream compaction job that makes the
+    store a set — the Iceberg rewrite-data-files maintenance action.
 
-    One shuffle (the dedup groupBy); the write is partitioned by the same
-    dedup output, so no second shuffle.
+    It reads what ``read_triples`` reads (the committed buckets only), in
+    one shuffle (the dedup groupBy); the write is partitioned by the same
+    dedup output, so no second shuffle, and the count rides the write.
     """
-    triples = spark.read.parquet(os.path.join(in_dir, "triples"))
+    triples = read_triples(spark, in_dir)
     extra = [c for c in triples.columns if c not in DEDUP_KEY + ["source_domain"]]
     deduped = dedup_triples(triples.drop(*extra))
     out = deduped.withColumn("bucket", F.pmod(F.hash("subject"), F.lit(n_buckets)))
     tdir = os.path.join(out_dir, "triples")
-    out.write.mode("overwrite").partitionBy("bucket", "predicate").parquet(tdir)
-    n = spark.read.parquet(tdir).count()
+    n = write_observed(out, tdir, partition_by=["bucket", "predicate"], n=F.count(F.lit(1)))["n"]
     return {"n_triples": n, "out": tdir, "n_buckets": n_buckets}
 
 

@@ -39,6 +39,4 @@ INSTANCE_OF_PREDICATE = WDT + "P31"
 Q_HUMAN_SETTLEMENT = "Q486972"
 Q_COUNTY = "Q28575"
 Q_STATE = "Q7275"
-Q_PROVINCE = "Q11828004"
 Q_COUNTRY = "Q6256"
-Q_CITY_COUNTY = "Q3301053"  # consolidated city-county, excluded from county search

@@ -14,9 +14,10 @@ domain. Checkin first counts its (business, date) pairs with a ``groupBy``.
 Every candidate is a triple or an error row. A value its field's sentinel
 rule rejects becomes a row with a non-null ``kind`` that carries the raw
 key and value (the reference's none list, create_yelp_nt_files.py:112-114).
-``emit_rows`` returns both kinds in one frame; ``emit_all`` splits it into
-``(triples, errors)``, and ``emit_cut`` splits a DISK_ONLY cut of it, so a
-caller that writes both runs the emission once.
+``emit_rows`` returns both kinds in one frame and ``split_rows`` splits it
+into ``(triples, errors)``; a store commit (``materialize.commit_bucket``)
+splits a DISK_ONLY cut of it, so its two writes run the emission once.
+``emit_all`` is the uncut ``split_rows(emit_rows(...))``.
 
 The Columns are built once per SparkContext and reused by every call, so a
 commit's driver work is a handful of DataFrame calls. Blank nodes are
@@ -31,7 +32,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark import SparkContext, StorageLevel
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -268,13 +269,3 @@ def emit_all(records: dict[str, DataFrame]) -> tuple[DataFrame, DataFrame]:
     """``(triples, errors)`` of all domains present in ``records``."""
     return split_rows(emit_rows(records))
 
-
-def emit_cut(
-    records: dict[str, DataFrame], persisted_out: list[DataFrame]
-) -> tuple[DataFrame, DataFrame]:
-    """``emit_all`` for a caller that writes both frames: they read one
-    DISK_ONLY cut of ``emit_rows``, so the two writes run the emission once.
-    The cut is appended to ``persisted_out`` for the caller to unpersist."""
-    rows = emit_rows(records).persist(StorageLevel.DISK_ONLY)
-    persisted_out.append(rows)
-    return split_rows(rows)

@@ -4,10 +4,9 @@ their existing SPARQL texts (reference: Code/CompetencyQuestions/
 Yelp_CQ.md, executed there via a Virtuoso endpoint, Code/run_query.py:6-44)
 verbatim against this engine's triples view.
 
-Supported surface (everything the 16 Yelp CQs exercise; the external-KG
-CQs use SERVICE blocks / property paths / FILTER NOT EXISTS against
-remote endpoints and stay re-expressed as the snapshot-table plans in
-plans/external_queries.py):
+Supported surface (everything the 16 Yelp CQs exercise; the reference's
+external-KG CQs use SERVICE blocks / property paths / FILTER NOT EXISTS
+against remote Wikidata/DBpedia endpoints and are out of scope):
 
   * PREFIX declarations (the reference's namespaces are pre-registered);
   * SELECT with plain vars and COUNT/SUM/AVG/MIN/MAX aggregates —

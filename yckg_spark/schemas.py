@@ -131,65 +131,3 @@ ERRORS = StructType(
         StructField("source_domain", StringType(), True),
     ]
 )
-
-# ---------------------------------------------------------------------------
-# Snapshot lookup tables (replace all remote SPARQL/REST/Nominatim calls —
-# reference S4-S6: wikidata_functions.py, location_from_wikidata.py:15-64,
-# reverse_coordinate_search.py:40-49; never per-row HTTP in Spark).
-# ---------------------------------------------------------------------------
-CATEGORY_SCHEMA_MAPPINGS = StructType(
-    [
-        StructField("YelpCategory", StringType(), False),
-        # stringified python list, exactly like the reference CSV
-        StructField("SchemaType", StringType(), False),
-    ]
-)
-
-SCHEMAORG_TYPES = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("label", StringType(), True),
-        StructField("subTypeOf", StringType(), True),  # ", "-separated multi-parent
-    ]
-)
-
-WD_SCHEMA_LINKS = StructType(  # snapshot of the wdt:P1709 sameAs query
-    [
-        StructField("schema_iri", StringType(), False),
-        StructField("qid", StringType(), False),  # full entity IRI
-        StructField("label", StringType(), True),
-    ]
-)
-
-WD_LABELS = StructType(  # snapshot of wbsearchentities, result order preserved
-    [
-        StructField("search_label", StringType(), False),
-        StructField("qid", StringType(), False),
-        StructField("rank", LongType(), False),
-    ]
-)
-
-WD_ENTITIES = StructType(
-    [
-        StructField("qid", StringType(), False),
-        StructField("label", StringType(), True),
-        StructField("kind", StringType(), True),  # settlement/state/province/county/country
-        StructField("lat", DoubleType(), True),
-        StructField("lon", DoubleType(), True),
-    ]
-)
-
-WD_ADMIN = StructType(  # pre-closed P131* closure: child contained-in parent
-    [
-        StructField("child_qid", StringType(), False),
-        StructField("parent_qid", StringType(), False),
-    ]
-)
-
-WD_POPULATION = StructType(
-    [
-        StructField("qid", StringType(), False),
-        StructField("population", LongType(), False),
-        StructField("as_of", StringType(), False),  # ISO date
-    ]
-)

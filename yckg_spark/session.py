@@ -3,8 +3,9 @@
 Designed for a 1000-executor cluster reading ~100 TB; tested on local[N].
 All knobs are plain public Spark configs — AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), Arrow on (every pandas UDF is an
-Arrow batch transfer), and shuffle partitioning sized by an env override so
-the same code runs at sf0.001 smoke and at cluster scale.
+Arrow batch transfer), and shuffle partitioning sized by the caller
+(``shuffle_partitions``, the CLI's ``--shuffle-partitions``) so the same
+code runs at sf0.001 smoke and at cluster scale.
 """
 
 from __future__ import annotations
@@ -12,8 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("YCKG_SHUFFLE_PARTITIONS", "32"))
 
 
 def get_spark(
@@ -32,7 +31,7 @@ def get_spark(
     # set) and already carries --master; never override it there. Standalone
     # (pytest / bench) defaults to the sandbox's local master.
     if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        master = os.environ.get("YCKG_MASTER", f"local[{cpus}]")
+        master = f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -43,24 +42,16 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for every pandas_udf / mapInPandas boundary. Batch size is
-        # tunable: min-of-3 interleaved reps on the bench corpus measured
-        # 50k-row batches ~19% faster than 10k at 8 threads (fewer
-        # pipe/GIL round-trips) and a wash at 2; default stays 10k for
-        # bounded per-worker memory — raise via YCKG_ARROW_BATCH on
-        # memory-rich executors.
+        # Arrow for every pandas_udf / mapInPandas boundary. Min-of-3
+        # interleaved reps on the bench corpus measured 50k-row batches ~19%
+        # faster than 10k at 8 threads (fewer pipe/GIL round-trips) and a
+        # wash at 2; 10k keeps per-worker memory bounded.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("YCKG_ARROW_BATCH", "10000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Broadcast threshold: every mapping/snapshot table in this pipeline
         # is < 100k rows; make sure they always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         # Input split sizing. At 100 TB the 128 MB default is right (millions
         # of splits regardless); at sandbox scale a FLAT few-big-files corpus
         # may need smaller splits so the UDF-heavy extraction stage fans out

@@ -49,15 +49,20 @@ def bucket_spec_path(path: str) -> str:
 
 
 def read_bucket_spec(path: str) -> dict | None:
-    """n_buckets the dataset was written with, or None if not bucketed."""
-    import json
-    import os
+    """n_buckets the dataset was written with, or None if not bucketed.
 
+    Read through the active session's Hadoop filesystem, the one Spark
+    resolves ``path`` with, so a ``file://``, ``hdfs://`` or ``s3a://``
+    dataset finds its spec."""
+    import json
+
+    from yckg_spark.fsutil import exists, read_text
+
+    spark = SparkSession.active()
     p = bucket_spec_path(path)
-    if not os.path.exists(p):
+    if not exists(spark, p):
         return None
-    with open(p) as fh:
-        return json.load(fh)
+    return json.loads(read_text(spark, p))
 
 
 def with_trusted_bucket(
@@ -83,8 +88,11 @@ def write_bucketed_pages(pages: DataFrame, path: str, n_buckets: int) -> None:
 
     The spec file records n_buckets so readers can verify their bucket
     count matches the physical layout before trusting the partition column.
+    It is written through the same Hadoop filesystem as the data.
     """
     import json
+
+    from yckg_spark.fsutil import write_text
 
     (
         pages.withColumn("bucket", F.pmod(F.hash("url"), F.lit(n_buckets)))
@@ -95,8 +103,10 @@ def write_bucketed_pages(pages: DataFrame, path: str, n_buckets: int) -> None:
         .option("parquet.block.size", 4 * 1024 * 1024)
         .parquet(path)
     )
-    with open(bucket_spec_path(path), "w") as fh:
-        json.dump({"n_buckets": n_buckets, "expr": "pmod(hash(url), n_buckets)"}, fh)
+    write_text(
+        pages.sparkSession, bucket_spec_path(path),
+        json.dumps({"n_buckets": n_buckets, "expr": "pmod(hash(url), n_buckets)"}),
+    )
 
 
 def parse_records(
@@ -115,8 +125,9 @@ def parse_records(
 
     The five domain parses all read the post-extraction classified frame,
     so it needs a stage cut — without one every domain re-runs the
-    extraction UDF. The parsed domain frames are not cut: a build reads
-    each once, through ``emit.emit_cut``.
+    extraction UDF. The parsed domain frames are not cut: a store commit
+    (``materialize.commit_bucket``) reads each once, through one cut of the
+    emitted rows.
 
     ``cache=True`` persists the classified frame DISK_ONLY and appends it
     to ``persisted_out`` so the caller can unpersist it; ``cache=False``

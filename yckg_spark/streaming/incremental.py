@@ -2,15 +2,18 @@
 
 The reference is strictly batch (SURVEY §2.12) — this is the engine's
 *additional* ingestion mode: new web-page files landing in a directory are
-picked up exactly once and flow through the SAME extraction→parse→emit
-pipeline, with Spark's streaming checkpoint supplying the at-least-once →
-exactly-once file tracking that the batch path gets from the lineage
-manifest.
+picked up exactly once, with Spark's streaming checkpoint supplying the
+file tracking that the batch path gets from the lineage manifest.
+
+Each micro-batch is one store commit through the same
+``materialize.commit_bucket`` a batch build runs per bucket, so a stream's
+output is an ordinary store: committed buckets, predicate partitions, a
+manifest row per batch, and ``read_triples``, ``snapshots``, as-of reads,
+``vacuum`` and ``compact`` work on it unchanged.
 
 ``Trigger.AvailableNow`` drains everything currently available and stops —
 the cron-able shape for periodic crawls; leave ``available_now=False`` for
-a long-running tail. foreachBatch reuses the batch emitters unchanged, so
-streaming and batch cannot drift apart semantically.
+a long-running tail.
 """
 
 from __future__ import annotations
@@ -18,9 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from yckg_spark import schemas
-from yckg_spark.operators.canonicalize import dedup_triples
-from yckg_spark.operators.emit import emit_cut
-from yckg_spark.sources.web_pages import parse_records
+from yckg_spark.materialize import commit_bucket
 
 
 def read_web_pages_stream(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -36,38 +37,23 @@ def start_incremental_build(
     use_extraction: bool = True,
     available_now: bool = True,
 ):
-    """web_pages files → triples parquet, exactly-once per input file.
+    """web_pages files → a triple store, exactly-once per input file.
 
-    Exactly-once holds because each micro-batch's writes are IDEMPOTENT:
-    output lands under ``batch=<batch_id>/`` with per-directory overwrite
-    (the streaming mirror of the batch path's bucket-manifest discipline).
-    A crash between the data writes and the checkpoint commit re-runs the
-    batch into the same directories — replacing, never duplicating, for
-    errors as well as triples.
+    Micro-batch N commits bucket N with sequence number N + 1. Both stay the
+    same when Spark replays a batch, so exactly-once holds because a commit
+    is idempotent: a crash between the commit and the checkpoint re-runs the
+    batch into the same bucket, overwriting its triples, errors and manifest
+    row — replacing, never duplicating. Like a build bucket, a batch is
+    deduped only within itself; ``compact_store`` dedups across batches.
 
     Returns the StreamingQuery; callers ``query.awaitTermination()``.
-    Note: dedup here is per-micro-batch (cross-batch duplicates are handled
-    by the downstream global dedup / compaction job, exactly like the batch
-    path dedups per bucket — canonicalize.dedup_triples over the store).
     """
     pages = read_web_pages_stream(spark, source_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the same stage cuts as a batch commit: the classified pages, and
-        # the emitted rows that both writes read — without them the
-        # extraction UDF and the emission re-run per write
-        persisted: list[DataFrame] = []
-        records = parse_records(
-            batch_df, use_extraction=use_extraction, persisted_out=persisted
+        commit_bucket(
+            spark, batch_df, out_dir, batch_id, batch_id + 1, use_extraction=use_extraction
         )
-        try:
-            triples, errors = emit_cut(records, persisted)
-            triples = dedup_triples(triples)
-            triples.write.mode("overwrite").parquet(f"{out_dir}/triples/batch={batch_id}")
-            errors.write.mode("overwrite").parquet(f"{out_dir}/errors/batch={batch_id}")
-        finally:
-            for df in persisted:
-                df.unpersist()
 
     writer = (
         pages.writeStream.foreachBatch(process_batch)
