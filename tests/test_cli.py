@@ -223,16 +223,25 @@ def test_cli_snapshots_and_time_travel_query(spark, tmp_path, capsys, smoke_fixt
 @pytest.mark.parametrize(
     "extra",
     [
-        ["--cq", "cq6", "--sparql", "SELECT ?s WHERE { ?s ?p ?o . }"],
-        ["--cq", "cq6", "--sparql-file", "cq6.rq"],
-        ["--input-format", "nt", "--cq", "cq6", "--as-of-sequence", "1"],
-        ["--input-format", "nt", "--cq", "cq6", "--as-of-timestamp-ms", "1"],
+        ["query", "--cq", "cq6", "--sparql", "SELECT ?s WHERE { ?s ?p ?o . }"],
+        ["query", "--cq", "cq6", "--sparql-file", "cq6.rq"],
+        ["query", "--input-format", "nt", "--cq", "cq6", "--as-of-sequence", "1"],
+        ["query", "--input-format", "nt", "--cq", "cq6", "--as-of-timestamp-ms", "1"],
+        # --keep-best only applies to the near-dup component paths; with
+        # --method exact or --against it must error, not silently keep min-id
+        ["dedup", "--output", "kept", "--method", "exact", "--keep-best", "quality"],
+        ["dedup", "--output", "kept", "--against", "corpus", "--keep-best", "quality"],
     ],
 )
-def test_cli_query_conflicting_flags_are_usage_errors(tmp_path, capsys, extra):
-    """Flag combinations the query path cannot honour exit 2 before any
-    read, instead of running one flag and echoing the other."""
-    assert main(["query", "--input", str(tmp_path / "kg"), *extra]) == 2
+def test_cli_query_conflicting_flags_are_usage_errors(tmp_path, capsys, monkeypatch, extra):
+    """Flag combinations a subcommand cannot honour exit 2 before any
+    Spark work, instead of running one flag and ignoring the other."""
+    def no_spark(*args, **kwargs):
+        raise AssertionError("a usage error must be raised before the session is built")
+
+    monkeypatch.setattr("yckg_spark.session.get_spark", no_spark)
+    cmd, *flags = extra
+    assert main([cmd, "--input", str(tmp_path / "in"), *flags]) == 2
     cap = capsys.readouterr()
     assert cap.out == ""
     assert cap.err.startswith("error: ")
@@ -495,6 +504,17 @@ def test_cli_chunk_with_packing(spark, tmp_path, capsys):
     assert [r["shard"] for r in rows] == [0, 0, 1, 1, 2, 2]
 
 
+def test_cli_chunk_cid_overflow_is_usage_error(spark, tmp_path, capsys):
+    """Doc ids so large that doc_id * stride + chunk_id would wrap a long
+    are refused as a usage error: one error line on stderr, no JSON."""
+    inp, out = str(tmp_path / "docs"), str(tmp_path / "chunks")
+    _write_docs(spark, inp, [(2**62, " ".join(f"a{i}" for i in range(10)))])
+    assert main(["chunk", "--input", inp, "--output", out, "--chunk-tokens", "4"]) == 2
+    cap = capsys.readouterr()
+    assert cap.out == ""
+    assert cap.err.startswith("error: ") and "pre-map ids" in cap.err
+
+
 def test_cli_curate_dedup_spans_rewrites_text(spark, tmp_path, capsys):
     """--dedup-spans excises cross-document duplicated spans from the
     surviving documents' text and reports the token accounting."""
@@ -515,19 +535,6 @@ def test_cli_curate_dedup_spans_rewrites_text(spark, tmp_path, capsys):
     assert kept[1] == "intro words tail one here"
     assert kept[2] == "going elsewhere instead"
     assert kept[3] == "nothing shared in this document at all"
-
-
-def test_cli_dedup_keep_best_rejects_non_neardup_methods(spark, tmp_path, capsys):
-    """--keep-best only applies to the near-dup component paths; with
-    --method exact or --against it must error, not silently keep min-id."""
-    inp, out = str(tmp_path / "docs"), str(tmp_path / "kept")
-    _write_docs(spark, inp, [(1, "alpha"), (2, "beta")])
-    assert main(["dedup", "--input", inp, "--output", out,
-                 "--method", "exact", "--keep-best", "quality"]) == 2
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "keep-best" in rep["error"]
-    assert main(["dedup", "--input", inp, "--output", out,
-                 "--against", inp, "--keep-best", "quality"]) == 2
 
 
 def test_cli_curate_span_filter_sees_pre_removal_text(spark, tmp_path, capsys):
@@ -597,3 +604,32 @@ def test_cli_stats_without_lang_source_columns(spark, tmp_path, capsys):
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["n_docs"] == 2
     assert "langs" not in rep and "top_sources" not in rep
+
+
+def test_cli_discover_mappings(spark, tmp_path, capsys, smoke_fixture_dir):
+    """discover-mappings writes the grouped category -> types table and
+    reports the mapping count and the ground-truth evaluation the
+    operators give when called directly."""
+    from yckg_spark.operators.mapping_discovery import (
+        discover_category_mappings,
+        evaluate_mappings,
+    )
+
+    gt_path = f"{smoke_fixture_dir}/ground_truth_category_mappings.parquet"
+    types_path = f"{smoke_fixture_dir}/schemaorg_types.parquet"
+    out = str(tmp_path / "mappings")
+    assert main(["discover-mappings", "--categories", gt_path, "--types", types_path,
+                 "--ground-truth", gt_path, "--output", out]) == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    gt = spark.read.parquet(gt_path)
+    m = discover_category_mappings(
+        gt.select("category"), spark.read.parquet(types_path).select("label"), threshold=0.4
+    )
+    row = evaluate_mappings(m, gt).first()
+    assert rep["mappings"] == m.count() > 0
+    assert rep["evaluation"] == {
+        k: row[k] for k in ("n_gt", "n_pred", "tp", "precision", "recall")
+    }
+    grouped = spark.read.parquet(out)
+    assert sum(len(r["schema_types"]) for r in grouped.collect()) == rep["mappings"]

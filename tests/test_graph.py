@@ -5,7 +5,7 @@ graph, and the dangling-mass conservation property."""
 
 import pytest
 
-from yckg_spark.operators.graph import degrees, pagerank
+from yckg_spark.operators.graph import pagerank
 
 
 def _edges(spark, pairs):
@@ -77,13 +77,6 @@ def test_pagerank_reliable_checkpoint_matches_local(spark, tmp_path):
         )
     )
     assert a == b
-
-
-def test_degrees_full_outer(spark):
-    """Pure sources and pure sinks both appear with a zero side."""
-    out = {r["node"]: (r["out_deg"], r["in_deg"])
-           for r in degrees(_edges(spark, [(1, 2), (1, 3), (2, 3)])).collect()}
-    assert out == {1: (2, 0), 2: (1, 1), 3: (0, 2)}
 
 
 def test_triangle_count_known_graph(spark):

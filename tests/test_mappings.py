@@ -9,9 +9,7 @@ from yckg_spark.functions.mappings import (
     NESTED_ATTRIBUTE_KEYS,
     PREDICATE_MAP,
     TYPE_MAP,
-    datatype_for,
     predicate_for,
-    schema_type_for,
 )
 from yckg_spark.functions.skolem import skolem_iri_py
 from yckg_spark.functions.strings import sanitize_iri_py
@@ -51,7 +49,7 @@ class TestPredicateMapping:
     )
     def test_hand_mapped(self, key, pred, dt):
         assert predicate_for(key) == pred
-        assert datatype_for(key) == dt
+        assert PREDICATE_MAP[key][1] == dt
 
     def test_hours_is_the_only_capitalized_hasX(self):
         assert predicate_for("hours") == YELPVOC + "hasHours"
@@ -60,16 +58,16 @@ class TestPredicateMapping:
 
     def test_fallback(self):
         assert predicate_for("useful") == YELPVOC + "useful"
-        assert datatype_for("useful") is None  # inferred from value
+        assert "useful" not in PREDICATE_MAP  # datatype inferred from value
 
 
 class TestTypeMapping:
     """Mirrors get_schema_type (schema_functions.py:79-102)."""
 
     def test_entities(self):
-        assert schema_type_for("user") == SCHEMA + "Person"
-        assert schema_type_for("business") == SCHEMA + "LocalBusiness"
-        assert schema_type_for("review") == SCHEMA + "UserReview"
+        assert TYPE_MAP["user"] == SCHEMA + "Person"
+        assert TYPE_MAP["business"] == SCHEMA + "LocalBusiness"
+        assert TYPE_MAP["review"] == SCHEMA + "UserReview"
 
     def test_nested(self):
         assert TYPE_MAP["BusinessParking"] == SCHEMA + "ParkingFacility"
@@ -79,7 +77,7 @@ class TestTypeMapping:
         assert TYPE_MAP["hours"] == SCHEMA + "OpeningHoursSpecification"
 
     def test_unknown_is_none(self):
-        assert schema_type_for("nope") is None
+        assert "nope" not in TYPE_MAP
 
 
 class TestIriMinting:

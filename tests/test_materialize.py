@@ -12,6 +12,7 @@ from yckg_spark.materialize import (
     read_manifest,
     read_triples,
     run_resumable,
+    snapshots,
 )
 from yckg_spark.operators.canonicalize import dedup_triples
 from yckg_spark.operators.emit import emit_all
@@ -190,12 +191,10 @@ def test_time_travel_reads(spark, pages, tmp_path):
     of commit N sees exactly the buckets committed by then, a resumed
     run extends the sequence, and the latest read equals the full build.
     Mirrors Iceberg VERSION AS OF / TIMESTAMP AS OF / snapshots table."""
-    from yckg_spark.materialize import snapshots
-
     out = str(tmp_path / "kg_tt")
     with pytest.raises(RuntimeError, match="injected failure"):
         run_resumable(spark, pages, out, n_buckets=4, use_extraction=False, fail_after=2)
-    snaps = snapshots(spark, out).collect()
+    snaps = snapshots(spark, out)
     assert [r["sequence_number"] for r in snaps] == [1, 2]
 
     # as-of the first commit: only that bucket's partition is read
@@ -207,7 +206,7 @@ def test_time_travel_reads(spark, pages, tmp_path):
 
     # resume: the sequence keeps counting past the crash
     run_resumable(spark, pages, out, n_buckets=4, use_extraction=False)
-    snaps2 = snapshots(spark, out).collect()
+    snaps2 = snapshots(spark, out)
     assert [r["sequence_number"] for r in snaps2] == [1, 2, 3, 4]
 
     # as-of the pre-crash state is unchanged by the resume
@@ -281,8 +280,8 @@ def test_read_triples_skips_uncommitted_buckets(spark, pages, tmp_path):
 
 def test_manifest_reads_start_no_spark_job(spark, pages, tmp_path):
     """Reading the manifest is driver-side file IO: listing the committed
-    buckets, the manifest read of an as-of read, and a resume with nothing
-    left to commit start no Spark job."""
+    buckets, the snapshot lineage, the manifest read of an as-of read, and
+    a resume with nothing left to commit start no Spark job."""
     out = str(tmp_path / "kg")
     run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
     sc = spark.sparkContext
@@ -295,6 +294,7 @@ def test_manifest_reads_start_no_spark_job(spark, pages, tmp_path):
     try:
         sc.setJobGroup("manifest-reads", "manifest reads")
         assert completed_buckets(spark, out) == {0, 1}
+        assert [r["sequence_number"] for r in snapshots(spark, out)] == [1, 2]
         read_triples(spark, out, as_of_sequence=1)
         assert run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)[
             "buckets_committed"

@@ -11,19 +11,11 @@ checkpoint-resumable bucket materializer in ``yckg_spark.materialize`` —
 re-running the identical command after a crash resumes from the lineage
 manifest and never duplicates triples.
 
-Subcommands
------------
-build       scan web pages → extraction UDF → parse → emit → dedup →
-            partitioned triple store with per-commit lineage + metrics
-export-nt   gzip N-Triples export of a built triple store (reference's
-            output format, Code/create_yelp_nt_files.py:180-181)
-synth       deterministic synthetic web_pages corpus (fixtures) for
-            benchmarking — no external data
-query       run one of the CQ1-16 competency questions over a built store
-dedup       document dedup: exact / minhash-LSH / simhash pair generation →
-            connected components → keep one representative per component
-link        Wikidata entity-linking pass → location triple cascade, with
-            link-score metrics in the commit manifest
+Every subcommand runs the same way: its flags are checked before any Spark
+work, one SparkSession is built, and the subcommand's result is printed as
+one JSON line on stdout (exit 0). A flag combination or input a subcommand
+cannot honour prints one ``error: ...`` line on stderr, nothing on stdout,
+and exits 2. ``yckg <subcommand> --help`` lists a subcommand's flags.
 """
 
 from __future__ import annotations
@@ -38,26 +30,49 @@ from pathlib import Path
 # run from a checkout, add the repo root.
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
-def _spark(args):
-    from yckg_spark.session import get_spark
+from fixtures.generate import write_fixture
+from yckg_spark import session
+from yckg_spark.fsutil import delete, write_text
+from yckg_spark.materialize import (
+    compact_store, export_nt_gz, read_nt, read_triples, remove_orphans, run_resumable,
+    snapshots, write_observed,
+)
+from yckg_spark.operators.canonicalize import dedup_triples
+from yckg_spark.operators.curation import (
+    decontaminate, dup_span_stats, line_dedup, pii_scrub, repetition_signals, span_dedup,
+)
+from yckg_spark.operators.dedup import (
+    dedup_keep_best, dedup_keep_representatives, exact_dedup, incremental_dedup,
+    minhash_lsh_pairs, normalize_text, simhash_pairs,
+)
+from yckg_spark.operators.enrich_wikidata import (
+    link_locations, location_triples, with_link_score,
+)
+from yckg_spark.operators.mapping_discovery import (
+    discover_category_mappings, evaluate_mappings, grouped_mappings,
+)
+from yckg_spark.operators.selection import (
+    chunk_docs, line_filter, pack_shards, source_cap, stratified_sample,
+)
+from yckg_spark.operators.text_analysis import quality_score
+from yckg_spark.operators.urls import url_dedup
+from yckg_spark.plans.queries import ALL_CQS, register
+from yckg_spark.plans.sparql import run_sparql
+from yckg_spark.sources.snapshots import load_snapshots
+from yckg_spark.sources.web_pages import (
+    parse_records, read_bucket_spec, read_web_pages, with_trusted_bucket, write_bucketed_pages,
+)
+from yckg_spark.streaming.incremental import start_incremental_build
 
-    return get_spark(
-        app_name=f"yckg-{args.cmd}",
-        master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
-    )
+
+class UsageError(Exception):
+    """A flag combination or input the subcommand cannot honour (exit 2)."""
 
 
-def cmd_build(args) -> int:
-    from yckg_spark.materialize import run_resumable
-    from yckg_spark.sources.web_pages import (
-        read_bucket_spec,
-        read_web_pages,
-        with_trusted_bucket,
-    )
-
-    spark = _spark(args)
+def cmd_build(spark, args) -> dict:
     pages = with_trusted_bucket(
         read_web_pages(spark, args.input), read_bucket_spec(args.input), args.n_buckets
     )
@@ -71,7 +86,7 @@ def cmd_build(args) -> int:
         only_buckets=[int(x) for x in args.buckets.split(",")] if args.buckets else None,
     )
     elapsed = time.time() - t0
-    out = {
+    return {
         "buckets_committed": result["buckets_committed"],
         "total_triples": result["total_triples"],
         "seconds": round(elapsed, 3),
@@ -80,133 +95,83 @@ def cmd_build(args) -> int:
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "commits": result["commits"],
     }
-    print(json.dumps(out))
-    return 0
 
 
-def cmd_bucketize(args) -> int:
+def cmd_bucketize(spark, args) -> dict:
     """Rewrite a corpus bucket-partitioned (Iceberg bucket(url) emulation)."""
-    from yckg_spark.sources.web_pages import read_web_pages, write_bucketed_pages
-
-    spark = _spark(args)
     pages = read_web_pages(spark, args.input).drop("bucket")
     write_bucketed_pages(pages, args.output, args.n_buckets)
-    print(json.dumps({"bucketized": args.output, "n_buckets": args.n_buckets}))
-    return 0
+    return {"bucketized": args.output, "n_buckets": args.n_buckets}
 
 
-def cmd_export_nt(args) -> int:
-    from yckg_spark.materialize import export_nt_gz, read_triples
-    from yckg_spark.operators.canonicalize import dedup_triples
-
-    spark = _spark(args)
+def cmd_export_nt(spark, args) -> dict:
     export_nt_gz(dedup_triples(read_triples(spark, args.input)), args.output)
-    print(json.dumps({"exported": args.output}))
-    return 0
+    return {"exported": args.output}
 
 
-def cmd_compact(args) -> int:
+def cmd_compact(spark, args) -> dict:
     """Global dedup + canonical re-layout of a store's committed triples
     (a build or a stream) — the Iceberg rewrite-data-files job."""
-    from yckg_spark.materialize import compact_store
-
-    spark = _spark(args)
-    result = compact_store(spark, args.input, args.output, n_buckets=args.n_buckets)
-    print(json.dumps(result))
-    return 0
+    return compact_store(spark, args.input, args.output, n_buckets=args.n_buckets)
 
 
-def cmd_synth(args) -> int:
-    from fixtures.generate import write_fixture
-
+def cmd_synth(spark, args) -> dict:
     path = write_fixture(args.output, seed=args.seed, n_business=args.n_business)
-    print(json.dumps({"fixture": str(path)}))
-    return 0
+    return {"fixture": str(path)}
 
 
-def cmd_query(args) -> int:
-    from yckg_spark.materialize import read_triples
-    from yckg_spark.operators.canonicalize import dedup_triples
-    from yckg_spark.plans.queries import ALL_CQS, register
-
+def check_query(args) -> None:
     if args.cq is not None and (args.sparql is not None or args.sparql_file):
-        print("error: --cq runs a named CQ; it cannot be combined with "
-              "--sparql/--sparql-file", file=sys.stderr)
-        return 2
-    time_travel = args.as_of_sequence is not None or args.as_of_timestamp_ms is not None
-    if args.input_format == "nt" and time_travel:
-        print("error: --as-of-sequence/--as-of-timestamp-ms need a built store; "
-              "an N-Triples dump has no commit lineage", file=sys.stderr)
-        return 2
+        raise UsageError("--cq runs a named CQ; it cannot be combined with "
+                         "--sparql/--sparql-file")
+    if args.input_format == "nt" and (
+        args.as_of_sequence is not None or args.as_of_timestamp_ms is not None
+    ):
+        raise UsageError("--as-of-sequence/--as-of-timestamp-ms need a built store; "
+                         "an N-Triples dump has no commit lineage")
+    if args.cq is None and args.sparql is None and not args.sparql_file:
+        raise UsageError("pass --cq NAME, --sparql TEXT, or --sparql-file PATH")
+    if args.cq is not None and args.cq not in ALL_CQS:
+        raise UsageError(f"unknown CQ {args.cq!r}; valid: {', '.join(sorted(ALL_CQS))}")
+
+
+def cmd_query(spark, args) -> dict:
     sparql = args.sparql
     if args.sparql_file:
         with open(args.sparql_file) as fh:
             sparql = fh.read()
-    if sparql is None and args.cq is None:
-        print("error: pass --cq NAME, --sparql TEXT, or --sparql-file PATH",
-              file=sys.stderr)
-        return 2
-    if sparql is None and args.cq not in ALL_CQS:
-        print(f"error: unknown CQ {args.cq!r}; valid: {', '.join(sorted(ALL_CQS))}",
-              file=sys.stderr)
-        return 2
-    spark = _spark(args)
     if args.input_format == "nt":
-        from yckg_spark.materialize import read_nt
-
-        triples = dedup_triples(read_nt(spark, args.input))
+        triples = read_nt(spark, args.input)
     else:
-        triples = dedup_triples(
-            read_triples(
-                spark,
-                args.input,
-                as_of_sequence=args.as_of_sequence,
-                as_of_timestamp_ms=args.as_of_timestamp_ms,
-            )
+        triples = read_triples(
+            spark,
+            args.input,
+            as_of_sequence=args.as_of_sequence,
+            as_of_timestamp_ms=args.as_of_timestamp_ms,
         )
-    register(spark, triples)
-    if sparql is not None:
-        from yckg_spark.plans.sparql import run_sparql
-
-        df = run_sparql(spark, sparql)
-    else:
-        df = ALL_CQS[args.cq](spark)
-    rows = [r.asDict() for r in df.limit(args.limit).collect()]
-    out = {"cq": args.cq or "sparql", "rows": rows}
-    if args.as_of_sequence is not None:
-        out["as_of_sequence"] = args.as_of_sequence
-    if args.as_of_timestamp_ms is not None:
-        out["as_of_timestamp_ms"] = args.as_of_timestamp_ms
-    print(json.dumps(out, default=str))
-    return 0
+    register(spark, dedup_triples(triples))
+    df = ALL_CQS[args.cq](spark) if args.cq is not None else run_sparql(spark, sparql)
+    out = {"cq": args.cq or "sparql", "rows": [r.asDict() for r in df.limit(args.limit).collect()]}
+    for bound in ("as_of_sequence", "as_of_timestamp_ms"):
+        if getattr(args, bound) is not None:
+            out[bound] = getattr(args, bound)
+    return out
 
 
-def cmd_snapshots(args) -> int:
-    """Print the store's commit lineage (the Iceberg snapshots metadata
-    table equivalent): one row per bucket commit, ordered by sequence."""
-    from yckg_spark.materialize import snapshots
-
-    spark = _spark(args)
-    rows = [r.asDict() for r in snapshots(spark, args.input).collect()]
-    print(json.dumps({"snapshots": rows}, default=str))
-    return 0
+def cmd_snapshots(spark, args) -> dict:
+    """The store's commit lineage (the Iceberg snapshots metadata table
+    equivalent): one row per bucket commit, ordered by sequence."""
+    return {"snapshots": snapshots(spark, args.input)}
 
 
-def cmd_vacuum(args) -> int:
+def cmd_vacuum(spark, args) -> dict:
     """Remove orphan bucket partition dirs (data written but never
     manifest-committed — a killed run's residue): the Iceberg
     remove_orphan_files maintenance action."""
-    from yckg_spark.materialize import remove_orphans
-
-    spark = _spark(args)
-    print(json.dumps(remove_orphans(spark, args.input)))
-    return 0
+    return remove_orphans(spark, args.input)
 
 
-def cmd_stream(args) -> int:
-    from yckg_spark.streaming.incremental import start_incremental_build
-
-    spark = _spark(args)
+def cmd_stream(spark, args) -> dict:
     q = start_incremental_build(
         spark,
         args.input,
@@ -216,83 +181,67 @@ def cmd_stream(args) -> int:
         available_now=not args.follow,
     )
     q.awaitTermination()
-    print(json.dumps({"stream": "drained" if not args.follow else "stopped",
-                      "output": args.output}))
-    return 0
+    return {"stream": "drained" if not args.follow else "stopped", "output": args.output}
 
 
-def cmd_dedup(args) -> int:
-    """End-to-end document dedup: pair generation (exact hash / minhash-LSH
-    / simhash banding) → connected components → keep one representative per
-    component → deduped parquet. The large table is only ever anti-joined
-    on ids; pair generation is bucketed (never all-pairs)."""
-    from pyspark.sql import functions as F
-
-    from yckg_spark.materialize import write_observed
-    from yckg_spark.operators.dedup import (
-        dedup_keep_best,
-        dedup_keep_representatives,
-        exact_dedup,
-        incremental_dedup,
-        minhash_lsh_pairs,
-        simhash_pairs,
-    )
-
+def check_dedup(args) -> None:
     if args.keep_best is not None and (args.against is not None or args.method == "exact"):
         # the keep policy only applies to the near-dup component paths;
         # silently keeping min-id when the user asked for max-quality
         # would corrupt a pipeline without any signal
-        print(json.dumps({"error": "--keep-best requires --method minhash "
-                                   "or simhash (not exact/--against)"}))
-        return 2
+        raise UsageError("--keep-best requires --method minhash or simhash "
+                         "(not exact/--against)")
 
-    spark = _spark(args)
+
+def cmd_dedup(spark, args) -> dict:
+    """End-to-end document dedup: pair generation (exact hash / minhash-LSH
+    / simhash banding) → connected components → keep one representative per
+    component → deduped parquet. The large table is only ever anti-joined
+    on ids; pair generation is bucketed (never all-pairs)."""
     docs = spark.read.parquet(args.input)
     t0 = time.time()
+    id_col, text_col = args.id_col, args.text_col
     persisted: list = []
+    n_pairs = None
     if args.against is not None:
         # incremental mode (continuous crawl): exact-dedup the batch
         # against the existing corpus — the corpus reduces to distinct
         # content hashes, the batch anti-joins, min-id within the batch
         corpus = spark.read.parquet(args.against)
-        kept = incremental_dedup(
-            docs, corpus, text_col=args.text_col, id_col=args.id_col
-        )
-        n_pairs = None
+        kept = incremental_dedup(docs, corpus, text_col=text_col, id_col=id_col)
     elif args.method == "exact":
         # same output contract as minhash/simhash: document rows, one
         # representative per identical-text group (semi-join on keep ids —
         # the big table is never shuffled on text)
-        keep = exact_dedup(docs, text_col=args.text_col, id_col=args.id_col).select(
-            F.col("keep_id").alias(args.id_col)
+        keep = exact_dedup(docs, text_col=text_col, id_col=id_col).select(
+            F.col("keep_id").alias(id_col)
         )
-        kept = docs.join(keep, args.id_col, "left_semi")
-        n_pairs = None
+        kept = docs.join(keep, id_col, "left_semi")
     else:
         if args.method == "minhash":
             pairs = minhash_lsh_pairs(
-                docs, text_col=args.text_col, id_col=args.id_col,
+                docs, text_col=text_col, id_col=id_col,
                 threshold=args.threshold, persisted_out=persisted,
             )
         else:  # simhash
             pairs = simhash_pairs(
-                docs, text_col=args.text_col, id_col=args.id_col,
+                docs, text_col=text_col, id_col=id_col,
                 max_hamming=args.max_hamming, persisted_out=persisted,
             )
         pairs = pairs.select("id_a", "id_b").persist()
+        persisted.append(pairs)
         n_pairs = pairs.count()
         if args.keep_best is not None:
             kept = dedup_keep_best(
-                docs, pairs, args.keep_best, id_col=args.id_col,
+                docs, pairs, args.keep_best, id_col=id_col,
                 checkpoint_dir=args.checkpoint_dir,
             )
         else:
             kept = dedup_keep_representatives(
-                docs, pairs, id_col=args.id_col, checkpoint_dir=args.checkpoint_dir
+                docs, pairs, id_col=id_col, checkpoint_dir=args.checkpoint_dir
             )
-    # input count is a parquet metadata-only count(*)
-    n_out = write_observed(kept, args.output, n_out=F.count(F.lit(1)))["n_out"]
-    for df in persisted + ([pairs] if n_pairs is not None else []):
+    n_out = write_observed(kept, args.output, n=F.count(F.lit(1)))["n"]
+    for df in persisted:
         df.unpersist()
     if args.checkpoint_dir is not None:
         # the reliable checkpoints only exist to survive executor loss
@@ -300,43 +249,43 @@ def cmd_dedup(args) -> int:
         # they are dead weight (Spark never reaps them —
         # cleaner.referenceTracking.cleanCheckpoints defaults to false),
         # so the CLI, as the checkpoint_dir owner, deletes them here
-        from yckg_spark.fsutil import delete as fs_delete
 
-        fs_delete(spark, args.checkpoint_dir, recursive=True)
+        delete(spark, args.checkpoint_dir, recursive=True)
+    # input count is a parquet metadata-only count(*)
     n_in = docs.count()
-    print(json.dumps({
+    return {
         "method": "incremental" if args.against is not None else args.method,
         "docs_in": n_in, "docs_kept": n_out,
         "removed": n_in - n_out, "neardup_pairs": n_pairs,
         "against": args.against,
-        "keep": (f"best:{args.keep_best}" if args.keep_best is not None
-                 else "min_id"),
+        "keep": f"best:{args.keep_best}" if args.keep_best is not None else "min_id",
         "seconds": round(time.time() - t0, 3), "output": args.output,
-    }))
-    return 0
+    }
 
 
-def cmd_curate(args) -> int:
+def _swap_text(docs, rewrite, persisted: list, args, n_in_col: str):
+    """Persist ``rewrite`` (per doc: ``text_deduped``, ``n_kept`` and
+    ``n_in_col``), put its text in place of ``docs``' text column, and
+    return (docs, Σ n_in_col, Σ n_kept)."""
+    rewrite = rewrite.persist()
+    persisted.append(rewrite)
+    n_in, n_kept = rewrite.agg(
+        *(F.coalesce(F.sum(c), F.lit(0)) for c in (n_in_col, "n_kept"))
+    ).first()
+    docs = docs.drop(args.text_col).join(
+        rewrite.select(args.id_col, F.col("text_deduped").alias(args.text_col)),
+        on=args.id_col,
+        how="inner",
+    )
+    return docs, n_in, n_kept
+
+
+def cmd_curate(spark, args) -> dict:
     """Training-data curation pass: quality score + repetition signals per
     document, threshold filters, optional benchmark decontamination and PII
     scrubbing, curated parquet out. Document text never shuffles: signals
     join back on id, contamination is a broadcast-gram probe + id anti-join,
     and the scrub is a narrow map on the write path."""
-    from pyspark.sql import functions as F
-
-    from yckg_spark.materialize import write_observed
-    from yckg_spark.operators.curation import (
-        decontaminate,
-        dup_span_stats,
-        line_dedup,
-        pii_scrub,
-        repetition_signals,
-        span_dedup,
-    )
-    from yckg_spark.operators.text_analysis import quality_score
-    from yckg_spark.operators.urls import url_dedup
-
-    spark = _spark(args)
     docs = spark.read.parquet(args.input)
     t0 = time.time()
     id_col, text_col = args.id_col, args.text_col
@@ -360,18 +309,9 @@ def cmd_curate(args) -> int:
         # boilerplate removal BEFORE scoring (the CCNet order): repeated
         # navigation/footer lines would otherwise drag quality and
         # repetition signals of otherwise-good documents
-        dd = line_dedup(
-            docs, min_docs=args.dedup_lines, text_col=text_col, id_col=id_col
-        ).persist()
-        persisted.append(dd)
-        lines_in, lines_kept = dd.agg(
-            F.coalesce(F.sum("n_lines"), F.lit(0)),
-            F.coalesce(F.sum("n_kept"), F.lit(0)),
-        ).first()
-        docs = docs.drop(text_col).join(
-            dd.select(id_col, F.col("text_deduped").alias(text_col)),
-            on=id_col,
-            how="inner",
+        docs, lines_in, lines_kept = _swap_text(
+            docs, line_dedup(docs, min_docs=args.dedup_lines, text_col=text_col, id_col=id_col),
+            persisted, args, "n_lines",
         )
 
     # the span-fraction FILTER must see the corpus BEFORE span removal
@@ -387,27 +327,16 @@ def cmd_curate(args) -> int:
     if args.dedup_spans is not None:
         # substring-level removal AFTER line dedup (coarse boilerplate
         # first, then the finer copied-paragraph pass) and BEFORE scoring
-        sd = span_dedup(
-            docs, k=args.span_k, min_docs=args.dedup_spans,
-            text_col=text_col, id_col=id_col,
-        ).persist()
-        persisted.append(sd)
-        span_tokens_in, span_tokens_kept = sd.agg(
-            F.coalesce(F.sum("n_tokens"), F.lit(0)),
-            F.coalesce(F.sum("n_kept"), F.lit(0)),
-        ).first()
-        docs = docs.drop(text_col).join(
-            sd.select(id_col, F.col("text_deduped").alias(text_col)),
-            on=id_col,
-            how="inner",
+        docs, span_tokens_in, span_tokens_kept = _swap_text(
+            docs,
+            span_dedup(docs, k=args.span_k, min_docs=args.dedup_spans,
+                       text_col=text_col, id_col=id_col),
+            persisted, args, "n_tokens",
         )
 
-    scored = quality_score(docs, text_col=text_col).select(
-        *docs.columns, "quality"
-    )
+    scored = quality_score(docs, text_col=text_col).select(*docs.columns, "quality")
     signals = repetition_signals(docs, text_col=text_col, id_col=id_col)
-    cur = scored.join(signals, on=id_col, how="left")
-    cur = cur.filter(
+    cur = scored.join(signals, on=id_col, how="left").filter(
         (F.col("quality") >= args.min_quality)
         & (F.col("dup_word_frac") <= args.max_dup_word_frac)
         & (F.col("top2gram_frac") <= args.max_top2gram_frac)
@@ -419,8 +348,7 @@ def cmd_curate(args) -> int:
         # survivors — a copied paragraph in a dropped doc still marks its
         # twin in a kept one
         cur = cur.join(span_stats, on=id_col, how="left").filter(
-            F.coalesce(F.col("dup_span_frac"), F.lit(0.0))
-            <= args.max_dup_span_frac
+            F.coalesce(F.col("dup_span_frac"), F.lit(0.0)) <= args.max_dup_span_frac
         )
 
     n_contaminated = None
@@ -438,30 +366,46 @@ def cmd_curate(args) -> int:
         scrubbed = pii_scrub(cur, text_col=text_col, id_col=id_col)
         cur = scrubbed.drop(text_col).withColumnRenamed("text_scrubbed", text_col)
 
-    n_out = write_observed(cur, args.output, n_out=F.count(F.lit(1)))["n_out"]
+    n_out = write_observed(cur, args.output, n=F.count(F.lit(1)))["n"]
     for df in persisted:
         df.unpersist()
     n_in = spark.read.parquet(args.input).count()
-    out = {
+    optional = {
+        "n_urls_unique": n_urls_unique, "max_dup_span_frac": args.max_dup_span_frac,
+        "lines_in": lines_in, "lines_kept": lines_kept,
+        "span_tokens_in": span_tokens_in, "span_tokens_kept": span_tokens_kept,
+    }
+    return {
         "docs_in": n_in, "docs_kept": n_out, "removed": n_in - n_out,
         "n_contaminated": n_contaminated, "scrubbed_pii": bool(args.scrub_pii),
         "seconds": round(time.time() - t0, 3), "output": args.output,
+        **{k: v for k, v in optional.items() if v is not None},
     }
-    if n_urls_unique is not None:
-        out["n_urls_unique"] = n_urls_unique
-    if args.max_dup_span_frac is not None:
-        out["max_dup_span_frac"] = args.max_dup_span_frac
-    if lines_in is not None:
-        out["lines_in"] = lines_in
-        out["lines_kept"] = lines_kept
-    if span_tokens_in is not None:
-        out["span_tokens_in"] = span_tokens_in
-        out["span_tokens_kept"] = span_tokens_kept
-    print(json.dumps(out))
-    return 0
 
 
-def cmd_select(args) -> int:
+def _write_packed(df, args, key: str, tokens_col: str | None = None, **aggs) -> dict:
+    """Write ``df`` to ``--output`` and return ``aggs`` over the rows
+    written, plus the row count ``n`` and ``n_shards``. With
+    ``--pack-budget`` the rows are packed in ``key`` order into shards of at
+    most that many tokens (``tokens_col``, else a word count of
+    ``--text-col``, with the two-phase prefix sum of ``pack_shards``) and
+    laid out partitionBy(shard); without it ``n_shards`` is None."""
+    packed = args.pack_budget is not None
+    if packed:
+        shards = pack_shards(
+            df, budget=args.pack_budget, id_col=key, text_col=args.text_col,
+            tokens_col=tokens_col, n_buckets=args.n_buckets,
+        )
+        df = df.join(shards.drop("n_tokens") if tokens_col else shards, on=key)
+    obs = write_observed(
+        df, args.output, partition_by=["shard"] if packed else None,
+        n=F.count(F.lit(1)), max_shard=F.max(F.col("shard") if packed else F.lit(0)), **aggs,
+    )
+    obs["n_shards"] = obs["max_shard"] + 1 if packed and obs["n"] else None
+    return obs
+
+
+def cmd_select(spark, args) -> dict:
     """Data selection/mixing/packing pass, downstream of `curate`:
     optional C4-style line cleaning (narrow, column-preserving — no join
     back), deterministic stratified sampling for corpus mixing (zero
@@ -471,20 +415,9 @@ def cmd_select(args) -> int:
     partitionBy(shard) — the directory layout a training loader reads
     shard-by-shard — and the kept count + shard count ride the write as
     Observations, so the written store is never re-read."""
-    from pyspark.sql import functions as F
-
-    from yckg_spark.materialize import write_observed
-    from yckg_spark.operators.selection import (
-        line_filter,
-        pack_shards,
-        source_cap,
-        stratified_sample,
-    )
-
-    spark = _spark(args)
     docs = spark.read.parquet(args.input)
     t0 = time.time()
-    id_col, text_col = args.id_col, args.text_col
+    text_col = args.text_col
     cur = docs
 
     if args.line_min_words is not None:
@@ -502,41 +435,27 @@ def cmd_select(args) -> int:
             k, _, v = part.partition("=")
             rates[k.strip()] = float(v)
         cur = stratified_sample(
-            cur, rates, strata_col=args.strata_col, id_col=id_col, salt=args.salt
+            cur, rates, strata_col=args.strata_col, id_col=args.id_col, salt=args.salt
         )
 
     if args.cap is not None:
         cur = source_cap(
             cur, cap=args.cap, partition_col=args.cap_by, order_col=args.cap_order,
-            id_col=id_col, broadcast_keep=True,
+            id_col=args.id_col, broadcast_keep=True,
         ).drop("rank")
 
-    packed = args.pack_budget is not None
-    if packed:
-        shards = pack_shards(
-            cur, budget=args.pack_budget, id_col=id_col, text_col=text_col,
-            n_buckets=args.n_buckets,
-        )
-        cur = cur.join(shards.select(id_col, "n_tokens", "shard"), on=id_col)
-
-    obs = write_observed(
-        cur, args.output, partition_by=["shard"] if packed else None,
-        n_out=F.count(F.lit(1)),
-        max_shard=F.max(F.col("shard") if packed else F.lit(0)),
-    )
-    n_out = obs["n_out"]
+    obs = _write_packed(cur, args, args.id_col)
     n_in = docs.count()
-    print(json.dumps({
-        "docs_in": n_in, "docs_kept": n_out, "removed": n_in - n_out,
-        "n_shards": (obs["max_shard"] + 1) if packed and n_out else None,
+    return {
+        "docs_in": n_in, "docs_kept": obs["n"], "removed": n_in - obs["n"],
+        "n_shards": obs["n_shards"],
         "line_filtered": args.line_min_words is not None,
         "sampled": bool(args.sample_rates), "capped": args.cap is not None,
         "seconds": round(time.time() - t0, 3), "output": args.output,
-    }))
-    return 0
+    }
 
 
-def cmd_link(args) -> int:
+def cmd_link(spark, args) -> dict:
     """Wikidata entity-linking pass (north_rule: candidate entity-link
     scoring with link-score metrics written alongside the commit): parse
     businesses out of the corpus, resolve city/county/state/country QIDs
@@ -549,18 +468,6 @@ def cmd_link(args) -> int:
     the triples so consumers can filter by link quality; the triple count
     rides the write job as an Observation — the written store is never
     re-read."""
-    from pyspark.sql import functions as F
-
-    from yckg_spark.materialize import write_observed
-    from yckg_spark.operators.enrich_wikidata import (
-        link_locations,
-        location_triples,
-        with_link_score,
-    )
-    from yckg_spark.sources.snapshots import load_snapshots
-    from yckg_spark.sources.web_pages import parse_records, read_web_pages
-
-    spark = _spark(args)
     t0 = time.time()
     pages = read_web_pages(spark, args.input)
     persisted: list = []
@@ -569,20 +476,17 @@ def cmd_link(args) -> int:
     )["business"]
     snaps = load_snapshots(spark, args.snapshots)
 
+    levels = ("city", "county", "state", "country")
     linked = with_link_score(link_locations(biz, snaps)).persist()
     m = linked.agg(
         F.count(F.lit(1)).alias("n_business"),
-        F.count("city_qid").alias("n_city"),
-        F.count("county_qid").alias("n_county"),
-        F.count("state_qid").alias("n_state"),
-        F.count("country_qid").alias("n_country"),
+        *(F.count(f"{lv}_qid").alias(f"n_{lv}") for lv in levels),
         F.count("population").alias("n_population"),
         F.avg("link_score").alias("avg_link_score"),
     ).collect()[0]
     # per-entity link confidence table, written alongside the triples
     linked.select(
-        "business_id", "city_qid", "county_qid", "state_qid", "country_qid",
-        "link_mask", "link_score",
+        "business_id", *(f"{lv}_qid" for lv in levels), "link_mask", "link_score"
     ).write.mode("overwrite").parquet(f"{args.output}/links")
 
     n_triples = write_observed(
@@ -598,10 +502,7 @@ def cmd_link(args) -> int:
         "n_business": nb,
         "n_triples": n_triples,
         "link_scores": {
-            "city_link_rate": rate("n_city"),
-            "county_link_rate": rate("n_county"),
-            "state_link_rate": rate("n_state"),
-            "country_link_rate": rate("n_country"),
+            **{f"{lv}_link_rate": rate(f"n_{lv}") for lv in levels},
             "population_rate": rate("n_population"),
             "avg_link_score": round(m["avg_link_score"], 4)
             if m["avg_link_score"] is not None else None,
@@ -611,14 +512,20 @@ def cmd_link(args) -> int:
     }
     # manifest row written only after the data commit succeeded — through
     # the same filesystem as the data (hdfs://, s3a://, file: all work)
-    from yckg_spark.fsutil import write_text
-
     write_text(spark, f"{args.output}/link_manifest.json", json.dumps(manifest))
-    print(json.dumps(manifest))
-    return 0
+    return manifest
 
 
-def cmd_stats(args) -> int:
+def _mix(df, col: str, limit: int) -> dict:
+    """The ``limit`` most frequent values of ``col`` → row count."""
+    counts = df.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
+    return {
+        r[col]: r["n"]
+        for r in counts.orderBy(F.col("n").desc(), F.col(col)).limit(limit).collect()
+    }
+
+
+def cmd_stats(spark, args) -> dict:
     """Corpus report card: one JSON line summarizing a documents parquet —
     counts, token/char volume, quality quartiles, exact-duplicate rate,
     and the language / top-source mix. The input a curation run is sized
@@ -630,18 +537,11 @@ def cmd_stats(args) -> int:
     sketches — a 100-TB corpus must never buffer exact distributions on
     one reducer), plus two tiny group-count jobs for the lang/source
     mixes. Document text never shuffles anywhere."""
-    from pyspark.sql import functions as F
-
-    from yckg_spark.operators.dedup import normalize_text
-    from yckg_spark.operators.text_analysis import quality_score
-
-    spark = _spark(args)
     docs = spark.read.parquet(args.input)
     t0 = time.time()
-    id_col, text_col = args.id_col, args.text_col
-
+    text_col = args.text_col
     enriched = quality_score(docs, text_col).select(
-        id_col,
+        args.id_col,
         "n_tokens",
         "quality",
         F.length(F.col(text_col)).alias("n_chars_stat"),
@@ -673,56 +573,39 @@ def cmd_stats(args) -> int:
         "seconds": round(time.time() - t0, 3),
     }
     if args.lang_col in docs.columns:
-        out["langs"] = {
-            r[args.lang_col]: r["n"]
-            for r in enriched.groupBy(args.lang_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), F.col(args.lang_col))
-            .limit(50)
-            .collect()
-        }
+        out["langs"] = _mix(enriched, args.lang_col, 50)
     if args.source_col in docs.columns:
-        out["top_sources"] = {
-            r[args.source_col]: r["n"]
-            for r in enriched.groupBy(args.source_col)
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), F.col(args.source_col))
-            .limit(args.top_sources)
-            .collect()
-        }
-    print(json.dumps(out))
-    return 0
+        out["top_sources"] = _mix(enriched, args.source_col, args.top_sources)
+    return out
 
 
-def cmd_discover_mappings(args) -> int:
-    from pyspark.sql import functions as F
-
-    from yckg_spark.operators.mapping_discovery import (
-        discover_category_mappings,
-        evaluate_mappings,
-        grouped_mappings,
-    )
-
-    spark = _spark(args)
+def cmd_discover_mappings(spark, args) -> dict:
     cats = spark.read.parquet(args.categories).select(
         F.col(args.category_col).alias("category")
     )
     types = spark.read.parquet(args.types).select(F.col(args.label_col).alias("label"))
     m = discover_category_mappings(cats, types, threshold=args.threshold)
-    grouped_mappings(m).write.mode("overwrite").parquet(args.output)
-    out = {"mappings": m.count(), "output": args.output}
     if args.ground_truth:
-        gt = spark.read.parquet(args.ground_truth)
-        row = evaluate_mappings(m, gt).collect()[0]
-        out["evaluation"] = {
-            "n_gt": row["n_gt"], "n_pred": row["n_pred"], "tp": row["tp"],
-            "precision": row["precision"], "recall": row["recall"],
-        }
-    print(json.dumps(out))
-    return 0
+        # the evaluation reads the mappings again: cut them once, so the
+        # embedding cross-join runs for the write only
+        m = m.persist(StorageLevel.DISK_ONLY)
+    try:
+        n = write_observed(
+            grouped_mappings(m), args.output,
+            n=F.coalesce(F.sum(F.size("schema_types")), F.lit(0)),
+        )["n"]
+        out = {"mappings": n, "output": args.output}
+        if args.ground_truth:
+            row = evaluate_mappings(m, spark.read.parquet(args.ground_truth)).first()
+            out["evaluation"] = {
+                k: row[k] for k in ("n_gt", "n_pred", "tp", "precision", "recall")
+            }
+    finally:
+        m.unpersist()
+    return out
 
 
-def cmd_chunk(args) -> int:
+def cmd_chunk(spark, args) -> dict:
     """Fixed-window training chunking pass, downstream of `select`: split
     each document into --chunk-tokens-wide windows sliding by
     chunk_tokens - overlap (one row per chunk), mint a globally unique,
@@ -732,13 +615,6 @@ def cmd_chunk(args) -> int:
     two-phase prefix sum `select` uses — the partitionBy(shard) layout a
     tokenizer/loader consumes. Chunking itself adds no exchange; counts
     ride the write as Observations so the store is never re-read."""
-    from pyspark.sql import functions as F
-
-    from yckg_spark.materialize import write_observed
-    from yckg_spark.operators.dedup import normalize_text
-    from yckg_spark.operators.selection import chunk_docs, pack_shards
-
-    spark = _spark(args)
     docs = spark.read.parquet(args.input)
     t0 = time.time()
     chunks = chunk_docs(
@@ -757,36 +633,22 @@ def cmd_chunk(args) -> int:
         # cid = id*stride + chunk_id must not wrap 64-bit arithmetic
         # (Spark does not error on long overflow outside ANSI mode, it
         # wraps — two docs could then silently collide on cid)
-        print(json.dumps({"error": "doc ids too large for cid minting "
-                                   f"(max id {max_id} x stride {stride} "
-                                   "overflows long); pre-map ids to a "
-                                   "dense range first"}))
-        return 2
-    chunks = chunks.withColumn(
-        "cid", F.col(args.id_col) * F.lit(stride) + F.col("chunk_id")
-    )
-    packed = args.pack_budget is not None
-    if packed:
-        shards = pack_shards(
-            chunks, budget=args.pack_budget, id_col="cid",
-            tokens_col="n_tokens", n_buckets=args.n_buckets,
-        )
-        chunks = chunks.join(shards.select("cid", "shard"), on="cid")
-    obs = write_observed(
-        chunks, args.output, partition_by=["shard"] if packed else None,
-        n_chunks=F.count(F.lit(1)),
-        n_tokens=F.sum("n_tokens"),
-        max_shard=F.max(F.col("shard") if packed else F.lit(0)),
-    )
-    n_chunks = obs["n_chunks"]
-    print(json.dumps({
-        "docs_in": docs.count(), "n_chunks": n_chunks,
-        "n_tokens": obs["n_tokens"],
+        raise UsageError(f"doc ids too large for cid minting (max id {max_id} x "
+                         f"stride {stride} overflows long); pre-map ids to a "
+                         "dense range first")
+    chunks = chunks.withColumn("cid", F.col(args.id_col) * F.lit(stride) + F.col("chunk_id"))
+    obs = _write_packed(chunks, args, "cid", tokens_col="n_tokens", n_tokens=F.sum("n_tokens"))
+    return {
+        "docs_in": docs.count(), "n_chunks": obs["n"], "n_tokens": obs["n_tokens"],
         "chunk_tokens": args.chunk_tokens, "overlap": args.overlap,
-        "n_shards": (obs["max_shard"] + 1) if packed and n_chunks else None,
+        "n_shards": obs["n_shards"],
         "seconds": round(time.time() - t0, 3), "output": args.output,
-    }))
-    return 0
+    }
+
+
+PAGES = "web_pages parquet path or table"
+STORE = "built triple-store dir"
+DOCS = "documents parquet (doc_id, text)"
 
 
 def make_parser() -> argparse.ArgumentParser:
@@ -795,48 +657,46 @@ def make_parser() -> argparse.ArgumentParser:
     p.add_argument("--shuffle-partitions", type=int, default=None)
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    b = sub.add_parser("build", help="build the KG (resumable)")
-    b.add_argument("--input", required=True, help="web_pages parquet path or table")
-    b.add_argument("--output", required=True, help="triple-store output dir")
-    b.add_argument("--n-buckets", type=int, default=8)
-    b.add_argument("--skip-extraction", action="store_true", help="trust the text column")
+    def add(name, fn, help, *, input=None, output=None, doc_cols=False, n_buckets=None,
+            skip_extraction=False, check=None, uses_spark=True):
+        """Subcommand ``name`` running ``fn(spark, args) -> dict`` after
+        ``check(args)``, with the shared flags it takes (``input`` and
+        ``output`` are the help texts of the required paths)."""
+        s = sub.add_parser(name, help=help)
+        for flag, text in (("--input", input), ("--output", output)):
+            if text is not None:
+                s.add_argument(flag, required=True, help=text)
+        if doc_cols:
+            s.add_argument("--id-col", default="doc_id")
+            s.add_argument("--text-col", default="text")
+        if n_buckets is not None:
+            s.add_argument("--n-buckets", type=int, default=n_buckets)
+        if skip_extraction:
+            s.add_argument("--skip-extraction", action="store_true",
+                           help="trust the text column")
+        s.set_defaults(fn=fn, check=check, uses_spark=uses_spark)
+        return s
+
+    b = add("build", cmd_build, "build the KG (resumable)", input=PAGES,
+            output="triple-store output dir", n_buckets=8, skip_extraction=True)
     b.add_argument("--buckets", default=None,
                    help="comma-separated bucket ids this process handles (worker sharding)")
-    b.set_defaults(fn=cmd_build)
+    add("bucketize", cmd_bucketize, "rewrite corpus bucket-partitioned by hash(url)",
+        input=PAGES, output="bucket-partitioned output dir", n_buckets=8)
+    add("export-nt", cmd_export_nt, "gzip N-Triples export", input=STORE,
+        output="N-Triples output dir")
+    add("snapshots", cmd_snapshots, "commit lineage (snapshot metadata table)", input=STORE)
+    add("vacuum", cmd_vacuum, "delete orphan (uncommitted) bucket dirs", input=STORE)
+    add("compact", cmd_compact, "global dedup + canonical store re-layout",
+        input="dir containing a triples/ output", output="compacted store dir", n_buckets=8)
 
-    bz = sub.add_parser("bucketize", help="rewrite corpus bucket-partitioned by hash(url)")
-    bz.add_argument("--input", required=True, help="web_pages parquet path or table")
-    bz.add_argument("--output", required=True, help="bucket-partitioned output dir")
-    bz.add_argument("--n-buckets", type=int, default=8)
-    bz.set_defaults(fn=cmd_bucketize)
-
-    e = sub.add_parser("export-nt", help="gzip N-Triples export")
-    e.add_argument("--input", required=True, help="built triple-store dir")
-    e.add_argument("--output", required=True)
-    e.set_defaults(fn=cmd_export_nt)
-
-    sn = sub.add_parser("snapshots", help="commit lineage (snapshot metadata table)")
-    sn.add_argument("--input", required=True, help="built triple-store dir")
-    sn.set_defaults(fn=cmd_snapshots)
-
-    vc = sub.add_parser("vacuum", help="delete orphan (uncommitted) bucket dirs")
-    vc.add_argument("--input", required=True, help="built triple-store dir")
-    vc.set_defaults(fn=cmd_vacuum)
-
-    cp = sub.add_parser("compact", help="global dedup + canonical store re-layout")
-    cp.add_argument("--input", required=True, help="dir containing a triples/ output")
-    cp.add_argument("--output", required=True)
-    cp.add_argument("--n-buckets", type=int, default=8)
-    cp.set_defaults(fn=cmd_compact)
-
-    s = sub.add_parser("synth", help="deterministic synthetic web_pages corpus")
-    s.add_argument("--output", required=True)
+    s = add("synth", cmd_synth, "deterministic synthetic web_pages corpus",
+            output="fixture dir", uses_spark=False)
     s.add_argument("--n-business", type=int, default=200)
     s.add_argument("--seed", type=int, default=7)
-    s.set_defaults(fn=cmd_synth)
 
-    q = sub.add_parser("query", help="run a competency question or SPARQL text")
-    q.add_argument("--input", required=True, help="built triple-store dir or N-Triples dump")
+    q = add("query", cmd_query, "run a competency question or SPARQL text",
+            input="built triple-store dir or N-Triples dump", check=check_query)
     q.add_argument("--input-format", choices=["store", "nt"], default="store",
                    help="'nt' reads an N-Triples text/.gz dump (e.g. the reference's)")
     q.add_argument("--cq", default=None, help="cq1..cq16")
@@ -848,23 +708,17 @@ def make_parser() -> argparse.ArgumentParser:
                    help="time-travel: read the store as of this commit sequence")
     q.add_argument("--as-of-timestamp-ms", type=int, default=None,
                    help="time-travel: read the store as of this epoch-ms commit time")
-    q.set_defaults(fn=cmd_query)
 
-    st = sub.add_parser("stream", help="incremental build from a landing dir")
-    st.add_argument("--input", required=True, help="landing dir of web_pages parquet files")
-    st.add_argument("--output", required=True)
+    st = add("stream", cmd_stream, "incremental build from a landing dir",
+             input="landing dir of web_pages parquet files", output="triple-store output dir",
+             skip_extraction=True)
     st.add_argument("--checkpoint", required=True)
-    st.add_argument("--skip-extraction", action="store_true")
     st.add_argument("--follow", action="store_true",
                     help="keep tailing instead of drain-and-stop")
-    st.set_defaults(fn=cmd_stream)
 
-    dd = sub.add_parser("dedup", help="document dedup: pairs -> components -> keep-one")
-    dd.add_argument("--input", required=True, help="documents parquet (doc_id, text)")
-    dd.add_argument("--output", required=True, help="deduped parquet output dir")
+    dd = add("dedup", cmd_dedup, "document dedup: pairs -> components -> keep-one",
+             input=DOCS, output="deduped parquet output dir", doc_cols=True, check=check_dedup)
     dd.add_argument("--method", choices=["exact", "minhash", "simhash"], default="minhash")
-    dd.add_argument("--id-col", default="doc_id")
-    dd.add_argument("--text-col", default="text")
     dd.add_argument("--threshold", type=float, default=0.8,
                     help="minhash: estimated-Jaccard keep threshold")
     dd.add_argument("--max-hamming", type=int, default=3,
@@ -881,13 +735,9 @@ def make_parser() -> argparse.ArgumentParser:
                     help="minhash/simhash: keep the max-SCORE_COL member "
                          "per near-dup component (ties -> min id) instead "
                          "of the min-id representative")
-    dd.set_defaults(fn=cmd_dedup)
 
-    cu = sub.add_parser("curate", help="quality/repetition filter + decontaminate + PII scrub")
-    cu.add_argument("--input", required=True, help="documents parquet (doc_id, text)")
-    cu.add_argument("--output", required=True, help="curated parquet output dir")
-    cu.add_argument("--id-col", default="doc_id")
-    cu.add_argument("--text-col", default="text")
+    cu = add("curate", cmd_curate, "quality/repetition filter + decontaminate + PII scrub",
+             input=DOCS, output="curated parquet output dir", doc_cols=True)
     cu.add_argument("--min-quality", type=float, default=0.0)
     cu.add_argument("--max-dup-word-frac", type=float, default=1.0)
     cu.add_argument("--max-top2gram-frac", type=float, default=1.0)
@@ -895,8 +745,7 @@ def make_parser() -> argparse.ArgumentParser:
                     help="benchmark parquet; drop docs sharing any word n-gram with it")
     cu.add_argument("--bench-text-col", default=None,
                     help="benchmark text column (default: --text-col)")
-    cu.add_argument("--ngram", type=int, default=8,
-                    help="decontamination n-gram width")
+    cu.add_argument("--ngram", type=int, default=8, help="decontamination n-gram width")
     cu.add_argument("--scrub-pii", action="store_true",
                     help="redact emails/IPs/phones in the output text")
     cu.add_argument("--dedup-spans", type=int, default=None, metavar="MIN_DOCS",
@@ -908,8 +757,7 @@ def make_parser() -> argparse.ArgumentParser:
                     help="drop docs whose fraction of word --span-k-grams "
                          "shared verbatim with other documents exceeds this")
     cu.add_argument("--span-k", type=int, default=8,
-                    help="gram width for --dedup-spans and "
-                         "--max-dup-span-frac")
+                    help="gram width for --dedup-spans and --max-dup-span-frac")
     cu.add_argument("--dedup-lines", type=int, default=None, metavar="MIN_DOCS",
                     help="drop lines appearing verbatim in >= MIN_DOCS "
                          "documents (CCNet-style boilerplate removal), "
@@ -919,15 +767,9 @@ def make_parser() -> argparse.ArgumentParser:
                          "canonical URL (largest --url-order-col wins)")
     cu.add_argument("--url-col", default="url")
     cu.add_argument("--url-order-col", default="n_chars")
-    cu.set_defaults(fn=cmd_curate)
 
-    se = sub.add_parser(
-        "select", help="line-clean + stratified-sample + source-cap + shard-pack"
-    )
-    se.add_argument("--input", required=True, help="documents parquet (doc_id, text)")
-    se.add_argument("--output", required=True, help="selected parquet output dir")
-    se.add_argument("--id-col", default="doc_id")
-    se.add_argument("--text-col", default="text")
+    se = add("select", cmd_select, "line-clean + stratified-sample + source-cap + shard-pack",
+             input=DOCS, output="selected parquet output dir", doc_cols=True, n_buckets=64)
     se.add_argument("--line-min-words", type=int, default=None,
                     help="enable C4-style line filter: min words per kept line")
     se.add_argument("--banned", default="javascript,lorem ipsum,{",
@@ -944,48 +786,32 @@ def make_parser() -> argparse.ArgumentParser:
                     help="prefer the highest values of this column under the cap")
     se.add_argument("--pack-budget", type=int, default=None,
                     help="pack docs into shards of at most this many tokens; "
-                         "output is partitioned by shard")
-    se.add_argument("--n-buckets", type=int, default=64,
-                    help="prefix-sum range buckets for packing")
-    se.set_defaults(fn=cmd_select)
+                         "output is partitioned by shard (--n-buckets: "
+                         "prefix-sum range buckets)")
 
-    ch = sub.add_parser(
-        "chunk", help="fixed-window training chunking + optional shard packing"
-    )
-    ch.add_argument("--input", required=True, help="documents parquet (doc_id, text)")
-    ch.add_argument("--output", required=True, help="chunk parquet output dir")
-    ch.add_argument("--id-col", default="doc_id")
-    ch.add_argument("--text-col", default="text")
+    ch = add("chunk", cmd_chunk, "fixed-window training chunking + optional shard packing",
+             input=DOCS, output="chunk parquet output dir", doc_cols=True, n_buckets=64)
     ch.add_argument("--chunk-tokens", type=int, required=True,
                     help="window width in whitespace tokens")
     ch.add_argument("--overlap", type=int, default=0,
                     help="tokens shared between consecutive chunks")
     ch.add_argument("--pack-budget", type=int, default=None,
                     help="also shard-pack the chunks under this token "
-                         "budget (output laid out partitionBy(shard))")
-    ch.add_argument("--n-buckets", type=int, default=64,
-                    help="prefix-sum range buckets for packing")
-    ch.set_defaults(fn=cmd_chunk)
+                         "budget (output laid out partitionBy(shard); "
+                         "--n-buckets: prefix-sum range buckets)")
 
-    lk = sub.add_parser("link", help="Wikidata entity linking + location triples")
-    lk.add_argument("--input", required=True, help="web_pages parquet path or table")
-    lk.add_argument("--snapshots", required=True,
-                    help="dir of Wikidata snapshot parquet tables")
-    lk.add_argument("--output", required=True,
-                    help="output dir (triples/ + link_manifest.json)")
-    lk.add_argument("--skip-extraction", action="store_true", help="trust the text column")
-    lk.set_defaults(fn=cmd_link)
+    lk = add("link", cmd_link, "Wikidata entity linking + location triples", input=PAGES,
+             output="output dir (triples/ + link_manifest.json)", skip_extraction=True)
+    lk.add_argument("--snapshots", required=True, help="dir of Wikidata snapshot parquet tables")
 
-    sc = sub.add_parser("stats", help="corpus report card (one JSON line)")
-    sc.add_argument("--input", required=True, help="documents parquet")
-    sc.add_argument("--id-col", default="doc_id")
-    sc.add_argument("--text-col", default="text")
+    sc = add("stats", cmd_stats, "corpus report card (one JSON line)",
+             input="documents parquet", doc_cols=True)
     sc.add_argument("--lang-col", default="lang")
     sc.add_argument("--source-col", default="source")
     sc.add_argument("--top-sources", type=int, default=20)
-    sc.set_defaults(fn=cmd_stats)
 
-    dm = sub.add_parser("discover-mappings", help="offline category->schema discovery")
+    dm = add("discover-mappings", cmd_discover_mappings, "offline category->schema discovery",
+             output="grouped category -> schema types parquet output dir")
     dm.add_argument("--categories", required=True, help="parquet with a category column")
     dm.add_argument("--category-col", default="category")
     dm.add_argument("--types", required=True, help="parquet of schema.org types")
@@ -994,14 +820,30 @@ def make_parser() -> argparse.ArgumentParser:
     dm.add_argument("--ground-truth", default=None,
                     help="parquet of verified (category, schema_type) pairs; "
                          "adds precision/recall to the output JSON")
-    dm.add_argument("--output", required=True)
-    dm.set_defaults(fn=cmd_discover_mappings)
     return p
 
 
 def main(argv: list[str] | None = None) -> int:
+    """Parse ``argv``, check the flags, build the one SparkSession, run the
+    subcommand and print its result dict as one JSON line; 0 on success, 2
+    (one ``error:`` line on stderr, nothing on stdout) on a UsageError."""
     args = make_parser().parse_args(argv)
-    return args.fn(args)
+    try:
+        if args.check is not None:
+            args.check(args)
+        spark = None
+        if args.uses_spark:
+            spark = session.get_spark(
+                app_name=f"yckg-{args.cmd}",
+                master=args.master,
+                shuffle_partitions=args.shuffle_partitions,
+            )
+        out = args.fn(spark, args)
+    except UsageError as e:
+        print(f"error: {e}", file=sys.stderr)
+        return 2
+    print(json.dumps(out, default=str))
+    return 0
 
 
 if __name__ == "__main__":

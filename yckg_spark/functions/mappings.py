@@ -91,13 +91,6 @@ def predicate_for(key: str) -> str:
     return YELPVOC + key
 
 
-def datatype_for(key: str) -> str | None:
-    """Datatype IRI for a known key; None means 'infer from the value'."""
-    if key in PREDICATE_MAP:
-        return PREDICATE_MAP[key][1]
-    return None
-
-
 # entity/key -> class IRI (schema_functions.py:79-102)
 TYPE_MAP: dict[str, str] = {
     "user": SCHEMA + "Person",
@@ -115,10 +108,6 @@ TYPE_MAP: dict[str, str] = {
     "checkin": SCHEMA + "ArriveAction",
     "category": YELPVOC + "YelpCategory",
 }
-
-
-def schema_type_for(entity: str) -> str | None:
-    return TYPE_MAP.get(entity)
 
 
 # domain -> entity-IRI minting root (get_iri.py:5-18). Note checkin mints

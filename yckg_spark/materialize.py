@@ -236,16 +236,17 @@ def run_resumable(
     }
 
 
-def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
+def snapshots(spark: SparkSession, out_dir: str) -> list[dict]:
     """The store's commit lineage ordered by sequence — the emulation of
-    Iceberg's ``<table>.snapshots`` metadata table. One row per bucket
-    commit with its metrics, sequence number, and commit timestamp."""
+    Iceberg's ``<table>.snapshots`` metadata table. One manifest row per
+    bucket commit with its metrics, sequence number, and commit timestamp.
+    Driver-side file reads only, no Spark job."""
     rows = read_manifest(spark, out_dir)
     if not rows:
         raise ValueError(f"no manifest under {out_dir}")
     if any("sequence_number" not in r for r in rows):
         raise ValueError("store predates snapshot lineage (no sequence_number)")
-    return spark.createDataFrame(rows).orderBy("sequence_number")
+    return sorted(rows, key=lambda r: r["sequence_number"])
 
 
 def read_triples(

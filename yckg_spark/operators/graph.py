@@ -22,21 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """(node, out_deg, in_deg) over a directed edge list — one pass each
-    side, full outer join so pure sources / pure sinks both appear."""
-    out = edges.groupBy(F.col(src).alias("node")).agg(F.count(F.lit(1)).alias("out_deg"))
-    inn = edges.groupBy(F.col(dst).alias("node")).agg(F.count(F.lit(1)).alias("in_deg"))
-    return (
-        out.join(inn, "node", "full_outer")
-        .select(
-            "node",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
-        )
-    )
-
-
 def pagerank(
     edges: DataFrame,
     n_iter: int = 10,
