@@ -15,10 +15,7 @@ that compose into one store).
     (round 3: 16 buckets over a ~4M-page corpus, so per-JVM warmup is
     amortized over 4 buckets per worker instead of 1-2; round 4: the
     ~8M-page corpus doubles per-bucket work, halving the warmup fraction
-    again, and --core-pairs auto pins all workers to speed-matched vCPU
-    pairs from BENCH/calibrate_cores.py — this host's pairs differ up to
-    ~19% in speed, a hypervisor-placement artifact a homogeneous real
-    cluster does not have, and W=1 runs on one of the same four pairs)
+    again; W=1 runs on the first of the same four --core-pairs)
 
 Two metrics per rep (min over reps wins):
   * raw wall-clock efficiency  T1/(4*T4) — includes each JVM's fixed
@@ -167,17 +164,10 @@ def main() -> None:
                          "history without running anything")
     ap.add_argument("--core-pairs", default="0,2,4,6",
                     help="comma-separated pair-low cores for the 4 workers "
-                         "(W=1 uses the first), or 'auto' to take "
-                         "chosen_pairs from BENCH/core_calibration.json — "
-                         "speed-matched pairs so the N-vs-4N comparison "
-                         "sees homogeneous silicon like a real cluster")
+                         "(W=1 uses the first)")
     args = ap.parse_args()
     N_BUCKETS = args.n_buckets
-    if args.core_pairs == "auto":
-        with open(REPO / "BENCH" / "core_calibration.json") as f:
-            core_pairs = json.load(f)["chosen_pairs"]
-    else:
-        core_pairs = [int(x) for x in args.core_pairs.split(",")]
+    core_pairs = [int(x) for x in args.core_pairs.split(",")]
     assert len(core_pairs) == 4, core_pairs
 
     if args.summarize_only:

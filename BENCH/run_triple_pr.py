@@ -5,7 +5,7 @@ The north rule requires the emitted (subj, pred, obj) triples to match
 the reference at P/R >= 0.95. `tests/test_emit_golden.py` already holds
 the engine to exact agreement at smoke scale (100 businesses); this
 harness runs the same comparison at the bench fixture scale (17,000
-businesses, ~85k pages) — engine triples from the distributed
+businesses, ~200k pages) — engine triples from the distributed
 scan → extract → parse → emit path, expected triples from
 `tests/oracle.py` (plain dict-driven Python structured nothing like the
 engine's Column expressions) — and writes BENCH/triple_pr.json with

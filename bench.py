@@ -46,16 +46,6 @@ def _count(df) -> int:
     return df.count()
 
 
-# stage-cut frames operators persist (LSH signatures etc.); wrappers here
-# register them via persisted_out=, and the bench loop drains after counting
-_PERSISTED: list = []
-
-
-def _drain_persisted() -> None:
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
-
 def q_kg_fixture_build(spark, _sf_dir):
     from fixtures.generate import default_fixture
     from yckg_spark.operators.canonicalize import dedup_triples
@@ -74,7 +64,7 @@ def q_minhash_production(spark, sf_dir):
     from yckg_spark.operators.dedup import minhash_lsh_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return minhash_lsh_pairs(docs, threshold=0.2, persisted_out=_PERSISTED)
+    return minhash_lsh_pairs(docs, threshold=0.2)
 
 
 def main() -> None:
@@ -98,11 +88,11 @@ def main() -> None:
     default_fixture(_FIXTURE)
 
     # Min of N interleaved reps: the sandbox host shows 1.2-3x wall-clock
-    # noise between identical runs (BENCH/BASELINE.md "Host noise"), so a
-    # single timed pass measures the host, not the plan. Reps are
-    # interleaved (rep loop outer, query loop inner) so a transient
-    # slowdown hits each query's reps at different times instead of
-    # poisoning one query's entire sample.
+    # noise between identical runs (the host-noise analysis in the history
+    # of BENCH/BASELINE.md), so a single timed pass measures the host, not
+    # the plan. Reps are interleaved (rep loop outer, query loop inner) so a
+    # transient slowdown hits each query's reps at different times instead
+    # of poisoning one query's entire sample.
     reps = int(os.environ.get("YCKG_BENCH_REPS", "3"))
     samples: dict[str, list[float]] = {name: [] for name in bench_queries}
     counts: dict[str, int] = {}
@@ -112,9 +102,11 @@ def main() -> None:
             df = fn(spark, SF_DIR)
             counts[name] = _count(df)
             samples[name].append(round(time.time() - t0, 3))
-            # release any stage-cut blocks the operator persisted (e.g. LSH
-            # signatures) so repeated invocations don't accumulate storage
-            _drain_persisted()
+            # drop every block the query persisted (the classified-pages cut
+            # of parse_records, LSH signatures): the CacheManager would serve
+            # the next rep's identical plan from it, skipping the scan and
+            # the extraction UDF
+            spark.catalog.clearCache()
 
     timings = {name: min(s) for name, s in samples.items()}
     total = round(sum(timings.values()), 3)

@@ -12,9 +12,9 @@ Triple = (subject, predicate, object_lexical, is_literal, datatype|None).
 
 from __future__ import annotations
 
+import hashlib
 import json
 
-from yckg_spark.functions.skolem import skolem_iri_py
 from yckg_spark.namespaces import (
     BUSINESS_URI,
     RDF_TYPE,
@@ -65,6 +65,17 @@ KLASS = {
 }
 for _k in ("Ambience", "Music", "BestNights", "HairSpecializesIn", "DietaryRestrictions"):
     KLASS[_k] = SCHEMA + "LocationFeatureSpecification"
+
+
+# the engine's skolem rule (functions/skolem.py), restated: sha256 over the
+# parts joined by the unit separator, None as ""
+SKOLEM_ROOT = YELPENT + "bnode/"
+_SKOLEM_SEP = "\x1f"
+
+
+def skolem_iri_py(*parts):
+    payload = _SKOLEM_SEP.join("" if p is None else str(p) for p in parts)
+    return SKOLEM_ROOT + hashlib.sha256(payload.encode("utf-8")).hexdigest()
 
 
 def _sanitize(s):

@@ -220,6 +220,22 @@ def test_cli_snapshots_and_time_travel_query(spark, tmp_path, capsys, smoke_fixt
     assert v1["rows"][0]["average_rating"] != latest["rows"][0]["average_rating"]
 
 
+def test_cli_keeps_live_session_conf(spark, tmp_path, capsys, smoke_fixture_dir):
+    """An in-process `main` call reuses the live session as it is: the
+    session's shuffle partitions (conftest's 8) are not reset to the
+    CLI's default of 32."""
+    from yckg_spark.materialize import run_resumable
+    from yckg_spark.sources.web_pages import read_web_pages
+
+    kg = str(tmp_path / "kg")
+    pages = read_web_pages(spark, f"{smoke_fixture_dir}/web_pages.parquet")
+    run_resumable(spark, pages, kg, n_buckets=1, use_extraction=False)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert main(["snapshots", "--input", kg]) == 0
+    capsys.readouterr()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
 @pytest.mark.parametrize(
     "extra",
     [

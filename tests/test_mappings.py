@@ -4,6 +4,7 @@ datatype-inference order, skolem determinism)."""
 
 import pytest
 
+from tests.oracle import skolem_iri_py
 from yckg_spark.functions.mappings import (
     IRI_ROOTS,
     NESTED_ATTRIBUTE_KEYS,
@@ -11,8 +12,6 @@ from yckg_spark.functions.mappings import (
     TYPE_MAP,
     predicate_for,
 )
-from yckg_spark.functions.skolem import skolem_iri_py
-from yckg_spark.functions.strings import sanitize_iri_py
 from yckg_spark.namespaces import (
     SCHEMA,
     XSD_ANYURI,
@@ -22,6 +21,11 @@ from yckg_spark.namespaces import (
     XSD_STRING,
     YELPVOC,
 )
+
+
+def sanitize_iri_py(s: str) -> str:
+    """Python twin of ``strings.sanitize_iri`` (the reference's replace chain)."""
+    return s.translate(str.maketrans(" &/'-()", "_______"))
 
 
 class TestPredicateMapping:

@@ -3,12 +3,30 @@ feature stage. The schemas, batch iteration and output shape are the
 contract; the sha256 features are deterministic per payload."""
 
 import pytest
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+MEDIA_SCHEMA = StructType(
+    [
+        StructField("media_id", StringType(), False),
+        StructField("kind", StringType(), False),  # image | audio | video
+        StructField("mime", StringType(), True),
+        StructField("payload", BinaryType(), True),  # opaque bytes
+        StructField("width", IntegerType(), True),
+        StructField("height", IntegerType(), True),
+        StructField("duration_ms", LongType(), True),
+    ]
+)
 
 
 @pytest.fixture(scope="module")
 def media(spark):
-    from yckg_spark.operators.multimodal import MEDIA_SCHEMA
-
     rows = [
         ("m1", "image", "image/png", b"\x89PNG-fake-1", 1024, 768, None),
         ("m2", "image", "image/jpeg", b"\xff\xd8-fake-2", 100, 50, None),

@@ -30,11 +30,3 @@ def skolem_iri(*parts: Column | str) -> Column:
         F.lit(SKOLEM_ROOT),
         F.sha2(F.concat_ws(_SEP, *[F.coalesce(c.cast("string"), F.lit("")) for c in cols]), 256),
     )
-
-
-def skolem_iri_py(*parts: str) -> str:
-    """Python twin for tests / golden-oracle construction."""
-    import hashlib
-
-    payload = _SEP.join("" if p is None else str(p) for p in parts)
-    return SKOLEM_ROOT + hashlib.sha256(payload.encode("utf-8")).hexdigest()

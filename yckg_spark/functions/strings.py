@@ -26,11 +26,6 @@ def sanitize_iri(col: Column) -> Column:
     return F.translate(col, _IRI_BAD, _IRI_SUB)
 
 
-def sanitize_iri_py(s: str) -> str:
-    """Python twin of :func:`sanitize_iri` for plan-time constants."""
-    return s.translate(str.maketrans(_IRI_BAD, _IRI_SUB))
-
-
 def repair_pseudo_json(col: Column) -> Column:
     """F2 — the reference's pseudo-JSON repair chain, same order, same
     (buggy) literal-substring semantics (create_yelp_nt_files.py:118):

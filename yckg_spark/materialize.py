@@ -9,10 +9,10 @@ build bucket or a stream micro-batch) is processed per commit
 single atomic job, and the lineage manifest row (with per-commit metrics) is
 written only after the data job succeeds — so a crash between the two at
 worst re-processes one bucket into an overwritten partition dir (idempotent),
-never duplicates it. Restart anti-joins the manifest (north_rule:
-"resumable from checkpoint with per-partition lineage + metrics"; the
-reference just re-appends and risks duplicates — create_yelp_nt_files.py:31
-'at' mode).
+never duplicates it. A restart reads the manifest's bucket ids into a
+driver-side set and skips those buckets (north_rule: "resumable from
+checkpoint with per-partition lineage + metrics"; the reference just
+re-appends and risks duplicates — create_yelp_nt_files.py:31 'at' mode).
 
 Snapshot time-travel is emulated too: every commit carries a monotone
 ``sequence_number`` and ``committed_at_ms``, and because committed buckets
@@ -133,8 +133,10 @@ def commit_bucket(
         # (one pattern per self-join side), so the query side prunes to the
         # matching partition dirs instead of re-scanning the full store per
         # pattern — the Iceberg identity-partition(predicate) layout, nested
-        # under the write side's bucket partitioning. Predicate cardinality
-        # is small (~50 vocabulary IRIs), so this adds no small-file blowup.
+        # under the write side's bucket partitioning. The price is fan-out:
+        # a bucket holds ~71 predicate dirs, each with one parquet file per
+        # write task, so small buckets pay per-file overhead (the 2-bucket
+        # smoke store is 142 files and 912,684 B, 204,010 B of them footers).
         n_triples = write_observed(
             dedup_triples(triples),
             os.path.join(out_dir, "triples", f"bucket={bucket}"),

@@ -18,25 +18,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("mime", StringType(), True),
-        StructField("payload", BinaryType(), True),  # opaque bytes
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-    ]
 )
 
 FEATURES_SCHEMA = StructType(

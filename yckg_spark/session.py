@@ -21,11 +21,17 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine defaults.
+    """Build a SparkSession with the engine defaults, or return the live one.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster pass nothing and let spark-submit supply it.
+    real cluster pass nothing and let spark-submit supply it. A live session
+    comes back unchanged: only the call that creates a session sets its conf
+    (the builder's ``getOrCreate`` would re-apply every runtime option, e.g.
+    ``spark.sql.shuffle.partitions``, to the session already in use).
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Under spark-submit the JVM gateway is pre-launched (PYSPARK_GATEWAY_PORT
     # set) and already carries --master; never override it there. Standalone
