@@ -8,8 +8,9 @@ harness runs the same comparison at the bench fixture scale (17,000
 businesses, ~200k pages) — engine triples from the distributed
 scan → extract → parse → emit path, expected triples from
 `tests/oracle.py` (plain dict-driven Python structured nothing like the
-engine's Column expressions) — and writes BENCH/triple_pr.json with
-precision, recall, and the pass flag.
+engine's Column expressions) — and prints precision, recall, and the pass
+flag. Only a ``--scale bench`` run writes them to BENCH/triple_pr.json, the
+kept evidence; smaller scales print their result only.
 
 Usage: python BENCH/run_triple_pr.py [--scale bench|correctness|smoke]
 """
@@ -84,8 +85,10 @@ def main() -> None:
         "example_missing": sorted(map(str, list(want - got)[:5])),
         "cpus": int(CPUS),
     }
-    with open(REPO / "BENCH" / "triple_pr.json", "w") as f:
-        json.dump(out, f, indent=2)
+    if args.scale == "bench":
+        # the kept evidence is the bench-scale run; smaller scales only print
+        with open(REPO / "BENCH" / "triple_pr.json", "w") as f:
+            json.dump(out, f, indent=2)
     print(json.dumps(out))
 
 

@@ -93,3 +93,27 @@ def test_one_pass_emission_matches_oracle_multiset(spark, smoke_fixture_dir):
     assert {tuple(r) for r in triples.drop("source_domain").collect()} == want_triples
     got = Counter((r["subject"], r["predicate"], r["kind"]) for r in errors.collect())
     assert got == oracle.golden_error_counts(rows)
+
+
+def test_triple_pr_script_keeps_bench_evidence(spark, tmp_path, monkeypatch, capsys):
+    """`BENCH/run_triple_pr.py` below bench scale prints its result and
+    leaves `BENCH/triple_pr.json`, the kept bench-scale evidence, alone."""
+    import importlib.util
+    import os
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "run_triple_pr", os.path.join(root, "BENCH", "run_triple_pr.py")
+    )
+    script = importlib.util.module_from_spec(spec)
+    # the script's import-time default for YCKG_LOCAL_DIR is undone at teardown
+    monkeypatch.setenv("YCKG_LOCAL_DIR", os.environ.get("YCKG_LOCAL_DIR", "/dev/shm/spark-local"))
+    spec.loader.exec_module(script)
+    (tmp_path / "BENCH").mkdir()
+    monkeypatch.setattr(script, "REPO", tmp_path)
+    monkeypatch.setattr(sys, "argv", ["run_triple_pr.py", "--scale", "smoke"])
+    script.main()
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["scale"] == "smoke" and out["exact_match"]
+    assert os.listdir(tmp_path / "BENCH") == []

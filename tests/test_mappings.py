@@ -100,22 +100,35 @@ class TestIriMinting:
         assert len(iris) == 3 + 1  # tip/review/user/business; checkin shares business
 
 
+SANITIZE_CASES = [
+    ("Beauty & Spas", "Beauty___Spas"),
+    ("Tex-Mex", "Tex_Mex"),
+    ("Books (New)", "Books__New_"),
+    ("Children's Clothing", "Children_s_Clothing"),
+    ("Home/Garden", "Home_Garden"),
+    ("Plain", "Plain"),
+]
+
+
 class TestSanitize:
     """F1 — create_yelp_nt_files.py:93 replace chain."""
 
-    @pytest.mark.parametrize(
-        "raw,clean",
-        [
-            ("Beauty & Spas", "Beauty___Spas"),
-            ("Tex-Mex", "Tex_Mex"),
-            ("Books (New)", "Books__New_"),
-            ("Children's Clothing", "Children_s_Clothing"),
-            ("Home/Garden", "Home_Garden"),
-            ("Plain", "Plain"),
-        ],
-    )
+    @pytest.mark.parametrize("raw,clean", SANITIZE_CASES)
     def test_examples(self, raw, clean):
         assert sanitize_iri_py(raw) == clean
+
+    def test_engine_expression_equals_twin(self, spark):
+        from pyspark.sql import functions as F
+
+        from yckg_spark.functions.strings import sanitize_iri
+
+        df = spark.createDataFrame([(raw,) for raw, _ in SANITIZE_CASES], "raw string")
+        got = {r["raw"]: r["clean"] for r in df.select(
+            "raw", sanitize_iri(F.col("raw")).alias("clean")).collect()}
+        assert got == {raw: sanitize_iri_py(raw) for raw, _ in SANITIZE_CASES}
+
+
+SKOLEM_CASES = [("s", "BusinessParking"), ("s", "a"), ("s", "b"), ("ab", "c"), ("a", "bc")]
 
 
 class TestSkolem:
@@ -129,6 +142,25 @@ class TestSkolem:
         assert skolem_iri_py("s", "a") != skolem_iri_py("s", "b")
         # separator prevents concat ambiguity
         assert skolem_iri_py("ab", "c") != skolem_iri_py("a", "bc")
+
+    def test_engine_expression_equals_twin(self, spark):
+        """The Column rule over columns and over a constant part, with a null
+        part hashed as the empty string, as the twin does."""
+        from pyspark.sql import functions as F
+
+        from yckg_spark.functions.skolem import skolem_iri
+
+        cases = SKOLEM_CASES + [("s", None)]
+        df = spark.createDataFrame(cases, "a string, b string")
+        got = [
+            tuple(r)
+            for r in df.select(
+                skolem_iri(F.col("a"), F.col("b")), skolem_iri("checkin", F.col("a"), F.col("b"))
+            ).collect()
+        ]
+        assert got == [
+            (skolem_iri_py(a, b), skolem_iri_py("checkin", a, b)) for a, b in cases
+        ]
 
 
 class TestDatatypeInference:

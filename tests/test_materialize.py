@@ -140,27 +140,142 @@ def test_trusted_bucket_column_guard(spark, pages, tmp_path):
     assert "bucket" not in with_trusted_bucket(pages, None, 4).columns
 
 
-def test_store_predicate_partition_prunes_cq_scans(spark, pages, tmp_path):
-    """The triple store is partitioned by predicate under each bucket; a CQ
-    predicate filter must land in PartitionFilters (pruned scan), not a
-    post-scan Filter over the whole store."""
+def _parquet_scans(plan) -> list:
+    """The parquet scan nodes of an executed physical plan, walking into
+    AQE's final plan and its query stages."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _parquet_scans(plan.executedPlan())
+    if name.endswith("QueryStageExec"):
+        return _parquet_scans(plan.plan())
+    if name == "FileSourceScanExec":
+        return [plan]
+    kids = plan.children()
+    return [s for i in range(kids.size()) for s in _parquet_scans(kids.apply(i))]
+
+
+def test_store_row_groups_prune_cq_scans(spark, pages, tmp_path):
+    """Each bucket's files are sorted by (predicate, subject), so a CQ's
+    `predicate = <iri>` filter is pushed into the parquet scan and skips the
+    row groups whose predicate min/max statistics exclude it: with small row
+    groups, CQ2's scan returns fewer rows than the store holds."""
+    import pyarrow.parquet as pq
+
     from yckg_spark.plans import queries as Q
 
     out = str(tmp_path / "kg_pred")
-    run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    block_size = hconf.get("parquet.block.size")
+    hconf.set("parquet.block.size", str(16 * 1024))
+    try:
+        run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
+    finally:
+        if block_size is None:
+            hconf.unset("parquet.block.size")
+        else:
+            hconf.set("parquet.block.size", block_size)
+    files = [
+        os.path.join(d, f)
+        for d, _, fs in os.walk(os.path.join(out, "triples"))
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert all("predicate=" not in f for f in files)
+    assert sum(pq.ParquetFile(f).metadata.num_row_groups for f in files) > 10 * len(files)
+
     store = read_triples(spark, out)
-    assert "predicate" in store.columns
+    n_rows = store.count()
     Q.register(spark, store)
-    plan = Q.cq2_restaurants_count(spark)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    seg = plan.split("PartitionFilters")[1][:200]
-    assert "predicate" in seg
+    df = Q.cq2_restaurants_count(spark)
+    assert df.collect()[0][0] > 0
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "EqualTo(predicate," in plan.toString().split("PushedFilters")[1][:200]
+    scans = _parquet_scans(plan)
+    assert scans
+    for scan in scans:
+        assert 0 < scan.metrics().apply("numOutputRows").value() < n_rows
     # and the store content is unchanged by the layout
     got = {
         tuple(r)
         for r in dedup_triples(store).select(*CMP_COLS).collect()
     }
     assert got == _full_set(spark, pages)
+
+
+def _write_predicate_dirs(spark, out: str, bucket: int) -> None:
+    """Rewrite committed bucket ``bucket`` of the store at ``out`` in the
+    layout stores had before sorted files: one ``predicate=P`` dir per
+    predicate under the bucket dir."""
+    import shutil
+
+    path = os.path.join(out, "triples", f"bucket={bucket}")
+    spark.read.parquet(path).write.partitionBy("predicate").parquet(path + ".old")
+    shutil.rmtree(path)
+    os.rename(path + ".old", path)
+
+
+def _answers(spark, store_dir: str, tmp_path) -> dict:
+    """The CQ1-16 answers, the compacted store and the N-Triples export of
+    the store at ``store_dir``, each as a comparable value."""
+    from collections import Counter
+
+    from yckg_spark.materialize import compact_store
+    from yckg_spark.plans import queries as Q
+
+    def norm(row):
+        return tuple(
+            float(f"{v:.12g}") if isinstance(v, float) else v for v in row
+        )
+
+    Q.register(spark, dedup_triples(read_triples(spark, store_dir)))
+    cqs = {n: Counter(norm(r) for r in f(spark).collect()) for n, f in Q.ALL_CQS.items()}
+    name = os.path.basename(store_dir)
+    cdir = str(tmp_path / f"{name}_compacted")
+    compact_store(spark, store_dir, cdir, n_buckets=3)
+    compacted = {tuple(r) for r in read_triples(spark, cdir).collect()}
+    ntdir = str(tmp_path / f"{name}_nt")
+    export_nt_gz(dedup_triples(read_triples(spark, store_dir)), ntdir)
+    lines = set()
+    for f in os.listdir(ntdir):
+        if f.endswith(".txt.gz"):
+            with gzip.open(os.path.join(ntdir, f), "rt") as fh:
+                lines.update(fh.read().splitlines())
+    return {"cqs": cqs, "compacted": compacted, "nt": lines}
+
+
+def test_old_and_mixed_layout_stores_read_alike(spark, pages, tmp_path):
+    """A store whose buckets hold predicate dirs (the layout before sorted
+    files), and a store mixing both layouts (an old store resumed or
+    streamed into), answer every CQ, compact and export exactly like the
+    same build in the sorted-file layout."""
+    import shutil
+
+    new = str(tmp_path / "new")
+    run_resumable(spark, pages, new, n_buckets=2, use_extraction=False)
+    old, mixed = str(tmp_path / "old"), str(tmp_path / "mixed")
+    shutil.copytree(new, old)
+    shutil.copytree(new, mixed)
+    for b in (0, 1):
+        _write_predicate_dirs(spark, old, b)
+    _write_predicate_dirs(spark, mixed, 0)
+
+    def predicate_dirs(store, b):
+        names = os.listdir(os.path.join(store, "triples", f"bucket={b}"))
+        return any(n.startswith("predicate=") for n in names)
+
+    assert [predicate_dirs(d, b) for d in (new, old, mixed) for b in (0, 1)] == [
+        False, False, True, True, True, False
+    ]
+
+    rows = {
+        d: sorted(map(repr, read_triples(spark, d).collect())) for d in (new, old, mixed)
+    }
+    # a Row's repr names its fields in order, so this compares columns too
+    assert rows[new] == rows[old] == rows[mixed]
+    want = _answers(spark, new, tmp_path)
+    assert all(want["cqs"].values()) and want["compacted"] and want["nt"]
+    assert _answers(spark, old, tmp_path) == want
+    assert _answers(spark, mixed, tmp_path) == want
 
 
 def test_store_content_deterministic_across_parallelism(spark, pages, tmp_path):
@@ -280,29 +395,27 @@ def test_read_triples_skips_uncommitted_buckets(spark, pages, tmp_path):
 
 def test_manifest_reads_start_no_spark_job(spark, pages, tmp_path):
     """Reading the manifest is driver-side file IO: listing the committed
-    buckets, the snapshot lineage, the manifest read of an as-of read, and
-    a resume with nothing left to commit start no Spark job."""
+    buckets, the snapshot lineage, the latest and as-of reads of the store,
+    and a resume with nothing left to commit start no Spark job."""
     out = str(tmp_path / "kg")
     run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
     sc = spark.sparkContext
-    # a bucket holds more predicate dirs than Spark's parallel-listing
-    # threshold, so at the default Spark lists the bucket dirs in a job of
-    # its own; that file discovery is not the manifest read under test
-    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    threshold = spark.conf.get(key)
-    spark.conf.set(key, "1000000")
+    # a bucket dir holds a few sorted files and no subdirs, so Spark's own
+    # file listing of a read of fewer than 32 buckets (its parallel-listing
+    # threshold) stays on the driver too
+    assert spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold") == "32"
     try:
         sc.setJobGroup("manifest-reads", "manifest reads")
         assert completed_buckets(spark, out) == {0, 1}
         assert [r["sequence_number"] for r in snapshots(spark, out)] == [1, 2]
         read_triples(spark, out, as_of_sequence=1)
+        read_triples(spark, out)
         assert run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)[
             "buckets_committed"
         ] == 0
         assert list(sc.statusTracker().getJobIdsForGroup("manifest-reads")) == []
     finally:
         sc.setJobGroup(None, None)
-        spark.conf.set(key, threshold)
 
 
 def test_vacuum_on_empty_store(spark, tmp_path):

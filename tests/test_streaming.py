@@ -14,6 +14,9 @@ def _copy_pages(src_parquet: str, landing: str, name: str) -> None:
 
 
 def test_available_now_drains_and_is_exactly_once(spark, smoke_fixture_dir, tmp_path):
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
     from yckg_spark.materialize import compact_store, read_manifest, read_triples, remove_orphans
     from yckg_spark.operators.canonicalize import dedup_triples
     from yckg_spark.operators.emit import emit_all
@@ -75,13 +78,24 @@ def test_available_now_drains_and_is_exactly_once(spark, smoke_fixture_dir, tmp_
     assert remove_orphans(spark, out)["removed"] == ["triples/bucket=9"]
     assert not (tmp_path / "out" / "triples" / "bucket=9").exists()
 
-    # compaction: micro-batches -> one globally-deduped canonical store
-    # (bucket x predicate layout), same triple set, no cross-batch dupes
+    # compaction: micro-batches -> one globally-deduped canonical store,
+    # same triple set, no cross-batch dupes
     cdir = str(tmp_path / "compacted")
     result = compact_store(spark, out, cdir, n_buckets=4)
     assert result["n_triples"] == n1  # one batch's worth: cross-batch dupes gone
     compacted = read_triples(spark, cdir)
     assert {"bucket", "predicate"} <= set(compacted.columns)
+    # canonical layout: bucket(subject) dirs, each one file sorted by
+    # (predicate, subject) with predicate a data column
+    assert compacted.filter(F.col("bucket") != F.pmod(F.hash("subject"), F.lit(4))).count() == 0
+    for b in range(4):
+        bdir = os.path.join(cdir, "triples", f"bucket={b}")
+        files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+        assert len(files) == 1
+        t = pq.read_table(os.path.join(bdir, files[0]))
+        assert "predicate" in t.column_names and "bucket" not in t.column_names
+        keys = list(zip(t.column("predicate").to_pylist(), t.column("subject").to_pylist()))
+        assert keys == sorted(keys)
     got = {
         tuple(r) for r in compacted.select("subject", "predicate", "object").collect()
     }

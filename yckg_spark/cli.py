@@ -38,7 +38,7 @@ from yckg_spark import session
 from yckg_spark.fsutil import delete, write_text
 from yckg_spark.materialize import (
     compact_store, export_nt_gz, read_nt, read_triples, remove_orphans, run_resumable,
-    snapshots, write_observed,
+    snapshots, write_observed, write_triples,
 )
 from yckg_spark.operators.canonicalize import dedup_triples
 from yckg_spark.operators.curation import (
@@ -489,9 +489,9 @@ def cmd_link(spark, args) -> dict:
         "business_id", *(f"{lv}_qid" for lv in levels), "link_mask", "link_score"
     ).write.mode("overwrite").parquet(f"{args.output}/links")
 
-    n_triples = write_observed(
+    n_triples = write_triples(
         location_triples(biz, snaps, linked=linked), f"{args.output}/triples",
-        partition_by=["predicate"], n=F.count(F.lit(1)),
+        n=F.count(F.lit(1)),
     )["n"]
     for df in persisted + [linked]:
         df.unpersist()

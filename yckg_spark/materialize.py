@@ -1,4 +1,4 @@
-"""Materialization: partitioned triple store, lineage manifest,
+"""Materialization: bucketed triple store, lineage manifest,
 checkpoint-resume, metrics, and N-Triples export.
 
 Production sink is a partitioned Iceberg table (atomic snapshot commits);
@@ -14,6 +14,14 @@ driver-side set and skips those buckets (north_rule: "resumable from
 checkpoint with per-partition lineage + metrics"; the reference just
 re-appends and risks duplicates — create_yelp_nt_files.py:31 'at' mode).
 
+Inside a bucket dir the triples are a few parquet files, one per write task,
+each sorted by ``(predicate, subject)`` with ``predicate`` a data column
+(``write_triples``). Every CQ pattern filters ``predicate = <iri>``; the
+filter is pushed into the parquet scan, which skips the row groups whose
+``predicate`` min/max statistics exclude the IRI. Stores written before this
+layout hold one ``predicate=P`` dir per predicate under each bucket;
+``read_triples`` reads those buckets, alone or mixed with new ones, too.
+
 Snapshot time-travel is emulated too: every commit carries a monotone
 ``sequence_number`` and ``committed_at_ms``, and because committed buckets
 are immutable the table state as of any commit is reconstructible as the
@@ -22,7 +30,7 @@ as_of_sequence= / as_of_timestamp_ms=)`` is the Iceberg ``VERSION AS OF`` /
 ``TIMESTAMP AS OF`` read, and ``snapshots()`` the snapshots metadata table.
 What this emulation still lacks vs real Iceberg: travel across overwrites
 of the same bucket (snapshot expiry semantics) and hidden partition
-transforms beyond the explicit bucket/predicate layout.
+transforms beyond the explicit bucket layout.
 """
 
 from __future__ import annotations
@@ -34,7 +42,7 @@ import time
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from yckg_spark import schemas
 from yckg_spark.operators.canonicalize import DEDUP_KEY, dedup_triples
@@ -42,12 +50,13 @@ from yckg_spark.operators.emit import emit_rows, split_rows
 from yckg_spark.sources.web_pages import parse_records
 
 N_BUCKETS_DEFAULT = 8
-# the committed store as read: the written triple columns, then the bucket
-# and predicate partition columns. Given, not inferred, so a read of a
-# manifest store starts no footer-reading job.
+# the committed store as read: the written triple columns (``predicate``
+# among them, a data column), then the ``bucket`` partition column. Given,
+# not inferred, so a read of a manifest store starts no footer-reading job;
+# in an old-layout bucket Spark fills ``predicate`` from its dir names.
 STORE_SCHEMA = StructType(
-    [StructField(f.name, f.dataType) for f in schemas.TRIPLES if f.name != "predicate"]
-    + [StructField("bucket", IntegerType()), StructField("predicate", StringType())]
+    [StructField(f.name, f.dataType) for f in schemas.TRIPLES]
+    + [StructField("bucket", IntegerType())]
 )
 
 
@@ -67,6 +76,22 @@ def write_observed(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return obs.get
+
+
+def write_triples(
+    triples: DataFrame, path: str, *, partition_by: list[str] | None = None, **aggs: Column
+) -> dict:
+    """``write_observed`` for a triples store: each write task's rows sorted
+    by ``partition_by``, then ``(predicate, subject)``, so a task writes one
+    file per ``partition_by`` dir and each file's row groups hold narrow
+    ``predicate`` ranges for a ``predicate = <iri>`` filter to skip by their
+    min/max statistics. The dynamic-partition write needs its rows sorted by
+    ``partition_by`` anyway, so this is one sort with more keys, not a
+    second sort."""
+    keys = [*(partition_by or []), "predicate", "subject"]
+    return write_observed(
+        triples.sortWithinPartitions(*keys), path, partition_by=partition_by, **aggs
+    )
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -106,7 +131,8 @@ def commit_bucket(
     return its manifest row — the one write path of the store's triples and
     errors (a build bucket and a stream micro-batch alike).
 
-    The triples land under ``triples/bucket=K/predicate=P``, the error rows
+    The triples land under ``triples/bucket=K`` as files sorted by
+    ``(predicate, subject)`` (``write_triples``), the error rows
     under ``errors/bucket=K``, and the manifest row ``bucket-K.json`` only
     after both data writes succeeded. Each write overwrites its dir, so
     re-running a commit with the same ``bucket`` replaces it.
@@ -129,18 +155,9 @@ def commit_bucket(
         triples, errors = split_rows(rows)
 
         t0 = time.time()
-        # predicate-partitioned store: every CQ filters `predicate = <iri>`
-        # (one pattern per self-join side), so the query side prunes to the
-        # matching partition dirs instead of re-scanning the full store per
-        # pattern — the Iceberg identity-partition(predicate) layout, nested
-        # under the write side's bucket partitioning. The price is fan-out:
-        # a bucket holds ~71 predicate dirs, each with one parquet file per
-        # write task, so small buckets pay per-file overhead (the 2-bucket
-        # smoke store is 142 files and 912,684 B, 204,010 B of them footers).
-        n_triples = write_observed(
+        n_triples = write_triples(
             dedup_triples(triples),
             os.path.join(out_dir, "triples", f"bucket={bucket}"),
-            partition_by=["predicate"],
             n=F.count(F.lit(1)),
         )["n"]
         n_errors = write_observed(
@@ -266,7 +283,19 @@ def read_triples(
     at the path level: later buckets, and bucket dirs with no manifest row
     (a killed run's residue), are never opened. A store without a manifest
     (``compact_store`` output) is read whole.
+
+    A bucket committed before the sorted-file layout holds ``predicate=P``
+    dirs. Spark cannot read one relation whose leaf dirs disagree on their
+    partition columns, so the buckets of each layout are read apart and
+    unioned by name. Telling them apart lists each bucket dir on the driver.
+    Spark's own file listing starts a Spark job once a read names more dirs,
+    or one dir holds more subdirs, than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32): a store
+    of up to 32 sorted-layout buckets is read without one, while an
+    old-layout bucket's ~71 predicate dirs start one.
     """
+    from yckg_spark.fsutil import list_names
+
     tdir = os.path.join(out_dir, "triples")
     as_of = as_of_sequence is not None or as_of_timestamp_ms is not None
     rows = read_manifest(spark, out_dir)
@@ -282,8 +311,18 @@ def read_triples(
         rows = [r for r in rows if r["committed_at_ms"] <= as_of_timestamp_ms]
     if not rows:
         raise ValueError("no snapshot at or before the requested point")
-    paths = [os.path.join(tdir, f"bucket={b}") for b in sorted(r["bucket"] for r in rows)]
-    return spark.read.option("basePath", tdir).schema(STORE_SCHEMA).parquet(*paths)
+    sorted_files, predicate_dirs = [], []
+    for b in sorted(r["bucket"] for r in rows):
+        path = os.path.join(tdir, f"bucket={b}")
+        old = any(n.startswith("predicate=") for n in list_names(spark, path))
+        (predicate_dirs if old else sorted_files).append(path)
+    reader = spark.read.option("basePath", tdir).schema(STORE_SCHEMA)
+    parts = [
+        reader.parquet(*paths).select(*STORE_SCHEMA.fieldNames())
+        for paths in (sorted_files, predicate_dirs)
+        if paths
+    ]
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 def compact_store(
@@ -294,21 +333,26 @@ def compact_store(
 ) -> dict:
     """Rewrite a store (a resumable build, a stream's micro-batches, or a
     union of shards) as one globally-deduplicated store in the canonical
-    layout: ``bucket(subject)`` dirs × ``predicate`` partitions. Each
-    commit dedups only within itself, so a triple emitted by two buckets
-    is stored twice; this is the downstream compaction job that makes the
-    store a set — the Iceberg rewrite-data-files maintenance action.
+    layout: ``bucket(subject)`` dirs, each holding files sorted by
+    ``(predicate, subject)`` with ``predicate`` a data column
+    (``write_triples``). Each commit dedups only within itself, so a triple
+    emitted by two buckets is stored twice; this is the downstream
+    compaction job that makes the store a set — the Iceberg
+    rewrite-data-files maintenance action.
 
     It reads what ``read_triples`` reads (the committed buckets only), in
-    one shuffle (the dedup groupBy); the write is partitioned by the same
-    dedup output, so no second shuffle, and the count rides the write.
+    one shuffle: hash-partitioning on ``subject`` into ``n_buckets`` parts
+    already clusters the dedup key, so the dedup adds no exchange. Spark's
+    hash partition id is ``pmod(hash(subject), n_buckets)``, the bucket
+    expression itself, so each write task holds one bucket and writes one
+    file. The count rides the write.
     """
     triples = read_triples(spark, in_dir)
     extra = [c for c in triples.columns if c not in DEDUP_KEY + ["source_domain"]]
-    deduped = dedup_triples(triples.drop(*extra))
+    deduped = dedup_triples(triples.drop(*extra).repartition(n_buckets, "subject"))
     out = deduped.withColumn("bucket", F.pmod(F.hash("subject"), F.lit(n_buckets)))
     tdir = os.path.join(out_dir, "triples")
-    n = write_observed(out, tdir, partition_by=["bucket", "predicate"], n=F.count(F.lit(1)))["n"]
+    n = write_triples(out, tdir, partition_by=["bucket"], n=F.count(F.lit(1)))["n"]
     return {"n_triples": n, "out": tdir, "n_buckets": n_buckets}
 
 

@@ -7,7 +7,7 @@ file tracking that the batch path gets from the lineage manifest.
 
 Each micro-batch is one store commit through the same
 ``materialize.commit_bucket`` a batch build runs per bucket, so a stream's
-output is an ordinary store: committed buckets, predicate partitions, a
+output is an ordinary store: committed buckets of sorted triple files, a
 manifest row per batch, and ``read_triples``, ``snapshots``, as-of reads,
 ``vacuum`` and ``compact`` work on it unchanged.
 
