@@ -48,6 +48,9 @@ from tools.make_pyfiles import build_zip  # noqa: E402
 
 CORES_PER_WORKER = 2
 N_BUCKETS = 16  # overridable via --n-buckets; 16 so warmup amortizes (round 3)
+# shuffle/cache blocks on tmpfs: the host's one virtual disk would serialize
+# every worker's block I/O; a cluster node has its own local NVMe
+LOCAL_DIR = "/dev/shm/spark-local"
 
 
 def worker_cmd(spark_submit: str, zip_path: Path, input_dir: str, out_dir: str,
@@ -66,6 +69,7 @@ def worker_cmd(spark_submit: str, zip_path: Path, input_dir: str, out_dir: str,
         "--master", f"local[{CORES_PER_WORKER}]",
         "--driver-memory", "6g",
         "--conf", f"spark.driver.extraJavaOptions=-XX:ActiveProcessorCount={CORES_PER_WORKER}",
+        "--conf", f"spark.local.dir={LOCAL_DIR}",
         "--py-files", str(zip_path),
         str(REPO / "yckg_spark" / "cli.py"),
         "--shuffle-partitions", str(CORES_PER_WORKER * 4),
@@ -81,17 +85,14 @@ def run_config(spark_submit: str, zip_path: Path, input_dir: str, n_workers: int
                core_pairs: list[int]) -> dict:
     out_dir = "/dev/shm/yckg-exec-out"
     shutil.rmtree(out_dir, ignore_errors=True)
-    # NOTE: no YCKG_MAX_PARTITION_BYTES override here. The bucketized corpus
-    # has ~400 small files per bucket dir; at the default 128 MB budget
-    # Spark's openCostInBytes packing bundles ~32 of them per split, while a
-    # 4 MB cap (<= the 4 MB open cost) made EVERY file its own split and the
-    # 2-core worker per-task-overhead-bound: the same 250k-page bucket ran
-    # 150 s at 396 splits vs 53 s packed (measured A/B on pinned cores 6-7).
-    # Small-files split packing is exactly the knob that matters at 100 TB.
-    env = dict(
-        os.environ,
-        YCKG_LOCAL_DIR="/dev/shm/spark-local",
-    )
+    # NOTE: no spark.sql.files.maxPartitionBytes override here. The
+    # bucketized corpus has ~400 small files per bucket dir; at the default
+    # 128 MB budget Spark's openCostInBytes packing bundles ~32 of them per
+    # split, while a 4 MB cap (<= the 4 MB open cost) made EVERY file its own
+    # split and the 2-core worker per-task-overhead-bound: the same
+    # 250k-page bucket ran 150 s at 396 splits vs 53 s packed (measured A/B
+    # on pinned cores 6-7). Small-files split packing is exactly the knob
+    # that matters at 100 TB.
     all_buckets = list(range(N_BUCKETS))
     shards = [all_buckets[i::n_workers] for i in range(n_workers)]
     t0 = time.time()
@@ -100,7 +101,7 @@ def run_config(spark_submit: str, zip_path: Path, input_dir: str, n_workers: int
         subprocess.Popen(
             worker_cmd(spark_submit, zip_path, input_dir, out_dir,
                        ",".join(map(str, shard)), core_pairs[i]),
-            stdout=subprocess.PIPE, stderr=ef, text=True, env=env,
+            stdout=subprocess.PIPE, stderr=ef, text=True,
         )
         for i, (shard, ef) in enumerate(zip(shards, err_files))
     ]
@@ -192,12 +193,14 @@ def main() -> None:
         # emulation) so each worker's scan prunes to its own shard
         subprocess.run(
             [spark_submit, "--master", "local[8]", "--driver-memory", "8g",
+             # the flat corpus is a few big files: 4 MB splits fan its
+             # extraction out across all 8 cores
+             "--conf", "spark.sql.files.maxPartitionBytes=4194304",
+             "--conf", f"spark.local.dir={LOCAL_DIR}",
              "--py-files", str(zip_path), str(REPO / "yckg_spark" / "cli.py"),
              "bucketize", "--input", flat_dir, "--output", input_dir,
              "--n-buckets", str(N_BUCKETS)],
             check=True, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-            env=dict(os.environ, YCKG_MAX_PARTITION_BYTES="4194304",
-                     YCKG_LOCAL_DIR="/dev/shm/spark-local"),
         )
 
     reps_path = REPO / "BENCH" / "executor_scaling_reps.jsonl"

@@ -28,9 +28,7 @@ import sys
 
 sys.path.insert(0, str(REPO))
 
-os.environ.setdefault("YCKG_LOCAL_DIR", "/dev/shm/spark-local")
-
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def main() -> None:
@@ -49,7 +47,8 @@ def main() -> None:
     fdir = default_fixture(args.scale)
 
     spark = get_spark(
-        "yckg-triple-pr", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS)
+        "yckg-triple-pr", master=f"local[{CPUS}]", shuffle_partitions=CPUS,
+        extra_conf={"spark.local.dir": "/dev/shm/spark-local"},
     )
     t0 = time.time()
     pages = read_web_pages(spark, f"{fdir}/web_pages.parquet")
@@ -83,7 +82,7 @@ def main() -> None:
         "oracle_s": oracle_s,
         "example_extra": sorted(map(str, list(got - want)[:5])),
         "example_missing": sorted(map(str, list(want - got)[:5])),
-        "cpus": int(CPUS),
+        "cpus": CPUS,
     }
     if args.scale == "bench":
         # the kept evidence is the bench-scale run; smaller scales only print

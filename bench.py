@@ -1,7 +1,7 @@
 """Headline benchmark: one JSON line on stdout.
 
 Runs the engine's flagship workloads at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: every core):
 
   * kg_build        — the full KG-construction pipeline (synthesized pages →
                       Arrow extraction UDF → parse → emit → dedup), the
@@ -29,21 +29,12 @@ import __spark_entry__ as entrymod
 from yckg_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 # fixture corpus for kg_fixture_build: the tiny smoke fixture only for the
 # tiny sf0.001 dir; everywhere else (sf0.1, synthesized sf1) the bench
 # fixture, so cross-sf headline comparisons hold that term constant
 _FIXTURE = "smoke" if "0.001" in SF_DIR else "bench"
-
-# Shuffle/cache blocks on tmpfs: the sandbox's single virtual disk sustains
-# ~145 MB/s shared across all threads and flatlines any multi-core run;
-# real clusters have per-node NVMe (see BENCH/BASELINE.md).
-os.environ.setdefault("YCKG_LOCAL_DIR", "/dev/shm/spark-local")
-
-
-def _count(df) -> int:
-    return df.count()
 
 
 def q_kg_fixture_build(spark, _sf_dir):
@@ -68,7 +59,13 @@ def q_minhash_production(spark, sf_dir):
 
 
 def main() -> None:
-    spark = get_spark("yckg-bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
+    # Shuffle/cache blocks on tmpfs: the sandbox's single virtual disk
+    # sustains ~145 MB/s shared across all threads and flatlines any
+    # multi-core run; real clusters have per-node NVMe (see BENCH/BASELINE.md).
+    spark = get_spark(
+        "yckg-bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS,
+        extra_conf={"spark.local.dir": "/dev/shm/spark-local"},
+    )
     qs = entrymod.queries()
     bench_queries = {
         "kg_build": qs["kg_build"],
@@ -81,7 +78,7 @@ def main() -> None:
         "kg_hierarchy_closure": qs["kg_hierarchy_closure"],
     }
     # warm the JVM/Arrow path so per-query numbers measure the plan, not init
-    _count(qs["count_distinct"](spark, SF_DIR))
+    qs["count_distinct"](spark, SF_DIR).count()
     # fixture generation is one-time input materialization, not engine work
     from fixtures.generate import default_fixture
 
@@ -100,7 +97,7 @@ def main() -> None:
         for name, fn in bench_queries.items():
             t0 = time.time()
             df = fn(spark, SF_DIR)
-            counts[name] = _count(df)
+            counts[name] = df.count()
             samples[name].append(round(time.time() - t0, 3))
             # drop every block the query persisted (the classified-pages cut
             # of parse_records, LSH signatures): the CacheManager would serve
@@ -124,7 +121,7 @@ def main() -> None:
                 "sf": SF_DIR.rstrip("/").split("sf")[-1],
                 "triples_emitted": kg_triples,
                 "kg_triples_per_sec": round(kg_triples / kg_secs, 1) if kg_secs else None,
-                "cpus": int(CPUS),
+                "cpus": CPUS,
             }
         )
     )

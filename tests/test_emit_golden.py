@@ -107,8 +107,6 @@ def test_triple_pr_script_keeps_bench_evidence(spark, tmp_path, monkeypatch, cap
         "run_triple_pr", os.path.join(root, "BENCH", "run_triple_pr.py")
     )
     script = importlib.util.module_from_spec(spec)
-    # the script's import-time default for YCKG_LOCAL_DIR is undone at teardown
-    monkeypatch.setenv("YCKG_LOCAL_DIR", os.environ.get("YCKG_LOCAL_DIR", "/dev/shm/spark-local"))
     spec.loader.exec_module(script)
     (tmp_path / "BENCH").mkdir()
     monkeypatch.setattr(script, "REPO", tmp_path)

@@ -1,5 +1,6 @@
 """Materialization: checkpoint-resume with lineage manifest, NT export."""
 
+import contextlib
 import gzip
 import os
 
@@ -32,11 +33,30 @@ def _full_set(spark, pages):
     return {tuple(r) for r in dedup_triples(t).select(*CMP_COLS).collect()}
 
 
+@contextlib.contextmanager
+def _killed_after(n_commits: int):
+    """``materialize.commit_bucket`` raises on its (n+1)-th call: a build
+    killed after ``n_commits`` bucket commits."""
+    import yckg_spark.materialize as M
+
+    real, calls = M.commit_bucket, []
+
+    def commit_or_die(*args, **kwargs):
+        if len(calls) == n_commits:
+            raise RuntimeError("injected failure")
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(M, "commit_bucket", commit_or_die)
+        yield
+
+
 def test_resume_after_kill_no_dupes_no_missing(spark, pages, tmp_path):
     out = str(tmp_path / "kg")
     # run 1: crash after 3 bucket commits
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_resumable(spark, pages, out, n_buckets=8, use_extraction=False, fail_after=3)
+    with _killed_after(3), pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, pages, out, n_buckets=8, use_extraction=False)
     assert len(completed_buckets(spark, out)) == 3
     # run 2: resume — only the remaining 5 buckets are processed
     result = run_resumable(spark, pages, out, n_buckets=8, use_extraction=False)
@@ -307,8 +327,8 @@ def test_time_travel_reads(spark, pages, tmp_path):
     run extends the sequence, and the latest read equals the full build.
     Mirrors Iceberg VERSION AS OF / TIMESTAMP AS OF / snapshots table."""
     out = str(tmp_path / "kg_tt")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_resumable(spark, pages, out, n_buckets=4, use_extraction=False, fail_after=2)
+    with _killed_after(2), pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, pages, out, n_buckets=4, use_extraction=False)
     snaps = snapshots(spark, out)
     assert [r["sequence_number"] for r in snaps] == [1, 2]
 
@@ -416,6 +436,37 @@ def test_manifest_reads_start_no_spark_job(spark, pages, tmp_path):
         assert list(sc.statusTracker().getJobIdsForGroup("manifest-reads")) == []
     finally:
         sc.setJobGroup(None, None)
+
+
+def test_store_reads_without_manifest_start_no_spark_job(spark, pages, tmp_path):
+    """A store with no manifest (``compact_store`` output, ``link``'s
+    ``triples/``) is read with ``STORE_SCHEMA`` too, so the read starts no
+    schema-inference job; with no bucket dirs, ``bucket`` reads as null."""
+    from pyspark.sql import functions as F
+
+    from yckg_spark.materialize import STORE_SCHEMA, compact_store, write_triples
+
+    out, cdir, flat = (str(tmp_path / n) for n in ("kg", "kg_compact", "kg_flat"))
+    run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
+    n = compact_store(spark, out, cdir, n_buckets=2)["n_triples"]
+    write_triples(
+        read_triples(spark, cdir).drop("bucket"), os.path.join(flat, "triples"),
+        n=F.count(F.lit(1)),
+    )
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("no-manifest-reads", "reads of stores with no manifest")
+        compacted = read_triples(spark, cdir)
+        unbucketed = read_triples(spark, flat)
+        assert list(sc.statusTracker().getJobIdsForGroup("no-manifest-reads")) == []
+    finally:
+        sc.setJobGroup(None, None)
+    want = [(f.name, f.dataType) for f in STORE_SCHEMA]
+    for df in (compacted, unbucketed):
+        assert [(f.name, f.dataType) for f in df.schema] == want
+        assert df.count() == n
+    assert {r["bucket"] for r in compacted.select("bucket").distinct().collect()} == {0, 1}
+    assert unbucketed.filter(F.col("bucket").isNotNull()).count() == 0
 
 
 def test_vacuum_on_empty_store(spark, tmp_path):

@@ -11,6 +11,8 @@ Checks (against `explain(mode='formatted')` / the executed plan string):
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 
@@ -18,6 +20,20 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+@contextlib.contextmanager
+def _records(pages):
+    """``parse_records`` of ``pages`` without extraction; the stage cut it
+    persists is released on exit."""
+    from yckg_spark.sources.web_pages import parse_records
+
+    persisted = []
+    try:
+        yield parse_records(pages, use_extraction=False, persisted_out=persisted)
+    finally:
+        for df in persisted:
+            df.unpersist()
 
 
 @pytest.fixture(scope="module")
@@ -28,20 +44,16 @@ def pages(spark, smoke_fixture_dir):
 
 
 def test_lang_filter_pushed_to_scan(spark, pages):
-    from yckg_spark.sources.web_pages import parse_records
-
-    recs = parse_records(pages, use_extraction=False, cache=False)
-    plan = _plan(recs["business"])
+    with _records(pages) as recs:
+        plan = _plan(recs["business"])
     assert "PushedFilters" in plan
     # the lang equality predicate must reach the parquet reader
     assert "EqualTo(lang,en)" in plan.replace(" ", ""), plan
 
 
 def test_html_column_pruned_without_extraction(spark, pages):
-    from yckg_spark.sources.web_pages import parse_records
-
-    recs = parse_records(pages, use_extraction=False, cache=False)
-    plan = _plan(recs["business"])
+    with _records(pages) as recs:
+        plan = _plan(recs["business"])
     scan_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan_schema, plan
     assert "html" not in scan_schema[0], scan_schema[0]
@@ -49,24 +61,22 @@ def test_html_column_pruned_without_extraction(spark, pages):
 
 def test_mapping_join_broadcasts(spark, smoke_fixture_dir):
     from yckg_spark.sources.snapshots import load_snapshots
-    from yckg_spark.sources.web_pages import parse_records, read_web_pages
+    from yckg_spark.sources.web_pages import read_web_pages
     from yckg_spark.operators.enrich_wikidata import link_locations
 
     pages = read_web_pages(spark, f"{smoke_fixture_dir}/web_pages.parquet")
-    recs = parse_records(pages, use_extraction=False, cache=False)
     snaps = load_snapshots(spark, smoke_fixture_dir)
-    linked = link_locations(recs["business"], snaps)
-    plan = _plan(linked)
+    with _records(pages) as recs:
+        plan = _plan(link_locations(recs["business"], snaps))
     assert "BroadcastHashJoin" in plan, plan
 
 
 def test_no_cartesian_in_kg_build(spark, pages):
     from yckg_spark.operators.emit import emit_all
     from yckg_spark.operators.canonicalize import dedup_triples
-    from yckg_spark.sources.web_pages import parse_records
 
-    t, _ = emit_all(parse_records(pages, use_extraction=False, cache=False))
-    plan = _plan(dedup_triples(t))
+    with _records(pages) as recs:
+        plan = _plan(dedup_triples(emit_all(recs)[0]))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

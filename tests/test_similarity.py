@@ -331,12 +331,12 @@ def test_kmeans_single_iter_ties_break_low_and_validation(spark):
 
 
 def test_kmeans_destroys_replaced_codebook_broadcasts(spark, monkeypatch):
-    """Above ``literal_k_max`` each iteration broadcasts a new codebook;
+    """Above ``KMEANS_LITERAL_K_MAX`` each iteration broadcasts a new codebook;
     every one an iteration replaced is destroyed, and only the last, which
     the returned frame reads, stays valid."""
     from pyspark import SparkContext
 
-    from yckg_spark.operators.similarity import kmeans_assign
+    import yckg_spark.operators.similarity as sim
 
     made = []
     broadcast = SparkContext.broadcast
@@ -350,7 +350,8 @@ def test_kmeans_destroys_replaced_codebook_broadcasts(spark, monkeypatch):
         [(i, [float(i), float(i % 3)]) for i in range(12)], ["vec_id", "embedding"]
     )
     monkeypatch.setattr(SparkContext, "broadcast", tracked)
-    out = kmeans_assign(df, k=3, iters=3, literal_k_max=2).collect()
+    monkeypatch.setattr(sim, "KMEANS_LITERAL_K_MAX", 2)
+    out = sim.kmeans_assign(df, k=3, iters=3).collect()
     assert len(out) == 12
     assert len(made) == 3
     assert [bc._jbroadcast.isValid() for bc in made] == [False, False, True]
@@ -382,21 +383,19 @@ def test_kmeans_empty_input_returns_empty_assignment(spark):
         ("cluster", "int"),
     ]
 
-def test_kmeans_udf_path_matches_literal_path(spark):
-    from yckg_spark.operators.similarity import kmeans_assign
+def test_kmeans_udf_path_matches_literal_path(spark, monkeypatch):
+    import yckg_spark.operators.similarity as sim
 
     rows = [
         (i, [float((i * 7) % 11), float((i * 3) % 5), float(i % 4)])
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    lit = {r["vec_id"]: r["cluster"] for r in kmeans_assign(df, k=5, iters=2).collect()}
-    # literal_k_max=0 forces every assignment through the broadcast-numpy
+    lit = {r["vec_id"]: r["cluster"] for r in sim.kmeans_assign(df, k=5, iters=2).collect()}
+    # a limit of 0 forces every assignment through the broadcast-numpy
     # pandas_udf; identical centroids sequence -> identical assignment
-    udf = {
-        r["vec_id"]: r["cluster"]
-        for r in kmeans_assign(df, k=5, iters=2, literal_k_max=0).collect()
-    }
+    monkeypatch.setattr(sim, "KMEANS_LITERAL_K_MAX", 0)
+    udf = {r["vec_id"]: r["cluster"] for r in sim.kmeans_assign(df, k=5, iters=2).collect()}
     assert lit == udf
 
 

@@ -46,7 +46,8 @@ def test_available_now_drains_and_is_exactly_once(spark, smoke_fixture_dir, tmp_
 
     # the streamed triples match the batch pipeline on the same input
     pages = read_web_pages(spark, src)
-    t, _ = emit_all(parse_records(pages, use_extraction=False, cache=False))
+    persisted = []
+    t, _ = emit_all(parse_records(pages, use_extraction=False, persisted_out=persisted))
     batch = dedup_triples(t)
     batch_set = {tuple(r) for r in batch.select("subject", "predicate", "object").collect()}
     stream_set = {
@@ -63,6 +64,8 @@ def test_available_now_drains_and_is_exactly_once(spark, smoke_fixture_dir, tmp_
     assert [r["bucket"] for r in rows] == [0, 1]
     assert [r["sequence_number"] for r in rows] == [1, 2]
     n_batch = batch.count()
+    for df in persisted:
+        df.unpersist()
     assert [r["n_triples"] for r in rows] == [n_batch, n_batch]
 
     # snapshot lineage: the read as of sequence 1 is batch 0 alone

@@ -52,8 +52,9 @@ from yckg_spark.sources.web_pages import parse_records
 N_BUCKETS_DEFAULT = 8
 # the committed store as read: the written triple columns (``predicate``
 # among them, a data column), then the ``bucket`` partition column. Given,
-# not inferred, so a read of a manifest store starts no footer-reading job;
-# in an old-layout bucket Spark fills ``predicate`` from its dir names.
+# not inferred, so no read of a store starts a footer-reading job; in an
+# old-layout bucket Spark fills ``predicate`` from its dir names, and a store
+# with no bucket dirs (``link``'s ``triples/``) reads ``bucket`` as null.
 STORE_SCHEMA = StructType(
     [StructField(f.name, f.dataType) for f in schemas.TRIPLES]
     + [StructField("bucket", IntegerType())]
@@ -206,17 +207,15 @@ def run_resumable(
     out_dir: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
     use_extraction: bool = True,
-    fail_after: int | None = None,
     only_buckets: list[int] | None = None,
 ) -> dict:
     """Build the KG bucket-by-bucket with commit-level lineage: one
     ``commit_bucket`` per bucket that has no manifest row yet.
 
-    ``fail_after`` aborts after that many bucket commits (test hook for the
-    kill-and-resume scenario). ``only_buckets`` restricts this process to a
-    shard of the bucket space — how separate workers (executors/jobs on a
-    real cluster) split one build between them; each writes disjoint
-    partitions and manifest rows, so shards compose. Returns run metrics.
+    ``only_buckets`` restricts this process to a shard of the bucket space —
+    how separate workers (executors/jobs on a real cluster) split one build
+    between them; each writes disjoint partitions and manifest rows, so
+    shards compose. Returns run metrics.
     """
     from yckg_spark.fsutil import mkdirs
 
@@ -246,8 +245,6 @@ def run_resumable(
                 use_extraction=use_extraction,
             )
         )
-        if fail_after is not None and len(commits) >= fail_after:
-            raise RuntimeError(f"injected failure after {len(commits)} commits")
     return {
         "buckets_committed": len(commits),
         "total_triples": sum(m["n_triples"] for m in commits),
@@ -282,7 +279,7 @@ def read_triples(
     ``committed_at_ms``) at or below the bound. The read is partition-pruned
     at the path level: later buckets, and bucket dirs with no manifest row
     (a killed run's residue), are never opened. A store without a manifest
-    (``compact_store`` output) is read whole.
+    (``compact_store`` output, ``link``'s ``triples/``) is read whole.
 
     A bucket committed before the sorted-file layout holds ``predicate=P``
     dirs. Spark cannot read one relation whose leaf dirs disagree on their
@@ -302,7 +299,7 @@ def read_triples(
     if not rows:
         if as_of:
             raise ValueError(f"no manifest under {out_dir}")
-        return spark.read.parquet(tdir)
+        return spark.read.schema(STORE_SCHEMA).parquet(tdir)
     if as_of and any("sequence_number" not in r for r in rows):
         raise ValueError("store predates snapshot lineage (no sequence_number)")
     if as_of_sequence is not None:

@@ -73,9 +73,9 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
 extract_text_udf = extract_text_udf.asNondeterministic()
 
 
-def with_extracted_text(pages, html_col: str = "html", out_col: str = "extracted_text"):
+def with_extracted_text(pages):
     """pages(url, warc_ts, html, ...) → + extracted_text column."""
-    return pages.withColumn(out_col, extract_text_udf(F.col(html_col)))
+    return pages.withColumn("extracted_text", extract_text_udf(F.col("html")))
 
 
 def classify_domain(text_col: Column) -> Column:

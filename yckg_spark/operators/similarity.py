@@ -543,7 +543,6 @@ def kmeans_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int = 6,
-    literal_k_max: int = KMEANS_LITERAL_K_MAX,
 ) -> DataFrame:
     """Distributed Lloyd's k-means over the embedding column, returning the
     final (id, cluster) assignment — the topic/diversity-balancing
@@ -561,7 +560,7 @@ def kmeans_assign(
     bit in SQL. Empty clusters keep their previous centroid.
 
     Distributed shape, per iteration: the assignment pass is a NARROW map
-    with zero shuffle — k <= ``literal_k_max``: a fold over k x dim
+    with zero shuffle — k <= ``KMEANS_LITERAL_K_MAX``: a fold over k x dim
     broadcast-as-literal centroids (whole-stage-codegen-friendly while
     the plan stays small); larger k: an Arrow-batched pandas_udf argmin
     against a broadcast numpy codebook (one BLAS matmul per batch, plan
@@ -591,7 +590,7 @@ def kmeans_assign(
     codebooks = []  # the broadcast the current assignment reads, if any
 
     def assign(cents: list[list[float]]) -> DataFrame:
-        if len(cents) > literal_k_max:
+        if len(cents) > KMEANS_LITERAL_K_MAX:
             nearest, bc = _nearest_l2_udf(df.sparkSession, cents)
             codebooks.append(bc)
             return df.select(

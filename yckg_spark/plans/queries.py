@@ -22,24 +22,20 @@ from yckg_spark.namespaces import (
 VIEW = "triples"
 
 
-def register(spark: SparkSession, triples: DataFrame, view: str = VIEW) -> None:
-    triples.createOrReplaceTempView(view)
-
-
-def _sql(spark: SparkSession, q: str) -> DataFrame:
-    return spark.sql(q)
+def register(spark: SparkSession, triples: DataFrame) -> None:
+    triples.createOrReplaceTempView(VIEW)
 
 
 def cq1_distinct_categories(spark):
     """How many different business categories exist? (CQ1)"""
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT object) AS unique_categories
         FROM {VIEW} WHERE predicate = '{SCHEMA}keywords'
     """)
 
 
 def cq2_restaurants_count(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT subject) AS number_restaurants
         FROM {VIEW}
         WHERE predicate = '{SCHEMA}keywords' AND object = '{YELPCAT}Restaurants'
@@ -47,7 +43,7 @@ def cq2_restaurants_count(spark):
 
 
 def cq3_reviewed_restaurants(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT b.subject) AS business_count
         FROM {VIEW} b
         JOIN {VIEW} r ON r.object = b.subject AND r.predicate = '{SCHEMA}about'
@@ -58,14 +54,14 @@ def cq3_reviewed_restaurants(spark):
 
 
 def cq4_reviewed_businesses(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT object) AS business_count
         FROM {VIEW} WHERE predicate = '{SCHEMA}about' AND NOT is_literal
     """)
 
 
 def cq5_high_rated_businesses(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT t.subject) AS high_rated
         FROM {VIEW} t
         JOIN {VIEW} r ON r.subject = t.subject AND r.predicate = '{SCHEMA}aggregateRating'
@@ -75,7 +71,7 @@ def cq5_high_rated_businesses(spark):
 
 
 def cq6_average_rating(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT AVG(TRY_CAST(r.object AS DOUBLE)) AS average_rating
         FROM {VIEW} t
         JOIN {VIEW} r ON r.subject = t.subject AND r.predicate = '{SCHEMA}aggregateRating'
@@ -84,7 +80,7 @@ def cq6_average_rating(spark):
 
 
 def cq7_reviewed_in_city(spark, city: str = "Santa Barbara"):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT c.subject) AS count_business
         FROM {VIEW} c
         JOIN {VIEW} r ON r.object = c.subject AND r.predicate = '{SCHEMA}about'
@@ -94,7 +90,7 @@ def cq7_reviewed_in_city(spark, city: str = "Santa Barbara"):
 
 
 def cq8_max_visits_one_day(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT o.object AS business,
                year(TRY_CAST(t.object AS TIMESTAMP)) AS year,
                month(TRY_CAST(t.object AS TIMESTAMP)) AS month,
@@ -111,7 +107,7 @@ def cq8_max_visits_one_day(spark):
 
 
 def cq9_most_visited_business(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT o.object AS business,
                CAST(SUM(TRY_CAST(v.object AS BIGINT)) AS BIGINT) AS count_visits
         FROM {VIEW} o
@@ -124,14 +120,14 @@ def cq9_most_visited_business(spark):
 
 
 def cq10_review_authors(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT object) AS count_users
         FROM {VIEW} WHERE predicate = '{SCHEMA}author' AND NOT is_literal
     """)
 
 
 def cq11_users_with_10_friends(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT CAST(COUNT(*) AS BIGINT) AS users_with_10_friends
         FROM (
             SELECT subject FROM {VIEW}
@@ -142,7 +138,7 @@ def cq11_users_with_10_friends(spark):
 
 
 def cq12_average_friends(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT CAST(f.n AS DOUBLE) / CAST(u.n AS DOUBLE) AS average_friends
         FROM (SELECT COUNT(*) AS n FROM {VIEW}
               WHERE predicate = '{RDF_TYPE}' AND object = '{SCHEMA}Person') u
@@ -151,7 +147,7 @@ def cq12_average_friends(spark):
 
 
 def cq13_users_with_exactly_10_reviews(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(*) AS count_users
         FROM (
             SELECT a.object FROM {VIEW} a
@@ -164,7 +160,7 @@ def cq13_users_with_exactly_10_reviews(spark):
 
 
 def cq14_reviews_in_month(spark, year: int = 2018, month: int = 5):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT year(TRY_CAST(d.object AS TIMESTAMP)) AS year,
                month(TRY_CAST(d.object AS TIMESTAMP)) AS month,
                COUNT(*) AS count_reviews
@@ -179,7 +175,7 @@ def cq14_reviews_in_month(spark, year: int = 2018, month: int = 5):
 
 
 def cq15_parking_options(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT p.predicate) AS parking_options
         FROM {VIEW} t
         JOIN {VIEW} p ON p.subject = t.subject AND p.predicate != '{RDF_TYPE}'
@@ -188,7 +184,7 @@ def cq15_parking_options(spark):
 
 
 def cq16_karaoke_businesses(spark):
-    return _sql(spark, f"""
+    return spark.sql(f"""
         SELECT COUNT(DISTINCT m.subject) AS businesses_with_karaoke
         FROM {VIEW} m
         JOIN {VIEW} k ON k.subject = m.object

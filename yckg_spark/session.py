@@ -1,11 +1,27 @@
-"""SparkSession factory with the engine's scale-oriented defaults.
+"""SparkSession factory.
 
-Designed for a 1000-executor cluster reading ~100 TB; tested on local[N].
-All knobs are plain public Spark configs — AQE on (runtime re-planning,
-skew-join splitting, partition coalescing), Arrow on (every pandas UDF is an
-Arrow batch transfer), and shuffle partitioning sized by the caller
-(``shuffle_partitions``, the CLI's ``--shuffle-partitions``) so the same
-code runs at sf0.001 smoke and at cluster scale.
+The builder sets only the confs whose Spark defaults do not suit the
+engine:
+
+* ``spark.sql.session.timeZone`` = UTC: timestamps (a page's ``warc_ts``,
+  the dates CQ8 and CQ14 cast) read and print the same on every host
+  instead of in the host's zone.
+* ``spark.sql.execution.arrow.pyspark.enabled``: every pandas UDF (the HTML
+  extraction among them) crosses into Python as Arrow batches.
+* ``spark.sql.autoBroadcastJoinThreshold`` = 64 MB: every mapping and
+  snapshot table here is under 100k rows, so each always broadcasts.
+* ``spark.sql.shuffle.partitions`` = ``shuffle_partitions`` (the CLI's
+  ``--shuffle-partitions``), 32 when not given: Spark's 200 is sized for
+  inputs far larger than one store bucket.
+* ``spark.driver.memory`` = 8g: a local-mode driver is the whole cluster.
+
+Every other conf is Spark's own default or the launcher's. The engine relies
+on two such defaults, pinned by ``tests/test_session.py``: AQE with
+skew-join splitting, since head entities are skewed (one category covers
+~35% of the reference's businesses), and Arrow batches of 10,000 rows. The
+builder's confs override a launcher's ``--conf`` for the same keys, so set
+any other conf under ``spark-submit --conf`` (or ``PYSPARK_SUBMIT_ARGS``) or
+in process with ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -14,6 +30,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+DRIVER_MEMORY = "8g"
+
 
 def get_spark(
     app_name: str = "yckg-spark",
@@ -21,62 +39,29 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build a SparkSession with the engine defaults, or return the live one.
+    """Build a SparkSession with the engine's confs, or return the live one.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
-    real cluster pass nothing and let spark-submit supply it. A live session
-    comes back unchanged: only the call that creates a session sets its conf
-    (the builder's ``getOrCreate`` would re-apply every runtime option, e.g.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, or ``local[*]``
+    when that is unset; under spark-submit pass nothing and the submitted
+    ``--master`` holds. A live session comes back unchanged: only the call
+    that creates a session sets its conf (the builder's ``getOrCreate``
+    would re-apply every runtime option, e.g.
     ``spark.sql.shuffle.partitions``, to the session already in use).
     """
     live = SparkSession.getActiveSession()
     if live is not None:
         return live
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Under spark-submit the JVM gateway is pre-launched (PYSPARK_GATEWAY_PORT
-    # set) and already carries --master; never override it there. Standalone
-    # (pytest / bench) defaults to the sandbox's local master.
+    # set) and already carries --master; never override it there.
     if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS') or '*'}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        # AQE: runtime partition coalescing + skew-join splitting. The head
-        # entities in this workload are massively skewed (reference reality:
-        # the 'Restaurants' category covers ~35% of businesses, the top city
-        # ~10% of rows) so AQE skew handling is load-bearing, not optional.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow for every pandas_udf / mapInPandas boundary. Min-of-3
-        # interleaved reps on the bench corpus measured 50k-row batches ~19%
-        # faster than 10k at 8 threads (fewer pipe/GIL round-trips) and a
-        # wash at 2; 10k keeps per-worker memory bounded.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Broadcast threshold: every mapping/snapshot table in this pipeline
-        # is < 100k rows; make sure they always broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
-        # Input split sizing. At 100 TB the 128 MB default is right (millions
-        # of splits regardless); at sandbox scale a FLAT few-big-files corpus
-        # may need smaller splits so the UDF-heavy extraction stage fans out
-        # across all cores — override via YCKG_MAX_PARTITION_BYTES. Do NOT
-        # lower it on many-small-files inputs: a cap at or below
-        # spark.sql.files.openCostInBytes (4 MB) defeats Spark's small-file
-        # packing and makes every file its own split — measured 2.8x slower
-        # on a 400-file bucket (per-task overhead dominates; see
-        # BENCH/run_executor_scaling.py).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("YCKG_MAX_PARTITION_BYTES", "134217728"),
-        )
-        .config("spark.driver.memory", os.environ.get("YCKG_DRIVER_MEM", "8g"))
-        # Shuffle/cache block storage. On a real cluster each executor has
-        # its own local NVMe; in this single-VM sandbox the shared virtual
-        # disk serializes block I/O across all threads, so YCKG_LOCAL_DIR
-        # (e.g. /dev/shm/spark) emulates per-node fast storage.
-        .config("spark.local.dir", os.environ.get("YCKG_LOCAL_DIR", "/tmp"))
+        .config("spark.driver.memory", DRIVER_MEMORY)
     )
     if master:
         builder = builder.master(master)

@@ -114,7 +114,6 @@ def parse_records(
     *,
     lang: str = "en",
     use_extraction: bool = True,
-    cache: bool = True,
     persisted_out: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """pages → {domain: typed record DataFrame (+ url, warc_ts)}.
@@ -129,9 +128,8 @@ def parse_records(
     (``materialize.commit_bucket``) reads each once, through one cut of the
     emitted rows.
 
-    ``cache=True`` persists the classified frame DISK_ONLY and appends it
-    to ``persisted_out`` so the caller can unpersist it; ``cache=False``
-    leaves the plan uncut.
+    The cut is a DISK_ONLY persist of the classified frame, appended to
+    ``persisted_out`` so the caller can unpersist it.
     """
     pages = pages.filter(F.col("lang") == lang)
     if use_extraction:
@@ -147,14 +145,12 @@ def parse_records(
         text_col.alias("record_text"),
         classify_domain(text_col).alias("domain"),
     )
-    if cache:
-        # DISK_ONLY: serialized blocks on local disk sidestep the in-heap
-        # memory-store pressure that a 10×-bigger corpus would put on the
-        # executor heap; page cache makes re-reads near-memory-speed.
-        # Interim cut so the five domain parses share one extraction pass.
-        classified = classified.persist(StorageLevel.DISK_ONLY)
-        if persisted_out is not None:
-            persisted_out.append(classified)
+    # DISK_ONLY: serialized blocks on local disk sidestep the in-heap
+    # memory-store pressure that a 10×-bigger corpus would put on the
+    # executor heap; page cache makes re-reads near-memory-speed.
+    classified = classified.persist(StorageLevel.DISK_ONLY)
+    if persisted_out is not None:
+        persisted_out.append(classified)
 
     return {
         domain: classified.filter(F.col("domain") == domain)

@@ -24,10 +24,6 @@ from yckg_spark import schemas
 from yckg_spark.materialize import commit_bucket
 
 
-def read_web_pages_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    return spark.readStream.schema(schemas.WEB_PAGES).parquet(source_dir)
-
-
 def start_incremental_build(
     spark: SparkSession,
     source_dir: str,
@@ -48,7 +44,7 @@ def start_incremental_build(
 
     Returns the StreamingQuery; callers ``query.awaitTermination()``.
     """
-    pages = read_web_pages_stream(spark, source_dir)
+    pages = spark.readStream.schema(schemas.WEB_PAGES).parquet(source_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         commit_bucket(
