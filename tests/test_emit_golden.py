@@ -95,6 +95,26 @@ def test_one_pass_emission_matches_oracle_multiset(spark, smoke_fixture_dir):
     assert got == oracle.golden_error_counts(rows)
 
 
+def test_duplicate_checkin_pages_count_per_record(spark, smoke_fixture_dir):
+    """A checkin record counts its own dates (the reference's Counter per
+    line): two identical crawls of one checkin page give the oracle's
+    counts, not their sum. An empty date list gives no rows."""
+    from pyspark.sql import functions as F
+
+    pages = read_web_pages(spark, f"{smoke_fixture_dir}/web_pages.parquet").filter(
+        F.col("url").isin("https://example.org/checkin/1100", "https://example.org/checkin/1101")
+    )
+    twice = pages.unionByName(pages)
+    triples, errors = emit_all(parse_records(twice, use_extraction=False))
+    got = {tuple(r) for r in triples.drop("source_domain").collect()}
+    rows = twice.select("url", "text", "lang").collect()
+    want, _ = oracle.golden_from_pages([r.asDict() for r in rows])
+    assert len(rows) == 4 and got == want
+    counts = {o for s, p, o, _, _ in got if p.endswith("interactionStatistic")}
+    assert counts == {"1", "3", "59"}
+    assert errors.count() == 0
+
+
 def test_triple_pr_script_keeps_bench_evidence(spark, tmp_path, monkeypatch, capsys):
     """`BENCH/run_triple_pr.py` below bench scale prints its result and
     leaves `BENCH/triple_pr.json`, the kept bench-scale evidence, alone."""

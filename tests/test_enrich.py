@@ -171,3 +171,29 @@ class TestLocations:
         assert by_city["Saint Louis"]["state_qid"] is not None
         assert by_city["Boise"]["city_qid"] is not None  # city-only retry
         assert by_city["Edmonton"]["country_qid"] == "Q16"  # province → Canada
+
+
+def test_city_only_search_runs_only_when_city_state_finds_nothing(spark):
+    """A key keeps the hits of its "City, State" search when it has any, so
+    a settlement found only by the city-only search, though nearer, loses;
+    a key whose "City, State" search finds nothing falls back to "City"."""
+    biz = spark.createDataFrame(
+        [("b1", "Springfield", "IL", 39.80, -89.64), ("b2", "Boise", "ID", 43.61, -116.20)],
+        "business_id string, city string, state string, latitude double, longitude double",
+    )
+    snaps = {
+        "wd_labels": spark.createDataFrame(
+            [("Springfield, Illinois", "Q1", 0), ("Springfield", "Q2", 0), ("Boise", "Q3", 0)],
+            "search_label string, qid string, rank long",
+        ),
+        "wd_entities": spark.createDataFrame(
+            [("Q1", "Springfield IL", "settlement", 39.90, -89.70),
+             ("Q2", "Springfield", "settlement", 39.80, -89.64),
+             ("Q3", "Boise", "settlement", 43.61, -116.20)],
+            "qid string, label string, kind string, lat double, lon double",
+        ),
+        "wd_admin": spark.createDataFrame([], "child_qid string, parent_qid string"),
+        "wd_population": spark.createDataFrame([], "qid string, population long, as_of string"),
+    }
+    got = {r["business_id"]: r["city_qid"] for r in link_locations(biz, snaps).collect()}
+    assert got == {"b1": "Q1", "b2": "Q3"}

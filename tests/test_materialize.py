@@ -68,6 +68,40 @@ def test_resume_after_kill_no_dupes_no_missing(spark, pages, tmp_path):
     assert got == _full_set(spark, pages)
 
 
+def test_write_without_aggregates_counts_rows(spark, tmp_path):
+    """``write_observed`` always observes the row count ``n``; a write with
+    no other aggregate writes every row and returns ``{"n": rows}``."""
+    from yckg_spark.materialize import write_triples
+
+    df = spark.createDataFrame(
+        [(f"s{i}", "p", "o", True, None, "d") for i in range(5)],
+        "subject string, predicate string, object string, is_literal boolean, "
+        "datatype string, source_domain string",
+    )
+    path = str(tmp_path / "t")
+    assert write_triples(df, path) == {"n": 5}
+    assert spark.read.parquet(path).count() == 5
+
+
+def test_commit_timing_covers_the_whole_commit(spark, pages, tmp_path, monkeypatch):
+    """A commit's ``seconds`` runs from the top of ``commit_bucket``, so the
+    parse and emission planning land in ``counts_s`` (``seconds - write_s``)."""
+    import time
+
+    import yckg_spark.materialize as M
+
+    real = M.parse_records
+
+    def slow_parse(*args, **kwargs):
+        time.sleep(0.2)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(M, "parse_records", slow_parse)
+    commit = M.commit_bucket(spark, pages, str(tmp_path / "kg"), 0, 1, use_extraction=False)
+    assert commit["counts_s"] >= 0.2
+    assert commit["seconds"] >= commit["write_s"]
+
+
 def test_manifest_metrics(spark, pages, tmp_path):
     out = str(tmp_path / "kg2")
     run_resumable(spark, pages, out, n_buckets=4, use_extraction=False)
@@ -449,10 +483,7 @@ def test_store_reads_without_manifest_start_no_spark_job(spark, pages, tmp_path)
     out, cdir, flat = (str(tmp_path / n) for n in ("kg", "kg_compact", "kg_flat"))
     run_resumable(spark, pages, out, n_buckets=2, use_extraction=False)
     n = compact_store(spark, out, cdir, n_buckets=2)["n_triples"]
-    write_triples(
-        read_triples(spark, cdir).drop("bucket"), os.path.join(flat, "triples"),
-        n=F.count(F.lit(1)),
-    )
+    write_triples(read_triples(spark, cdir).drop("bucket"), os.path.join(flat, "triples"))
     sc = spark.sparkContext
     try:
         sc.setJobGroup("no-manifest-reads", "reads of stores with no manifest")

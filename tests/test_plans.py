@@ -81,6 +81,29 @@ def test_no_cartesian_in_kg_build(spark, pages):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_emit_rows_shuffles_nothing(spark, pages):
+    """Every domain emits from its own input row; checkin counts its dates
+    per record, so the emission over all five domains has no Exchange."""
+    from yckg_spark.operators.emit import emit_rows
+
+    with _records(pages) as recs:
+        assert set(recs) == {"business", "user", "review", "tip", "checkin"}
+        plan = _plan(emit_rows(recs))
+    assert "Exchange" not in plan, plan
+
+
+def test_location_triples_is_one_projection(spark, pages, smoke_fixture_dir):
+    """The location cascade is one guarded array per business row, not a
+    union of per-pattern projections."""
+    from yckg_spark.operators.enrich_wikidata import location_triples
+    from yckg_spark.sources.snapshots import load_snapshots
+
+    snaps = load_snapshots(spark, smoke_fixture_dir)
+    with _records(pages) as recs:
+        plan = _plan(location_triples(recs["business"], snaps))
+    assert "Union" not in plan, plan
+
+
 def test_minhash_band_join_carries_no_sig_array(spark):
     """The banded self-join must flow (id, band, bh) only: the 32-element
     signature array must not appear in any exchange partitioned on the band

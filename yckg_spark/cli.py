@@ -240,7 +240,7 @@ def cmd_dedup(spark, args) -> dict:
             kept = dedup_keep_representatives(
                 docs, pairs, id_col=id_col, checkpoint_dir=args.checkpoint_dir
             )
-    n_out = write_observed(kept, args.output, n=F.count(F.lit(1)))["n"]
+    n_out = write_observed(kept, args.output)["n"]
     for df in persisted:
         df.unpersist()
     if args.checkpoint_dir is not None:
@@ -366,7 +366,7 @@ def cmd_curate(spark, args) -> dict:
         scrubbed = pii_scrub(cur, text_col=text_col, id_col=id_col)
         cur = scrubbed.drop(text_col).withColumnRenamed("text_scrubbed", text_col)
 
-    n_out = write_observed(cur, args.output, n=F.count(F.lit(1)))["n"]
+    n_out = write_observed(cur, args.output)["n"]
     for df in persisted:
         df.unpersist()
     n_in = spark.read.parquet(args.input).count()
@@ -399,7 +399,7 @@ def _write_packed(df, args, key: str, tokens_col: str | None = None, **aggs) -> 
         df = df.join(shards.drop("n_tokens") if tokens_col else shards, on=key)
     obs = write_observed(
         df, args.output, partition_by=["shard"] if packed else None,
-        n=F.count(F.lit(1)), max_shard=F.max(F.col("shard") if packed else F.lit(0)), **aggs,
+        max_shard=F.max(F.col("shard") if packed else F.lit(0)), **aggs,
     )
     obs["n_shards"] = obs["max_shard"] + 1 if packed and obs["n"] else None
     return obs
@@ -489,10 +489,7 @@ def cmd_link(spark, args) -> dict:
         "business_id", *(f"{lv}_qid" for lv in levels), "link_mask", "link_score"
     ).write.mode("overwrite").parquet(f"{args.output}/links")
 
-    n_triples = write_triples(
-        location_triples(biz, snaps, linked=linked), f"{args.output}/triples",
-        n=F.count(F.lit(1)),
-    )["n"]
+    n_triples = write_triples(location_triples(biz, snaps, linked=linked), f"{args.output}/triples")["n"]
     for df in persisted + [linked]:
         df.unpersist()
 
@@ -592,8 +589,8 @@ def cmd_discover_mappings(spark, args) -> dict:
     try:
         n = write_observed(
             grouped_mappings(m), args.output,
-            n=F.coalesce(F.sum(F.size("schema_types")), F.lit(0)),
-        )["n"]
+            mappings=F.coalesce(F.sum(F.size("schema_types")), F.lit(0)),
+        )["mappings"]
         out = {"mappings": n, "output": args.output}
         if args.ground_truth:
             row = evaluate_mappings(m, spark.read.parquet(args.ground_truth)).first()

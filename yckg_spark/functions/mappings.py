@@ -205,7 +205,8 @@ EMISSIONS: tuple[Emission, ...] = (
     Emission("tip", "text", *PREDICATE_MAP["text"]),
     Emission("tip", "date", *PREDICATE_MAP["date"]),
     Emission("tip", "compliment_count", YELPVOC + "compliment_count", XSD_INTEGER),
-    # checkin (:198-250): one row per (business, date) with its count ``n``
+    # checkin (:198-250): one row per distinct date of a record, with its
+    # count ``n`` in that record (emit.py's run-length step)
     Emission("checkin", "business_id", SCHEMA + "object", None, prefix=IRI_ROOTS["checkin"]),
     Emission("checkin", None, RDF_TYPE, None, prefix=TYPE_MAP["checkin"]),
     Emission("checkin", "d", SCHEMA + "startTime", XSD_DATETIME),

@@ -65,14 +65,15 @@ def write_observed(
     df: DataFrame, path: str, *, partition_by: list[str] | None = None, **aggs: Column
 ) -> dict:
     """Overwrite ``df`` as parquet at ``path``, partitioned by the columns
-    ``partition_by``, and return ``aggs`` (name → aggregate Column) as
-    computed over the rows written.
+    ``partition_by``, and return the row count ``n`` and ``aggs`` (name →
+    aggregate Column) as computed over the rows written.
 
     The aggregates ride the write job as an Observation (a CollectMetrics
     node), so the written output is never re-read to count it.
     """
     obs = Observation()
-    writer = df.observe(obs, *[c.alias(n) for n, c in aggs.items()]).write.mode("overwrite")
+    cols = [F.count(F.lit(1)).alias("n"), *(c.alias(k) for k, c in aggs.items())]
+    writer = df.observe(obs, *cols).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -140,6 +141,7 @@ def commit_bucket(
     """
     from yckg_spark.fsutil import write_text
 
+    t0 = time.time()
     # Commit metrics ride the write jobs as Observations (CollectMetrics
     # nodes) instead of re-reading the written partitions afterwards.
     # obs_pages sits on the raw pages (pre lang-filter, the page count the
@@ -155,16 +157,12 @@ def commit_bucket(
         persisted.append(rows)
         triples, errors = split_rows(rows)
 
-        t0 = time.time()
+        t1 = time.time()
         n_triples = write_triples(
-            dedup_triples(triples),
-            os.path.join(out_dir, "triples", f"bucket={bucket}"),
-            n=F.count(F.lit(1)),
+            dedup_triples(triples), os.path.join(out_dir, "triples", f"bucket={bucket}")
         )["n"]
-        n_errors = write_observed(
-            errors, os.path.join(out_dir, "errors", f"bucket={bucket}"), n=F.count(F.lit(1))
-        )["n"]
-        t_write = time.time() - t0
+        n_errors = write_observed(errors, os.path.join(out_dir, "errors", f"bucket={bucket}"))["n"]
+        t_write = time.time() - t1
         n_pages = obs_pages.get["n"]
         elapsed = time.time() - t0
 
@@ -349,7 +347,7 @@ def compact_store(
     deduped = dedup_triples(triples.drop(*extra).repartition(n_buckets, "subject"))
     out = deduped.withColumn("bucket", F.pmod(F.hash("subject"), F.lit(n_buckets)))
     tdir = os.path.join(out_dir, "triples")
-    n = write_triples(out, tdir, partition_by=["bucket"], n=F.count(F.lit(1)))["n"]
+    n = write_triples(out, tdir, partition_by=["bucket"])["n"]
     return {"n_triples": n, "out": tdir, "n_buckets": n_buckets}
 
 

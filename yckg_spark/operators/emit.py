@@ -9,7 +9,8 @@ a ``transform`` over its split value, and the business categories,
 attributes and hours families a ``transform`` over their split value or
 map, after a pre-projection that computes what the family reads more than
 once — and one ``inline`` explodes it: one projection and one pass per
-domain. Checkin first counts its (business, date) pairs with a ``groupBy``.
+domain. Checkin first counts each record's dates with a narrow run-length
+step, as the reference's Counter per line (:215-225).
 
 Every candidate is a triple or an error row. A value its field's sentinel
 rule rejects becomes a row with a non-null ``kind`` that carries the raw
@@ -66,7 +67,7 @@ def _lit(x: Column | str | None) -> Column:
     return x if isinstance(x, Column) else F.lit(x).cast("string")
 
 
-def _row(subject, predicate, obj, datatype=None, *, literal=True, kind=None) -> Column:
+def row(subject, predicate, obj, datatype=None, *, literal=True, kind=None) -> Column:
     """One candidate row; ``kind`` non-null makes it an error row."""
     return F.struct(
         _lit(subject).alias("subject"),
@@ -97,14 +98,14 @@ def _field_entries(e: Emission, subject: Column) -> tuple[list[Column], Column]:
     pre-projection; the candidate rows read it as the column ``subject``."""
     s = F.col("subject")
     if e.field is None:
-        return [], F.array(_row(s, e.predicate, e.prefix, literal=False))
+        return [], F.array(row(s, e.predicate, e.prefix, literal=False))
     value = F.expr(e.field).cast("string")
 
     def triple(item: Column) -> Column:
         if e.datatype == XSD_DATETIME:
             item = normalize_datetime(item)
         obj = F.concat(F.lit(e.prefix), item) if e.prefix else item
-        return _row(s, e.predicate, obj, _datatype(e, value), literal=e.datatype is not None)
+        return row(s, e.predicate, obj, _datatype(e, value), literal=e.datatype is not None)
 
     pre: list[Column] = []
     family = _FAMILIES.get((e.domain, e.field))
@@ -116,7 +117,7 @@ def _field_entries(e: Emission, subject: Column) -> tuple[list[Column], Column]:
         out = F.array(triple(value))
     if e.rule is None:
         return pre, out
-    error = _row(s, e.field, value, literal=False, kind=e.kind)
+    error = row(s, e.field, value, literal=False, kind=e.kind)
     return pre, F.when(_rejected(e.rule, value), F.array(error)).otherwise(out)
 
 
@@ -131,8 +132,8 @@ def _categories(e: Emission, subject: Column) -> tuple[list[Column], Column]:
     def pair(c: Column) -> Column:
         cat = F.concat(F.lit(e.prefix), sanitize_iri(c))
         return F.array(
-            _row(F.col("subject"), e.predicate, cat, literal=False),
-            _row(cat, RDF_TYPE, TYPE_MAP["category"], literal=False),
+            row(F.col("subject"), e.predicate, cat, literal=False),
+            row(cat, RDF_TYPE, TYPE_MAP["category"], literal=False),
         )
 
     return [], F.flatten(F.transform(F.split(F.col(e.field), e.split), pair))
@@ -163,23 +164,23 @@ def _attributes(e: Emission, subject: Column) -> tuple[list[Column], Column]:
     def entries(a: Column) -> Column:
         key, value, bnode = a["key"], a["value"], a["bnode"]
         head = F.array(
-            _row(s, F.concat(F.lit(YELPVOC + "has"), key), bnode, literal=False),
-            _row(bnode, RDF_TYPE, type_of[key], literal=False),
+            row(s, F.concat(F.lit(YELPVOC + "has"), key), bnode, literal=False),
+            row(bnode, RDF_TYPE, type_of[key], literal=False),
         )
         sub = F.transform(
             F.map_entries(a["parsed"]),
             # JSON null sub-value → rdflib Literal(None), lexical form "None"
-            lambda kv: _row(
+            lambda kv: row(
                 bnode, F.concat(F.lit(YELPVOC + "has"), kv["key"]),
                 F.coalesce(kv["value"], F.lit("None")), json_value_datatype(kv["value"]),
             ),
         )
         return (
             F.when(_rejected(SENTINEL, value),
-                   F.array(_row(s, key, value, literal=False, kind=e.kind)))
+                   F.array(row(s, key, value, literal=False, kind=e.kind)))
             .when(~key.isin(*NESTED_ATTRIBUTE_KEYS),
-                  F.array(_row(s, F.concat(F.lit(e.predicate), key), value, _datatype(e, value))))
-            .when(a["parsed"].isNull(), F.array(_row(s, key, None, literal=False, kind="error")))
+                  F.array(row(s, F.concat(F.lit(e.predicate), key), value, _datatype(e, value))))
+            .when(a["parsed"].isNull(), F.array(row(s, key, None, literal=False, kind="error")))
             .otherwise(F.concat(head, sub))
         )
 
@@ -192,12 +193,12 @@ def _hours(e: Emission, subject: Column) -> tuple[list[Column], Column]:
     # blank node typed OpeningHoursSpecification, plain per-day literals
     bnode = F.col("__hours_bnode")
     head = F.array(
-        _row(F.col("subject"), e.predicate, bnode, literal=False),
-        _row(bnode, RDF_TYPE, TYPE_MAP["hours"], literal=False),
+        row(F.col("subject"), e.predicate, bnode, literal=False),
+        row(bnode, RDF_TYPE, TYPE_MAP["hours"], literal=False),
     )
     days = F.transform(
         F.map_entries(F.col(e.field)),
-        lambda kv: _row(bnode, F.concat(F.lit(YELPVOC + "has"), kv["key"]), kv["value"]),
+        lambda kv: row(bnode, F.concat(F.lit(YELPVOC + "has"), kv["key"]), kv["value"]),
     )
     pre = F.when(F.col(e.field).isNotNull(), skolem_iri(subject, e.field)).alias("__hours_bnode")
     return [pre], F.concat(head, days)
@@ -219,24 +220,38 @@ def _subject(domain: str) -> Column:
     return F.concat(F.lit(IRI_ROOTS[domain]), F.col(f"{domain}_id"))
 
 
-def _render(domain: str) -> tuple:
-    """The domain's ``(checkin count stage or None, pre-projection, emission)``."""
+def _checkin_runs() -> list[list[Column]]:
+    """Counter(dates) per record (:215-225) as three projections: the sorted
+    normalized dates, the index where each run of equal dates starts, one
+    ``(business_id, d, n)`` row per run. The first two are columns so the
+    lambdas do not recompute them per element."""
+    bid, dates, starts = F.col("business_id"), F.col("__dates"), F.col("__starts")
+    first = lambda i: (i == 0) | (F.get(dates, i) != F.get(dates, i - 1))  # noqa: E731
+    run = lambda s, k: F.struct(  # noqa: E731
+        F.get(dates, s).alias("d"), (F.coalesce(F.get(starts, k + 1), F.size(dates)) - s).alias("n")
+    )
+    sort = F.array_sort(F.transform(F.split(F.col("date"), ", "), normalize_datetime))
+    return [
+        [bid, F.when(F.col("date") != "", sort).alias("__dates")],
+        # an empty or null list gives no rows: sequence(0, -1) counts down
+        [bid, dates, F.when(F.size(dates) > 0, F.filter(F.sequence(F.lit(0), F.size(dates) - 1), first))
+         .alias("__starts")],
+        [bid, F.inline(F.transform(starts, run))],
+    ]
+
+
+def _render(domain: str) -> list[list[Column]]:
+    """The domain's projections, in order: the checkin run-length step, the
+    pre-projection, the emission."""
     subject = _subject(domain)
     fields = [_field_entries(e, subject) for e in EMISSIONS if e.domain == domain]
-    count = None
-    if domain == "checkin":
-        # Counter(dates) per row ≡ a count per (business, date): a business
-        # has exactly one checkin line (:215-225)
-        days = F.explode(F.when(F.col("date") != "", F.split(F.col("date"), ", ")))
-        count = ([F.col("business_id"), days.alias("d")],
-                 [F.col("business_id"), normalize_datetime(F.col("d")).alias("d")],
-                 F.count(F.lit(1)).alias("n"))
     pre = [F.col("*"), subject.alias("subject"), *(c for cols, _ in fields for c in cols)]
     entries = F.concat(*(out for _, out in fields))
-    return count, pre, [F.inline(entries), F.lit(domain).alias("source_domain")]
+    runs = _checkin_runs() if domain == "checkin" else []
+    return [*runs, pre, [F.inline(entries), F.lit(domain).alias("source_domain")]]
 
 
-# domain → (SparkContext, *_render(domain)). Building the Columns costs
+# domain → (SparkContext, _render(domain)). Building the Columns costs
 # about 20k py4j round trips; the Columns are immutable and bound only to
 # the JVM, so one set serves every commit while that SparkContext lives.
 _plans: dict[str, tuple] = {}
@@ -250,11 +265,10 @@ def emit_rows(records: dict[str, DataFrame]) -> DataFrame:
     frames = []
     for domain, df in records.items():
         if _plans.get(domain, (None,))[0] is not sc:
-            _plans[domain] = (sc, *_render(domain))
-        _, count, pre, out = _plans[domain]
-        if count is not None:
-            df = df.select(*count[0]).groupBy(*count[1]).agg(count[2])
-        frames.append(df.select(*pre).select(*out))
+            _plans[domain] = (sc, _render(domain))
+        for cols in _plans[domain][1]:
+            df = df.select(*cols)
+        frames.append(df)
     return reduce(DataFrame.union, frames)
 
 

@@ -40,6 +40,7 @@ from yckg_spark.namespaces import (
     XSD_STRING,
     YELPENT,
 )
+from yckg_spark.operators.emit import row
 
 # state-code → full name, mirroring the reference's dict semantics including
 # its quirks ('NA' → National, 'XMS' → Missouri, Canadian 'AB' → Alberta;
@@ -102,20 +103,20 @@ def link_locations(biz: DataFrame, snaps: dict[str, DataFrame]) -> DataFrame:
     )
 
     # --- city candidates: search "City, State", retry city-only (:15-43) ---
-    search = F.concat_ws(", ", F.col("city_n"), F.col("state_name"))
-    cand1 = centroids.join(
-        F.broadcast(wd_labels),
-        search == wd_labels["search_label"],
-        "left",
-    ).select("city_n", "state_name", "clat", "clon", "qid", "rank")
-    missing = cand1.filter(F.col("qid").isNull()).drop("qid", "rank").distinct()
-    cand2 = missing.join(
-        F.broadcast(wd_labels),
-        missing["city_n"] == wd_labels["search_label"],
-        "left",
-    ).select("city_n", "state_name", "clat", "clon", "qid", "rank")
-    candidates = cand1.filter(F.col("qid").isNotNull()).unionByName(
-        cand2.filter(F.col("qid").isNotNull())
+    # both searches in one join; a key keeps the hits of the first search
+    # that found any
+    searches = F.inline(F.array(
+        F.struct(F.lit(0).alias("attempt"), F.concat_ws(", ", "city_n", "state_name").alias("search")),
+        F.struct(F.lit(1).alias("attempt"), F.col("city_n").alias("search")),
+    ))
+    hits = centroids.select("*", searches).join(
+        F.broadcast(wd_labels), F.col("search") == wd_labels["search_label"]
+    )
+    w_key = Window.partitionBy("city_n", "state_name")
+    candidates = (
+        hits.withColumn("first", F.min("attempt").over(w_key))
+        .filter(F.col("attempt") == F.col("first"))
+        .select("city_n", "state_name", "clat", "clon", "qid", "rank")
     )
 
     # nearest human settlement within 100 km (:75-92): type filter + around
@@ -219,9 +220,12 @@ def location_triples(
     snaps: dict[str, DataFrame],
     linked: DataFrame | None = None,
 ) -> DataFrame:
-    """The conditional location cascade (create_locations_nt :400-455) as a
-    union of guarded projections, deduplicated (the reference accumulates one
-    rdflib Graph — set semantics — for the whole run).
+    """The conditional location cascade (create_locations_nt :400-455) as one
+    projection: each business row builds an array of its guarded triples
+    (``F.when(guard, row)``, null when the guard fails), the nulls are
+    dropped and one ``inline`` explodes the rest. Deduplicated, as the
+    reference accumulates one rdflib Graph — set semantics — for the whole
+    run.
 
     ``linked``: optionally a precomputed ``link_locations(biz, snaps)``
     frame — callers that also aggregate link-score metrics from it persist
@@ -234,57 +238,40 @@ def location_triples(
     has_county = F.col("county_qid").isNotNull()
     has_country = F.col("country_qid").isNotNull()
 
-    def sel(cond, subject, predicate, obj, *, lit=False, dtype=None):
-        return linked.filter(cond).select(
-            subject.alias("subject"),
-            F.lit(predicate).alias("predicate"),
-            obj.cast("string").alias("object"),
-            F.lit(lit).alias("is_literal"),
-            (F.lit(dtype) if dtype else F.lit(None)).cast("string").alias("datatype"),
-        )
-
     wd_ = lambda c: F.concat(F.lit(WD), F.col(c))  # noqa: E731
     biz_iri = F.concat(F.lit(YELPENT + "business_id/"), F.col("business_id"))
 
     def add_to_graph(cond, lower, higher, instance_qid):
         """add_to_graph(row, lower, higher, instance) — :350-383."""
         return [
-            sel(cond, wd_(f"{lower}_qid"), LOCATION_PREDICATE, wd_(f"{higher}_qid")),
-            sel(cond, wd_(f"{higher}_qid"), RDFS_LABEL, F.col(f"{higher}_label"), lit=True, dtype=XSD_STRING),
-            sel(cond, wd_(f"{higher}_qid"), INSTANCE_OF_PREDICATE, F.lit(WD + instance_qid)),
+            F.when(cond, row(wd_(f"{lower}_qid"), LOCATION_PREDICATE, wd_(f"{higher}_qid"), literal=False)),
+            F.when(cond, row(wd_(f"{higher}_qid"), RDFS_LABEL, F.col(f"{higher}_label"), XSD_STRING)),
+            F.when(cond, row(wd_(f"{higher}_qid"), INSTANCE_OF_PREDICATE, WD + instance_qid, literal=False)),
         ]
 
-    parts: list[DataFrame] = []
     # city base triples (:402-419)
-    parts += [
-        sel(has_city, biz_iri, SCHEMA + "location", wd_("city_qid")),
-        sel(has_city, wd_("city_qid"), RDFS_LABEL, F.col("city_label"), lit=True, dtype=XSD_STRING),
-        sel(has_city, wd_("city_qid"), INSTANCE_OF_PREDICATE, F.lit(WD + Q_HUMAN_SETTLEMENT)),
+    guarded = [
+        F.when(has_city, row(biz_iri, SCHEMA + "location", wd_("city_qid"), literal=False)),
+        F.when(has_city, row(wd_("city_qid"), RDFS_LABEL, F.col("city_label"), XSD_STRING)),
+        F.when(has_city, row(wd_("city_qid"), INSTANCE_OF_PREDICATE, WD + Q_HUMAN_SETTLEMENT, literal=False)),
         # population guard is truthiness (:421) — 0 would be skipped too
-        sel(
-            has_city & F.col("population").isNotNull() & (F.col("population") != 0),
-            wd_("city_qid"),
-            POPULATION_PREDICATE,
-            F.col("population"),
-            lit=True,
-            dtype=XSD_INTEGER,
-        ),
+        F.when(has_city & F.col("population").isNotNull() & (F.col("population") != 0),
+               row(wd_("city_qid"), POPULATION_PREDICATE, F.col("population"), XSD_INTEGER)),
     ]
     # nested cascade (:428-441)
-    parts += add_to_graph(has_city & has_county, "city", "county", Q_COUNTY)
-    parts += add_to_graph(has_city & has_county & has_state, "county", "state", Q_STATE)
-    parts += add_to_graph(has_city & ~has_county & has_state, "city", "state", Q_STATE)
-    parts += add_to_graph(has_city & has_county & ~has_state & has_country, "county", "country", Q_COUNTRY)
-    parts += add_to_graph(has_city & ~has_county & ~has_state & has_country, "city", "country", Q_COUNTRY)
+    guarded += add_to_graph(has_city & has_county, "city", "county", Q_COUNTY)
+    guarded += add_to_graph(has_city & has_county & has_state, "county", "state", Q_STATE)
+    guarded += add_to_graph(has_city & ~has_county & has_state, "city", "state", Q_STATE)
+    guarded += add_to_graph(has_city & has_county & ~has_state & has_country, "county", "country", Q_COUNTRY)
+    guarded += add_to_graph(has_city & ~has_county & ~has_state & has_country, "city", "country", Q_COUNTRY)
     # state→country fires from every path that has both (:432-439,:453-454)
-    parts += add_to_graph(has_state & has_country, "state", "country", Q_COUNTRY)
+    guarded += add_to_graph(has_state & has_country, "state", "country", Q_COUNTRY)
     # state-only fallback (:442-452) — note: no instance-of triple here
-    parts += [
-        sel(~has_city & has_state, biz_iri, SCHEMA + "location", wd_("state_qid")),
-        sel(~has_city & has_state, wd_("state_qid"), RDFS_LABEL, F.col("state_label"), lit=True, dtype=XSD_STRING),
+    guarded += [
+        F.when(~has_city & has_state, row(biz_iri, SCHEMA + "location", wd_("state_qid"), literal=False)),
+        F.when(~has_city & has_state, row(wd_("state_qid"), RDFS_LABEL, F.col("state_label"), XSD_STRING)),
     ]
 
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.distinct().withColumn("source_domain", F.lit("wikidata_locations"))
+    rows = F.array_compact(F.array(*guarded))
+    out = linked.select(F.inline(rows)).drop("kind").distinct()
+    return out.withColumn("source_domain", F.lit("wikidata_locations"))
